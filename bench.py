@@ -324,9 +324,9 @@ def _load_paired_baseline(ref: str):
     is what makes one-process interleaving possible: all intra-package
     imports are relative, so the renamed copy resolves ITS OWN modules —
     including function-level lazy imports — never the current tree's, and
-    both module graphs coexist. Its session prep ships the renamed dir to
-    executors via its own addPyFile, so UDF closures unpickle against the
-    right code."""
+    both module graphs coexist. The returned ``ship_baseline`` ships the
+    renamed dir to executors, so UDF closures unpickle against the right
+    code."""
     import shutil
     import subprocess
     import tempfile
@@ -346,30 +346,24 @@ def _load_paired_baseline(ref: str):
     base_mod = __import__(alias)
     base_queries = dict(base_mod.QUERIES)
 
-    def ship_both(spark) -> None:
-        """Ship BOTH package zips to executor python workers, explicitly.
+    def ship_baseline(spark) -> None:
+        """Ship the baseline package zip to executor python workers.
 
-        Two traps make the packages' own prep() insufficient here: (a)
-        the versions share the `_spark_graft_shipped` session flag, so
-        whichever prep runs first suppresses the other side's addPyFile;
-        (b) the baseline's `_ship_package` keys its zip path by FILE
-        CONTENT digest only — a zip left by a real run of that version
-        already exists at that path containing the ORIGINAL directory
-        name, so the aliased package never lands in it. Executors then
-        fail ModuleNotFoundError on the first module-referenced UDF
-        (inline-pickled UDFs mask it). So the baseline zip is built here
-        under its own name, and the current package ships through its
-        normal path with the flag reset."""
-        import importlib
-        import tempfile
-
+        Each package keeps its own session ledger (the ledger's session
+        attribute is derived from the package name), so the current
+        package's prep() ships its own zip as usual. The baseline cannot:
+        its `_ship_package` keys the zip path by FILE CONTENT digest only,
+        and a zip left by a real run of that version may already exist at
+        that path holding the ORIGINAL directory name; then the aliased
+        package never lands in it and executors fail ModuleNotFoundError
+        on the first module-referenced UDF (inline-pickled UDFs mask it).
+        So the baseline zip is built here under its own name, and the
+        baseline's own shipping is switched off."""
         zip_base = os.path.join(tempfile.gettempdir(), f"paired_{os.path.basename(wt)}")
         if not os.path.exists(zip_base + ".zip"):
             shutil.make_archive(zip_base, "zip", root_dir=wt, base_dir=alias)
         spark.sparkContext.addPyFile(zip_base + ".zip")
-        cur_session = importlib.import_module("url_counter_mapreduce_spark.session")
-        spark._spark_graft_shipped = False
-        cur_session._ship_package(spark)
+        base_mod.session._ship_package = lambda _spark: None
 
     def cleanup() -> None:
         sys.path.remove(wt)
@@ -380,7 +374,7 @@ def _load_paired_baseline(ref: str):
         )
         shutil.rmtree(wt, ignore_errors=True)
 
-    return base_queries, ship_both, cleanup
+    return base_queries, ship_baseline, cleanup
 
 
 def _paired_main(ref: str, only: list[str] | None = None) -> None:
@@ -392,13 +386,13 @@ def _paired_main(ref: str, only: list[str] | None = None) -> None:
     any host-noise window hits both sides equally and the per-query ratio
     is a genuine code-delta signal. BENCH_FULL's regressions block is then
     computed from paired ratios ONLY (no cross-round file comparison)."""
-    base_queries, ship_both, cleanup = _load_paired_baseline(ref)
+    base_queries, ship_baseline, cleanup = _load_paired_baseline(ref)
     try:
         from url_counter_mapreduce_spark import get_spark
 
         spark = get_spark("spark-graft-bench-paired")
         spark.sparkContext.setLogLevel("ERROR")
-        ship_both(spark)
+        ship_baseline(spark)
         QUERIES["url_topk"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
         names = [n for n in BENCH_QUERIES if n in QUERIES] + STREAM_QUERIES

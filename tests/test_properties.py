@@ -8,7 +8,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from url_counter_mapreduce_spark import QUERIES
+from url_counter_mapreduce_spark import QUERIES, clear_caches
 from url_counter_mapreduce_spark.functions.vector import cosine_expr
 from url_counter_mapreduce_spark.operators import dedup
 from url_counter_mapreduce_spark.tables import load_table
@@ -1409,15 +1409,15 @@ def test_substring_spans_find_planted_passage(spark, monkeypatch):
     import url_counter_mapreduce_spark.operators.dedup as dd
 
     monkeypatch.setattr(dd, "load_table", lambda _s, _d, _n: docs)
-    # the window table is session-cached per (app, sf_dir): use a unique
-    # sf_dir token and drop it after, so the monkeypatched fixture can
-    # never collide with another test's corpus under the same key
-    dd.clear_wins_cache()
+    # the window table is session-cached per sf_dir: use a unique sf_dir
+    # token and drop it after, so the monkeypatched fixture can never
+    # collide with another test's corpus under the same key
+    clear_caches(spark)
     spans = {
         r["doc_id"]: (r["span_start"], r["span_end"], r["n_windows"])
         for r in dedup_substring_spans(spark, "x-spans-fixture").collect()
     }
-    dd.clear_wins_cache()
+    clear_caches(spark)
     # doc 1: passage at token 0..9 → windows at pos 0..2 (10-8=2), span 0..9
     assert spans[1] == (0, 9, 10 - SUBSTR_NGRAM + 1)
     # doc 2: passage at token 4..13 → windows at pos 4..6, span 4..13
@@ -1445,12 +1445,12 @@ def test_substring_clean_removes_nonowner_passage(spark, monkeypatch):
     import url_counter_mapreduce_spark.operators.dedup as dd
 
     monkeypatch.setattr(dd, "load_table", lambda _s, _d, _n: docs)
-    dd.clear_wins_cache()  # see spans test: unique key + explicit drop
+    clear_caches(spark)  # see spans test: unique key + explicit drop
     out = {
         r["doc_id"]: r.asDict()
         for r in dedup_substring_clean(spark, "x-clean-fixture").collect()
     }
-    dd.clear_wins_cache()
+    clear_caches(spark)
     md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
     assert out[1]["n_tokens_removed"] == 0 and out[1]["clean_fingerprint"] == md5(a)
     assert out[2]["n_tokens_removed"] == 10
@@ -2782,12 +2782,9 @@ def test_containment_catches_doc_inside_doc(spark, tmp_path):
     out = str(tmp_path / "contain_fixture")
     docs.write.parquet(f"{out}/documents.parquet")
     try:
-        from url_counter_mapreduce_spark.operators.dedup import (
-            clear_signature_cache,
-            dedup_containment_pairs,
-        )
+        from url_counter_mapreduce_spark.operators.dedup import dedup_containment_pairs
 
-        clear_signature_cache()  # fixture dir must not hit a cached corpus
+        clear_caches(spark)  # fixture dir must not hit a cached corpus
         got = {
             (r.doc_src, r.doc_dst): (r.containment, r.jaccard)
             for r in dedup_containment_pairs(spark, out).collect()
@@ -2798,7 +2795,7 @@ def test_containment_catches_doc_inside_doc(spark, tmp_path):
         assert (1, 2) not in got  # container is NOT contained in the quote
         assert not any(3 in p for p in got)
     finally:
-        clear_signature_cache()
+        clear_caches(spark)
         shutil.rmtree(out, ignore_errors=True)
 
 

@@ -1,13 +1,12 @@
-"""Unit tests for the shared SessionFrameCache (the one LRU implementation
-behind _SIG_CACHE / _PAIRS_CACHE / _WINS_CACHE / _CHUNK_CACHE / _SCC_CACHE /
-_IVF_INDEX — round 9 flagged five hand-rolled copies as drift risk).
+"""The per-session artifact cache: a ledger family is a bounded LRU of
+persisted frames (url_counter_mapreduce_spark/ledger.py).
 
-Pure-Python fakes stand in for DataFrames: the cache only needs
+Pure-Python fakes stand in for DataFrames: a family only needs
 persist/count/unpersist, so these tests run without a SparkSession."""
 
 import pytest
 
-from url_counter_mapreduce_spark.session_cache import SessionFrameCache
+from url_counter_mapreduce_spark.ledger import Family, Ledger
 
 
 class FakeFrame:
@@ -34,7 +33,7 @@ class FakeFrame:
 
 
 def test_build_once_then_hit():
-    cache = SessionFrameCache("t", max_entries=2)
+    cache = Ledger().family("t", max_entries=2)
     builds = []
 
     def build():
@@ -42,8 +41,8 @@ def test_build_once_then_hit():
         builds.append(f)
         return f
 
-    f1 = cache.get_or_build(("app1", "sf"), build)
-    f2 = cache.get_or_build(("app1", "sf"), build)
+    f1 = cache.get_or_build("sf", build)
+    f2 = cache.get_or_build("sf", build)
     assert f1 is f2
     assert len(builds) == 1
     assert f1.persisted and f1.counted == 1  # materialized exactly once
@@ -53,35 +52,38 @@ def test_lru_eviction_unpersists_least_recently_used():
     """The round-9 minhash-regression mechanism: FIFO would evict the hot
     full-corpus entry because it was built first; LRU must evict the
     least recently USED instead."""
-    cache = SessionFrameCache("t", max_entries=2)
+    cache = Ledger().family("t", max_entries=2)
     a = cache.get_or_build("a", lambda: FakeFrame("a"))
-    cache.get_or_build("b", lambda: FakeFrame("b"))
+    b = cache.get_or_build("b", lambda: FakeFrame("b"))
     # touch "a" — now "b" is the LRU entry
     assert cache.get_or_build("a", lambda: FakeFrame("a2")) is a
     cache.get_or_build("c", lambda: FakeFrame("c"))
     assert "a" in cache and "c" in cache and "b" not in cache
-    assert not a.unpersisted
+    assert b.unpersisted and not a.unpersisted
     assert len(cache) == 2
 
 
 def test_eviction_swallows_stopped_session_unpersist():
-    """Session replacement: entries keyed by a stopped session's appId
-    raise on unpersist; eviction must swallow that and keep going."""
-    cache = SessionFrameCache("t", max_entries=1)
+    """An entry built through a session that has since stopped raises on
+    unpersist; eviction must swallow that and keep going."""
+    cache = Ledger().family("t", max_entries=1)
     dead = FakeFrame("old-session", alive=False)
-    cache.get_or_build(("app-old", "sf"), lambda: dead)
-    fresh = cache.get_or_build(("app-new", "sf"), lambda: FakeFrame("new"))
-    assert ("app-new", "sf") in cache and ("app-old", "sf") not in cache
+    cache.get_or_build("sf-old", lambda: dead)
+    fresh = cache.get_or_build("sf-new", lambda: FakeFrame("new"))
+    assert "sf-new" in cache and "sf-old" not in cache
     assert fresh.persisted
-    # clear() on a dead entry is equally safe
+    # clearing a dead entry is equally safe
+    cache.get_or_build("sf-old", lambda: FakeFrame("dead-again", alive=False))
     cache.clear()
     assert len(cache) == 0
 
 
 def test_get_put_with_custom_evict_fn():
-    """The IVF shape: tuple entries, only the last element unpersists."""
+    """The IVF shape: tuple entries, only the last element is released."""
     released = []
-    cache = SessionFrameCache("ivf", max_entries=1, evict_fn=lambda e: released.append(e[-1]))
+    led = Ledger()
+    cache = led.family("ivf", max_entries=1, release=lambda e: released.append(e[-1]))
+    assert led.family("ivf") is cache  # one family per name per ledger
     cache.put("k1", ("cents1", FakeFrame("df1")))
     assert cache.get("k1")[0] == "cents1"
     cache.put("k2", ("cents2", FakeFrame("df2")))
@@ -94,18 +96,23 @@ def test_get_put_with_custom_evict_fn():
 
 
 def test_put_refreshes_recency_and_clear_releases_all():
-    cache = SessionFrameCache("t", max_entries=3)
+    led = Ledger()
+    cache = led.family("t", max_entries=3)
+    other = led.family("u")
     frames = {k: FakeFrame(k) for k in "abc"}
     for k, f in frames.items():
         cache.put(k, f.persist())
+    other.put("x", FakeFrame("x"))
     assert cache.keys() == ["a", "b", "c"]
     cache.get("a")
     assert cache.keys() == ["b", "c", "a"]  # recency order, oldest first
-    cache.clear()
-    assert len(cache) == 0
+    led.clear()  # every family of the ledger
+    assert len(cache) == 0 and len(other) == 0
     assert all(f.unpersisted for f in frames.values())
 
 
 def test_max_entries_validated():
     with pytest.raises(ValueError):
-        SessionFrameCache("t", max_entries=0)
+        Family(max_entries=0)
+    with pytest.raises(ValueError):
+        Ledger().family("t", max_entries=0)

@@ -61,7 +61,7 @@ def test_resolve_cap_memoizes_by_cache_key(spark):
     (deliberately poisoned) sizes frame."""
     from url_counter_mapreduce_spark.operators import skew_guard
 
-    skew_guard.clear_decision_cache()
+    skew_guard.clear_decision_cache(spark)
     key = ("test-app", "memo-probe")
     df = _sizes(spark, [200])  # pathological → engages
     assert resolve_cap("auto", df, "n", 8, name="t", cache_key=key) == 8
@@ -74,7 +74,7 @@ def test_resolve_cap_memoizes_by_cache_key(spark):
         resolve_cap("auto", healthy, "n", 8, name="t", cache_key=("test-app", "k2"))
         is None
     )
-    skew_guard.clear_decision_cache()
+    skew_guard.clear_decision_cache(spark)
 
 
 def test_resolve_cap_cache_hit_still_records_decision(spark):
@@ -84,7 +84,7 @@ def test_resolve_cap_cache_hit_still_records_decision(spark):
     oracle diff on the second query as a plain MISMATCH."""
     from url_counter_mapreduce_spark.operators import skew_guard
 
-    skew_guard.clear_decision_cache()
+    skew_guard.clear_decision_cache(spark)
     key = ("test-app", "hit-logs")
     df = _sizes(spark, [200])  # pathological → engages
     assert resolve_cap("auto", df, "n", 8, name="t", cache_key=key) == 8
@@ -98,7 +98,7 @@ def test_resolve_cap_cache_hit_still_records_decision(spark):
     assert second[0]["engaged"] and second[0]["cap"] == 8
     # the cached entry carries the original measured numbers
     assert second[0]["pairs"] == 200 * 199 // 2 and second[0]["rows"] == 200
-    skew_guard.clear_decision_cache()
+    skew_guard.clear_decision_cache(spark)
 
 
 def test_resolve_cap_records_decisions_with_policy(spark):
@@ -107,7 +107,7 @@ def test_resolve_cap_records_decisions_with_policy(spark):
     that makes an engaged-cap oracle diff attributable (ADVICE r10)."""
     from url_counter_mapreduce_spark.operators import skew_guard
 
-    skew_guard.clear_decision_cache()
+    skew_guard.clear_decision_cache(spark)
     resolve_cap("auto", _sizes(spark, [200]), "n", 8, name="hot", policy="drop-bucket")
     resolve_cap("auto", _sizes(spark, [2] * 10), "n", 8, name="cold")
     got = skew_guard.pop_decisions()
@@ -225,7 +225,7 @@ def test_er_auto_engages_on_hotspot_catalog(spark):
         " p_size int, p_retailprice double",
     ).write.mode("overwrite").parquet(os.path.join(d, "part.parquet"))
 
-    skew_guard.clear_decision_cache()
+    skew_guard.clear_decision_cache(spark)
     auto = {(r.doc_a, r.doc_b) for r in er_match_edges(spark, d, block_cap="auto").collect()}
     decisions = skew_guard.pop_decisions()
     assert [x["engaged"] for x in decisions] == [True]
@@ -245,7 +245,7 @@ def test_er_auto_engages_on_hotspot_catalog(spark):
     off = {(r.doc_a, r.doc_b) for r in er_match_edges(spark, d, block_cap=None).collect()}
     assert auto < off and len(off) == n_hot * (n_hot - 1) // 2
     assert all(a < n_hot and b < n_hot for a, b in off)
-    skew_guard.clear_decision_cache()
+    skew_guard.clear_decision_cache(spark)
 
 
 def test_er_auto_optin_equals_uncapped_on_small_fixture(spark, sf_dir):

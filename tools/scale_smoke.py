@@ -52,7 +52,7 @@ def _semantic_scaledcells(spark, d):
     return semantic_dedup_frame(
         emb,
         n_cells=SEMDEDUP_CELLS * factor,
-        cache_key=(spark.sparkContext.applicationId, d, "semdedup-scaled"),
+        cache_key=(d, "semdedup-scaled"),
     )
 
 

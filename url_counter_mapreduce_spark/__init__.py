@@ -10,32 +10,19 @@ Spark subsumes; SURVEY.md §3.4, §4.2).
 
 Public API:
     from url_counter_mapreduce_spark import get_spark, load_table, QUERIES, ORACLES
+
+``clear_caches(spark)`` releases everything the session's ledger holds:
+the persisted artifacts (MinHash signatures, verified pairs, substring
+windows, CDC chunks, SCC labels, perceptual fingerprints, IVF indexes, the
+PCA frame) and the queries' checkpoints. Long-lived sessions that sweep
+many corpora call it between corpora; each artifact family is also
+LRU-bounded on its own.
 """
 
 from .session import get_spark
 from .tables import TABLES, load_table, register_views
 from .registry import QUERIES, ORACLES
-
-
-def clear_caches() -> None:
-    """Release every persisted per-(session, corpus) artifact the package
-    memoizes (MinHash signature index, verified dup-pair table, substring
-    window table, CDC chunk index, IVF assignment tables). Long-lived sessions that sweep
-    many corpora should call this between corpora; the caches are also
-    bounded internally (FIFO, oldest unpersisted)."""
-    from .operators.dedup import (
-        clear_chunk_cache,
-        clear_pairs_cache,
-        clear_signature_cache,
-        clear_wins_cache,
-    )
-    from .operators.similarity import clear_ivf_cache
-
-    clear_chunk_cache()
-    clear_pairs_cache()
-    clear_signature_cache()
-    clear_wins_cache()
-    clear_ivf_cache()
+from .ledger import clear_caches
 
 
 __all__ = [

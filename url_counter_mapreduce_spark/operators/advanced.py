@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ledger
+from ..ledger import checkpoint, scoped_conf
 from ..tables import load_table, register_views
 
 RANGE_WINDOW_S = 120  # pair events of the same user within 2 minutes
@@ -131,10 +133,6 @@ def join_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_BUCKETS = 8
 
-# applicationId → sf_dir whose bucketed tables are on disk (write-once per
-# session+corpus; the catalog entries point at external /tmp paths)
-_BUCKETED_WRITTEN: dict = {}
-
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-free co-located join via bucketing — the pre-partitioning
@@ -147,16 +145,16 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins SMJ so the tiny local tables don't take the broadcast path that
     would hide the demonstration at test scale.
 
-    Tables are external (explicit /tmp path per uid+sf). The write is
-    memoized per (session app, sf_dir) — like the dedup signature index —
-    so repeat calls in one session (bench loops, registry sweeps) reuse
-    the bucketed files instead of rewriting them."""
+    Tables are external (explicit /tmp path per uid+sf). The sf_dir whose
+    tables are on disk is a ledger memo, so repeat calls in one session
+    (bench loops, registry sweeps) reuse the bucketed files instead of
+    rewriting them."""
     from ..tables import tmp_scratch_dir
 
     base = tmp_scratch_dir("bucketed", sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    key = spark.sparkContext.applicationId
-    if _BUCKETED_WRITTEN.get(key) != sf_dir:
+    memo = ledger.of(spark).memo
+    if memo.get("bucketed") != sf_dir:
         sides = {
             "spark_graft_bdocs": docs.select("doc_id", "lang"),
             "spark_graft_bstats": docs.select(
@@ -177,7 +175,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .sortBy("doc_id")
                 .saveAsTable(name)
             )
-        _BUCKETED_WRITTEN[key] = sf_dir
+        memo["bucketed"] = sf_dir
     return (
         spark.table("spark_graft_bdocs")
         .hint("MERGE")
@@ -438,7 +436,7 @@ def url_topk_sketch(spark: SparkSession, sf_dir: str, k: int = 100) -> DataFrame
     # by the second) — without it each branch re-scans and re-splits the
     # corpus. At 100 TB this materialization is the same "token stream as
     # shared intermediate" a production frequent-items pass persists.
-    toks = core.tokenized(spark, sf_dir).localCheckpoint(eager=False)
+    toks = core.tokenized(spark, sf_dir).transform(checkpoint, eager=False)
     rows = F.array(*[F.expr(_cms_bucket("token", j)) for j in range(CMS_D)])
     sketch = (
         toks.select(F.posexplode(rows).alias("j", "bucket"))
@@ -740,7 +738,7 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ship path is audience_overlap_sketch); the DuckDB oracle
     recomputes the exact legs and asserts the flag as the contract, the
     same pattern as hll_sketch_rollup."""
-    aud = _engaged_audience(spark, sf_dir).localCheckpoint(eager=False)
+    aud = _engaged_audience(spark, sf_dir).transform(checkpoint, eager=False)
     sizes = aud.groupBy("event_type").agg(F.count(F.lit(1)).cast("long").alias("n"))
     # exact pairwise intersection: one self-equi-join on user_id over the
     # (already deduplicated) membership table — shuffle ∝ members
@@ -1019,26 +1017,13 @@ def _bloom_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-table join pre-filtered by a runtime bloom filter on the dim
-    keys (monthly lineitem rollup of 1-URGENT orders). Confs are
-    snapshot/restored around an eager localCheckpoint so the injected
-    might_contain() executes here without leaking threshold overrides into
-    the rest of the session. Results are exactly the plain join's — the
-    bloom is a may-contain pre-filter, the hash join stays authoritative."""
-    saved = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        return _bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-# applicationId → sf_dir whose CDC snapshot tables are on disk
-_CDC_WRITTEN: dict = {}
+    keys (monthly lineitem rollup of 1-URGENT orders). The confs are
+    scoped around an eager checkpoint so the injected might_contain()
+    executes here without leaking threshold overrides into the rest of the
+    session. Results are exactly the plain join's — the bloom is a
+    may-contain pre-filter, the hash join stays authoritative."""
+    with scoped_conf(spark, _BLOOM_CONFS):
+        return checkpoint(_bloom_join_frame(spark, sf_dir), eager=True)
 
 
 def cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1054,8 +1039,8 @@ def cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bucket count, so the full-outer sort-merge diff reads bucket i
     against bucket i with NO Exchange in the plan (asserted in
     tests/test_plans.py) — at 100 TB the diff of two bucketed snapshots is
-    scan + merge, never a shuffle. Write-once memoized per (session, sf)
-    like bucketed_join."""
+    scan + merge, never a shuffle. Write-once per (session, sf_dir) through
+    a ledger memo, like bucketed_join."""
     from ..tables import tmp_scratch_dir
 
     base = tmp_scratch_dir("cdc_snapshots", sf_dir)
@@ -1074,8 +1059,8 @@ def cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_orderstatus"))
         .alias("status"),
     )
-    key = spark.sparkContext.applicationId
-    if _CDC_WRITTEN.get(key) != sf_dir:
+    memo = ledger.of(spark).memo
+    if memo.get("cdc") != sf_dir:
         for name, df in (("spark_graft_cdc_old", old), ("spark_graft_cdc_new", new)):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             (
@@ -1087,7 +1072,7 @@ def cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .sortBy("o_orderkey")
                 .saveAsTable(name)
             )
-        _CDC_WRITTEN[key] = sf_dir
+        memo["cdc"] = sf_dir
     o = spark.table("spark_graft_cdc_old").alias("o")
     n = spark.table("spark_graft_cdc_new").alias("n")
     return (
@@ -1145,7 +1130,7 @@ def skyline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("x")
         .agg(F.max("y").alias("ymax"), F.count(F.lit(1)).alias("n_docs"))
         .withColumn("bucket", F.expr(f"CAST(x DIV {SKYLINE_BUCKET} AS INT)"))
-        .localCheckpoint(eager=False)  # consumed by the collect AND the join
+        .transform(checkpoint, eager=False)  # consumed by the collect AND the join
     )
     sub = pts.groupBy("bucket").agg(F.max("ymax").alias("bmax")).collect()
     # prefix max over STRICTLY HIGHER buckets, driver-side (bounded)
@@ -1428,10 +1413,8 @@ def sql_scripting_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    counts.localCheckpoint(eager=True).createOrReplaceTempView("_script_counts")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    checkpoint(counts, eager=True).createOrReplaceTempView("_script_counts")
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             f"""
             BEGIN
@@ -1451,11 +1434,6 @@ def sql_scripting_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 RECURSIVE_MAX_HOPS = 3  # depth cap: bounds UNION ALL walk enumeration
@@ -1553,7 +1531,7 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import scalar_join
 
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=False)
+    baskets = li.select("l_orderkey", "l_partkey").distinct().transform(checkpoint, eager=False)
     b2 = baskets.select(
         F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb")
     )

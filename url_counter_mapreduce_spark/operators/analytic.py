@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..ledger import checkpoint
 from ..tables import load_table
 
 
@@ -240,7 +241,7 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("o_orderstatus", F.lit("unknown")).alias("status"),
         )
         .agg(F.count(F.lit(1)).alias("observed"))
-        .localCheckpoint(eager=False)  # margins + grand total re-read it
+        .transform(checkpoint, eager=False)  # margins + grand total re-read it
     )
     rowt = cells.groupBy("priority").agg(F.sum("observed").alias("row_total"))
     colt = cells.groupBy("status").agg(F.sum("observed").alias("col_total"))

@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ledger
+from ..ledger import checkpoint
 from ..tables import load_table, spread
-from ..session_cache import SessionFrameCache
 
 # number of minhash functions and band layout (4 bands x 2 rows)
 MINHASH_K = 8
@@ -125,57 +126,31 @@ def _signatures_with_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) → persisted signature table. In a production
-# pipeline the MinHash signature table is a PERSISTED ARTIFACT computed once
-# per corpus snapshot and shared by every consumer (pair mining, cluster
-# resolution, incremental checks) — memoizing per session+corpus models
-# exactly that and stops each registry query from re-hashing the corpus.
-# Bounded LRU (least-recently-USED unpersisted on overflow — the recall
-# harness caches sampled variants beside the full-corpus table, and FIFO
-# would evict the hot full-corpus entry just for being built first);
-# clear_signature_cache() gives long-lived callers an explicit release.
-_SIG_CACHE = SessionFrameCache("minhash-signatures", max_entries=4)
-
-
-def clear_signature_cache() -> None:
-    """Unpersist and drop every cached signature table."""
-    _SIG_CACHE.clear()
-
-
-def _cached_signatures(key: tuple, build_fn) -> DataFrame:
-    """Single eviction + persist lifecycle for _SIG_CACHE entries —
-    shared by the full-corpus and recall-sample signature tables so the
-    eviction/unpersist discipline can't drift between them."""
-    return _SIG_CACHE.get_or_build(key, build_fn)
-
-
+# "minhash-signatures" ledger family: sf_dir → persisted signature table.
+# In a production pipeline the MinHash signature table is a PERSISTED
+# ARTIFACT computed once per corpus snapshot and shared by every consumer
+# (pair mining, cluster resolution, incremental checks) — memoizing per
+# session+corpus models exactly that and stops each registry query from
+# re-hashing the corpus. The recall harness's sampled table shares the
+# family under its own key.
 def _signatures_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load_table as _lt
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _cached_signatures(
-        key, lambda: _signatures_with_shingles(_lt(spark, sf_dir, "documents"))
+    return ledger.of(spark).family("minhash-signatures").get_or_build(
+        sf_dir, lambda: _signatures_with_shingles(_lt(spark, sf_dir, "documents"))
     )
 
 
-# (applicationId, sf_dir, threshold, bucket_cap) → persisted verified-pair
-# table. The verified dup-pair set is the OTHER shared artifact of a
-# production dedup pipeline (pair mining feeds the pair report, cluster
-# resolution, AND the leakage-safe split — each would otherwise re-run the
-# band join + Jaccard verify). Same bounded-LRU discipline as _SIG_CACHE.
-_PAIRS_CACHE = SessionFrameCache("verified-pairs", max_entries=4)
-
-
-def clear_pairs_cache() -> None:
-    """Unpersist and drop every cached verified-pair table."""
-    _PAIRS_CACHE.clear()
-
-
+# "verified-pairs" ledger family: (sf_dir, threshold, bucket_cap) →
+# persisted verified-pair table. The verified dup-pair set is the OTHER
+# shared artifact of a production dedup pipeline (pair mining feeds the
+# pair report, cluster resolution, AND the leakage-safe split — each would
+# otherwise re-run the band join + Jaccard verify).
 def _verified_pairs_for(
     spark: SparkSession, sf_dir: str, threshold: float, bucket_cap: int | str | None = None
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, threshold, bucket_cap)
-    return _PAIRS_CACHE.get_or_build(
+    key = (sf_dir, threshold, bucket_cap)
+    return ledger.of(spark).family("verified-pairs").get_or_build(
         key,
         lambda: _verified_pairs_from_sigs(
             _signatures_for(spark, sf_dir), threshold, bucket_cap=bucket_cap
@@ -325,7 +300,6 @@ def _pairs_rejoin(
             name="lsh-bucket",
             policy="drop-bucket",  # _capped_bands drops oversized buckets whole
             cache_key=(
-                sigs_sh.sparkSession.sparkContext.applicationId,
                 "lsh-bucket",
                 band_fn.__name__,
                 sigs_sh.semanticHash(),
@@ -505,9 +479,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature aggregation feeds FOUR plan branches (distinct bands,
     # two expand-back joins, the equal-signature self-join) — materialize
     # it once instead of recomputing the 64-sum groupBy per branch
-    sigs = simhash_signatures(load_table(spark, sf_dir, "documents")).localCheckpoint(
-        eager=False
-    )
+    sigs = checkpoint(simhash_signatures(load_table(spark, sf_dir, "documents")), eager=False)
     usig = sigs.select("simhash").distinct()
     ub = usig.select(
         "simhash",
@@ -569,22 +541,13 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 SUBSTR_NGRAM = 8
 
 
-# (applicationId, sf_dir) → persisted positional-window table
-# (doc_id, pos, h). The SUBSTR_NGRAM-token window hashes are the third
+# "substring-windows" ledger family: sf_dir → persisted positional-window
+# table (doc_id, pos, h). The SUBSTR_NGRAM-token window hashes are the third
 # shared artifact of a production dedup pipeline (span mining, span
 # materialization/cleaning, and the corpus audit report all consume the
 # same window table; at 100 TB it is a once-per-snapshot materialized
 # table, not a per-query recomputation — the md5-per-window hashing is
-# the dominant cost of the modality). Same bounded-LRU discipline as
-# _SIG_CACHE / _PAIRS_CACHE.
-_WINS_CACHE = SessionFrameCache("substring-windows", max_entries=4)
-
-
-def clear_wins_cache() -> None:
-    """Unpersist and drop every cached positional-window table."""
-    _WINS_CACHE.clear()
-
-
+# the dominant cost of the modality).
 def _substring_windows_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional SUBSTR_NGRAM-token window hashes, one row per window:
     (doc_id, pos, h). NULL text is coalesced to '' (zero tokens → zero
@@ -612,8 +575,7 @@ def _substring_windows_for(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "w.pos", "w.h")
         )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _WINS_CACHE.get_or_build(key, build)
+    return ledger.of(spark).family("substring-windows").get_or_build(sf_dir, build)
 
 
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -890,7 +852,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(finite_norm_pred("embedding"))
     )
     return semantic_dedup_frame(
-        emb, cache_key=(spark.sparkContext.applicationId, sf_dir, "semdedup")
+        emb, cache_key=(sf_dir, "semdedup")
     )
 
 
@@ -1043,13 +1005,12 @@ RECALL_JACCARD_T = 0.5
 
 def _sampled_signatures_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature+shingle table for the deterministic recall sample, served
-    from the same bounded _SIG_CACHE FIFO as the full-corpus index (keyed
-    separately) — an un-keyed per-call persist() here would accumulate one
-    cached table per bench/driver invocation for the life of the session."""
+    from the same "minhash-signatures" ledger family as the full-corpus
+    index (keyed separately) — an un-keyed per-call persist() here would
+    accumulate one cached table per bench/driver invocation for the life
+    of the session."""
     from ..tables import load_table as _lt
     from .pipeline import _DECILE  # single definition of the md5-decile idiom
-
-    key = (spark.sparkContext.applicationId, sf_dir, "recall-sample")
 
     def _build():
         docs = _lt(spark, sf_dir, "documents").filter(
@@ -1057,7 +1018,9 @@ def _sampled_signatures_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _signatures_with_shingles(docs)
 
-    return _cached_signatures(key, _build)
+    return ledger.of(spark).family("minhash-signatures").get_or_build(
+        (sf_dir, "recall-sample"), _build
+    )
 
 
 def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,7 +1140,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sh = _shingles(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "shingles"
-    ).localCheckpoint(eager=False)  # fans into sizes + exploded index
+    ).transform(checkpoint, eager=False)  # fans into sizes + exploded index
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     rare = (
         ex.groupBy("s")
@@ -1363,7 +1326,7 @@ def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         n_cells=SEMDEDUP_CELLS,
         iters=SEMDEDUP_TRAIN_ITERS,
-        cache_key=(spark.sparkContext.applicationId, sf_dir, "semdedup-q"),
+        cache_key=(sf_dir, "semdedup-q"),
     )
     return _semantic_prune(assigned)
 
@@ -1487,7 +1450,7 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         n_cells=SEMDEDUP_CELLS,
         iters=SEMDEDUP_TRAIN_ITERS,
-        cache_key=(spark.sparkContext.applicationId, sf_dir, "semdedup-q"),
+        cache_key=(sf_dir, "semdedup-q"),
     )
     dec = "CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 10"
     t = assigned.withColumn("decile", F.expr(dec))
@@ -1545,7 +1508,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("source", F.lit("unknown")).alias("source"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     a = hs.withColumnRenamed("source", "source_a")
     b = hs.withColumnRenamed("source", "source_b")
@@ -1792,25 +1755,17 @@ CDC_WINDOW = 3  # tokens per boundary-decision window
 CDC_DIVISOR = 8  # boundary when window-hash % CDC_DIVISOR == 0 (mean chunk ~8 tokens)
 
 
-# (applicationId, sf_dir) → persisted CDC chunk index. The chunk table is
-# the third shared artifact of a production dedup pipeline (after the
+# "cdc-chunks" ledger family: sf_dir → persisted CDC chunk index. The chunk
+# table is the third shared artifact of a production dedup pipeline (after the
 # shingle index and the verified-pair table): the storage report
 # (dedup_cdc_chunks) and the assembly detector (dedup_chunk_reuse) both
 # aggregate over it, and dedup_chunk_reuse alone reads it three times
 # (per-doc bags twice for the self-join, doc totals once) — without the
-# persist each read re-runs the explode + per-doc windows. Same bounded
-# LRU + unpersist discipline as _SIG_CACHE.
-_CHUNK_CACHE = SessionFrameCache("cdc-chunks", max_entries=4)
-
-
-def clear_chunk_cache() -> None:
-    """Unpersist and drop every cached CDC chunk index."""
-    _CHUNK_CACHE.clear()
-
-
+# persist each read re-runs the explode + per-doc windows.
 def _chunk_index_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _CHUNK_CACHE.get_or_build(key, lambda: _cdc_chunk_frame(spark, sf_dir))
+    return ledger.of(spark).family("cdc-chunks").get_or_build(
+        sf_dir, lambda: _cdc_chunk_frame(spark, sf_dir)
+    )
 
 
 def _cdc_chunk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1985,7 +1940,6 @@ def dedup_chunk_reuse(
             name="chunk-posting",
             policy="keep-lowest",  # row_number ≤ cap keeps the lowest doc_ids
             cache_key=(
-                per_doc.sparkSession.sparkContext.applicationId,
                 "chunk-posting",
                 per_doc.semanticHash(),
             ),

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..ledger import checkpoint
 from ..tables import load_table, local_rows_df
 from .graph import connected_components
 
@@ -123,11 +124,7 @@ def er_match_edges(
             AUTO_BLOCK_CAP,
             name="er-block",
             policy="keep-lowest",  # row_number ≤ cap keeps the lowest p_partkeys
-            cache_key=(
-                spark.sparkContext.applicationId,
-                "er-block",
-                sf_dir,
-            ),
+            cache_key=("er-block", sf_dir),
         )
     if block_cap is not None:
         wcap = Window.partitionBy("name_key").orderBy(F.col("p_partkey").asc())
@@ -215,7 +212,7 @@ def _global_rank(df: DataFrame, order_cols: list) -> DataFrame:
     ranged = (
         df.repartitionByRange(*order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     sizes = {
         r["_pid"]: r["n"]

@@ -25,18 +25,17 @@ oracle via a recursive CTE over the same edge set.
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ledger
+from ..ledger import checkpoint, scoped_conf
 from ..tables import load_table
 from .dedup import _verified_pairs_for
-from ..session_cache import SessionFrameCache
 
 
-@contextlib.contextmanager
 def _fixed_plan_loop(spark: SparkSession, anchor: DataFrame):
     """Disable AQE around a fixed-size iteration loop (optimization r14,
     guide §2.2: AQE is per-stage-job overhead on tiny iterations).
@@ -58,15 +57,10 @@ def _fixed_plan_loop(spark: SparkSession, anchor: DataFrame):
     every oracle hash, is untouched."""
     floor = int(os.environ.get("SPARK_GRAFT_GRAPH_LOOP_PARTITIONS", "4"))
     parts = max(anchor.rdd.getNumPartitions(), floor, 1)
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    return scoped_conf(
+        spark,
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(parts)},
+    )
 
 # with pointer halving each round roughly halves remaining path lengths:
 # 50 rounds covers components of astronomically large diameter; hitting the
@@ -150,7 +144,7 @@ def connected_components(
       round for no reason.
     Singletons are attached at the end with one left join + coalesce
     (their label is trivially their own id)."""
-    edges = edges.select("doc_a", "doc_b").localCheckpoint(eager=False)
+    edges = edges.select("doc_a", "doc_b").transform(checkpoint, eager=False)
     if edges.count() <= collect_max_edges:
         # Arrow-batched collect: two int64 columns (~16 MB at the gate), not
         # a list of Row objects (~100+ B each)
@@ -189,7 +183,7 @@ def _connected_components_distributed(nodes: DataFrame, edges: DataFrame) -> Dat
     # edge relation — no separate "least(own, neighbor-min)" left join
     symplus = sym.union(
         touched.select(F.col("doc_id").alias("src"), F.col("doc_id").alias("dst"))
-    ).localCheckpoint()
+    ).transform(checkpoint)
     labels = touched.select("doc_id", F.col("doc_id").alias("group_id"))
     prev_sig: tuple | None = None
     for _ in range(MAX_CC_ITERS):
@@ -213,7 +207,7 @@ def _connected_components_distributed(nodes: DataFrame, edges: DataFrame) -> Dat
         # action per round — it materializes this round's labels (truncating
         # lineage for the next round) and reads the convergence signature in
         # the same job, vs. the two jobs of an eager checkpoint + count.
-        labels = halved.localCheckpoint(eager=False)
+        labels = halved.transform(checkpoint, eager=False)
         # labels are monotone non-increasing (the neighborhood min includes
         # self), so Σ(group_id) strictly decreases whenever ANY node changed:
         # an unchanged (count, sum) pair across a round proves the fixpoint —
@@ -289,7 +283,7 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     prev: tuple | None = None
     for _ in range(MAX_CC_ITERS):
@@ -321,7 +315,7 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             .union(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         row = e.agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s")).first()
         sig = (row["n"], row["s"])
@@ -382,7 +376,7 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lower(t),
             ),
         ).alias("hosts")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, eager=False)
     pairs = (
         hosts.filter(F.expr("size(hosts) >= 2"))
         .select(
@@ -398,9 +392,9 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).cast("long").alias("w"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-    e = edges.join(outw, "src").localCheckpoint()  # built once, reused PR_ITERS times
+    e = edges.join(outw, "src").transform(checkpoint)  # built once, reused PR_ITERS times
     nodes = (
-        hosts.select(F.explode("hosts").alias("host")).distinct().localCheckpoint()
+        hosts.select(F.explode("hosts").alias("host")).distinct().transform(checkpoint)
     )
     n_nodes = nodes.count()
     # Integer nano-unit ranks (r = R / 1e9) with PER-EDGE quantization:
@@ -443,7 +437,7 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # that dominates iterative graph passes (identical arithmetic —
             # the checkpoint cadence is physical only)
             if it % 2 == 1 or it == PR_ITERS - 1:
-                ranks = ranks.localCheckpoint()
+                ranks = ranks.transform(checkpoint)
     return (
         ranks.select(
             "host", F.expr(stable_round("CAST(R AS DOUBLE) / 1e9", 6)).alias("rank")
@@ -504,7 +498,7 @@ def _host_undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.a", "e.b")
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
 
 
@@ -527,7 +521,7 @@ def triangle_census(und: DataFrame) -> DataFrame:
     oriented = withdeg.select(
         F.expr(f"IF({lt}, a, b)").alias("u"),
         F.expr(f"IF({lt}, b, a)").alias("v"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, eager=False)
     e2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("w"))
     # each unordered wedge pair appears twice in the self-join; keep the
     # lexicographic half, which is exactly the (a, b) canonical form of the
@@ -602,7 +596,7 @@ def khop_bfs_visited(spark: SparkSession, sf_dir: str, max_hops: int) -> DataFra
                 ),
             ).alias("hosts")
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     edges = (
         hosts.filter(F.expr("size(hosts) >= 2"))
@@ -617,12 +611,12 @@ def khop_bfs_visited(spark: SparkSession, sf_dir: str, max_hops: int) -> DataFra
         .select("p.src", "p.dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()  # built once, probed KHOP_K times
+        .transform(checkpoint)  # built once, probed KHOP_K times
     )
     nodes = hosts.select(F.explode("hosts").alias("host")).distinct()
     frontier = nodes.filter(F.col("host").startswith("a")).select(
         "host", F.lit(0).alias("hops")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     visited = frontier
     for k in range(1, max_hops + 1):
         nxt = (
@@ -631,9 +625,9 @@ def khop_bfs_visited(spark: SparkSession, sf_dir: str, max_hops: int) -> DataFra
             .distinct()
             .join(visited, "host", "left_anti")
             .select("host", F.lit(k).alias("hops"))
-            .localCheckpoint()
+            .transform(checkpoint)
         )
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
+        visited = visited.unionAll(nxt).transform(checkpoint, eager=False)
         frontier = nxt
     return visited.select("host", F.col("hops").cast("int").alias("hops"))
 
@@ -783,7 +777,7 @@ def host_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.src", "p.dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)  # total count + reverse join share it
+        .transform(checkpoint, eager=False)  # total count + reverse join share it
     )
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = e.join(rev, ["src", "dst"], "left_semi")
@@ -834,7 +828,7 @@ def host_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = (
             cur.join(keep.withColumnRenamed("h", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("h", "b"), "b", "left_semi")
-            .localCheckpoint(eager=False)
+            .transform(checkpoint, eager=False)
         )
     return (
         cur.select(F.col("a").alias("host"))
@@ -873,7 +867,7 @@ def host_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = (
         und.select(F.col("a").alias("h"), F.col("b").alias("n"))
         .unionAll(und.select(F.col("b").alias("h"), F.col("a").alias("n")))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     labels = sym.select("h").distinct().withColumn("lbl", F.col("h"))
     for _ in range(LPA_ROUNDS):
@@ -889,7 +883,7 @@ def host_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("m")
             )
             .select("h", F.col("m.l").alias("lbl"))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint, eager=False)
         )
     sizes = labels.groupBy("lbl").agg(
         F.count(F.lit(1)).cast("long").alias("community_size")
@@ -930,7 +924,7 @@ def host_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(und.select(F.col("b").alias("h")))
         .groupBy("h")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     withdeg = (
         und.join(deg.withColumnRenamed("h", "a").withColumnRenamed("deg", "da"), "a")
@@ -940,7 +934,7 @@ def host_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     oriented = withdeg.select(
         F.expr(f"IF({lt}, a, b)").alias("u"),
         F.expr(f"IF({lt}, b, a)").alias("v"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, eager=False)
     e2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("w"))
     wedges = oriented.join(e2, F.col("u") == F.col("u2")).filter(F.col("v") < F.col("w"))
     tri = wedges.join(und, (F.col("v") == F.col("a")) & (F.col("w") == F.col("b")))
@@ -1021,7 +1015,7 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" t -> coalesce(nullif(regexp_extract(lower(t), '{URL_HOST_RE}', 1), ''),"
             " lower(t)))"
         ).alias("hosts")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, eager=False)
     pairs = (
         hosts.filter(F.expr("size(hosts) >= 2"))
         .select(
@@ -1038,9 +1032,9 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         pairs.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
-        .localCheckpoint()  # built once, probed 2·HITS_ITERS times
+        .transform(checkpoint)  # built once, probed 2·HITS_ITERS times
     )
-    nodes = hosts.select(F.explode("hosts").alias("host")).distinct().localCheckpoint()
+    nodes = hosts.select(F.explode("hosts").alias("host")).distinct().transform(checkpoint)
     allw = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     scores = nodes.select(
         "host", F.lit(10**9).alias("hub"), F.lit(10**9).alias("auth")
@@ -1076,7 +1070,7 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 scores.join(h_raw.withColumnRenamed("src", "host"), "host", "left")
                 .withColumn("mx", F.max("s").over(allw))
                 .select("host", F.expr(renorm).alias("hub"), "auth")
-                .localCheckpoint()
+                .transform(checkpoint)
             )
     return (
         scores.select(
@@ -1201,7 +1195,7 @@ def strongly_connected_components(
     Both strategies label every member with the component's min id, so
     they land on the identical labeling — equivalence-tested by forcing
     the gate."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    edges = edges.select("src", "dst").transform(checkpoint, eager=False)
     if edges.count() <= collect_max_edges:
         pdf = edges.toPandas()
         # Tarjan runs over EDGE-ENDPOINT nodes only, so driver memory is
@@ -1477,7 +1471,7 @@ def _host_directed_graph(spark: SparkSession, sf_dir: str):
             f" t -> coalesce(nullif(regexp_extract(lower(t), '{URL_HOST_RE}', 1), ''),"
             " lower(t)))"
         ).alias("hosts")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, eager=False)
     nodes = hosts.select(F.explode("hosts").alias("id")).distinct()
     edges = (
         hosts.filter(F.expr("size(hosts) >= 2"))
@@ -1496,24 +1490,15 @@ def _host_directed_graph(spark: SparkSession, sf_dir: str):
     return nodes, edges
 
 
-# per-(session, corpus) SCC label cache — host_scc and host_condensation
-# share the labeling, so the second caller pays one cache hit instead of
-# a full Tarjan/coloring pass (the shared SessionFrameCache LRU discipline)
-_SCC_CACHE = SessionFrameCache("scc-labels", max_entries=4)
-
-
-def clear_scc_cache() -> None:
-    """Unpersist and drop every cached SCC labeling."""
-    _SCC_CACHE.clear()
-
-
+# "scc-labels" ledger family: host_scc and host_condensation share the
+# labeling, so the second caller pays one cache hit instead of a full
+# Tarjan/coloring pass
 def _scc_labels_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         nodes, edges = _host_directed_graph(spark, sf_dir)
         return strongly_connected_components(nodes, edges)
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _SCC_CACHE.get_or_build(key, build)
+    return ledger.of(spark).family("scc-labels").get_or_build(sf_dir, build)
 
 
 def host_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1555,10 +1540,10 @@ def host_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_src") != F.col("c_dst"))
         .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
-    levels = members.select("scc_id", F.lit(0).cast("long").alias("level")).localCheckpoint(
-        eager=False
+    levels = checkpoint(
+        members.select("scc_id", F.lit(0).cast("long").alias("level")), eager=False
     )
     for _ in range(MAX_DAG_LEVEL_ITERS):
         stepped = (
@@ -1567,7 +1552,7 @@ def host_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(levels)
             .groupBy("scc_id")
             .agg(F.max("level").alias("level"))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint, eager=False)
         )
         # levels are monotone non-decreasing and bounded by the longest
         # condensed path, so an unchanged sum proves the fixpoint

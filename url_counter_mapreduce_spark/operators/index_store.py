@@ -50,6 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ledger import checkpoint
 from ..tables import file_fingerprint, load_table, tmp_scratch_dir
 from .dedup import (
     _band_keys,
@@ -124,7 +125,7 @@ def _append_rows(spark: SparkSession, root: str, docs: DataFrame) -> None:
     # this for free by re-reading its freshly WRITTEN sigs; an append can't
     # re-read (its new rows aren't distinguishable from prior generations'
     # in the shared directory), so it checkpoints instead.
-    sigs = _signatures_with_shingles(docs).localCheckpoint(eager=False)
+    sigs = _signatures_with_shingles(docs).transform(checkpoint, eager=False)
     sigs.write.mode("append").parquet(os.path.join(root, "sigs"))
     bands = _band_keys(sigs, carry=[])
     (

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ledger
 from ..tables import load_table
 
 META_SCHEMA = "doc_id long, n_bytes long, digest string, decode_status string"
@@ -885,18 +886,12 @@ PHASH_MUL = 2654435761
 HAMMING_T = 4
 
 
-# (applicationId, sf_dir, modality) -> persisted fingerprint frame. Every
-# perceptual consumer (pair join, cluster resolution, cross-modal
-# consensus) shares ONE synth+decode pass per corpus — the _SIG_CACHE
-# discipline applied to fingerprints (session_cache.SessionFrameCache).
-from ..session_cache import SessionFrameCache
-
-_FP_CACHE = SessionFrameCache("perceptual-fp", max_entries=6)
-
-
-def clear_fp_cache() -> None:
-    """Unpersist and drop every cached perceptual fingerprint frame."""
-    _FP_CACHE.clear()
+def _fp_cache(spark: SparkSession) -> ledger.Family:
+    """The "perceptual-fp" ledger family: (sf_dir, modality) -> persisted
+    fingerprint frame. Every perceptual consumer (pair join, cluster
+    resolution, cross-modal consensus) shares ONE synth+decode pass per
+    corpus, as the dedup signature table does for text."""
+    return ledger.of(spark).family("perceptual-fp", max_entries=6)
 
 
 def _phash_p(g: int, c: int) -> int:
@@ -1045,11 +1040,7 @@ def _banded_hamming_pairs(
             AUTO_BUCKET_CAP,
             name=name,
             policy="drop-bucket",  # the _bn filter drops oversized buckets whole
-            cache_key=(
-                fp.sparkSession.sparkContext.applicationId,
-                name,
-                fp.semanticHash(),
-            ),
+            cache_key=(name, fp.semanticHash()),
         )
     if bucket_cap is not None:
         from pyspark.sql.window import Window as _W
@@ -1103,9 +1094,8 @@ def image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "image")
-    return _FP_CACHE.get_or_build(
-        key,
+    return _fp_cache(spark).get_or_build(
+        (sf_dir, "image"),
         lambda: synth_pattern_png_payloads(spark, sf_dir).mapInPandas(
             extract,
             schema="doc_id long, width int, height int, fp_hi long, fp_lo long",
@@ -1305,9 +1295,8 @@ def audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "audio")
-    return _FP_CACHE.get_or_build(
-        key,
+    return _fp_cache(spark).get_or_build(
+        (sf_dir, "audio"),
         lambda: synth_envelope_wav_payloads(spark, sf_dir).mapInPandas(
             extract,
             schema="doc_id long, sample_rate int, n_samples long, fp_hi long, fp_lo long",
@@ -1574,9 +1563,8 @@ def video_keyframe_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"doc_id": ids, "frame_idx": fids, "fp_hi": his, "fp_lo": los}
             )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "video")
-    return _FP_CACHE.get_or_build(
-        key,
+    return _fp_cache(spark).get_or_build(
+        (sf_dir, "video"),
         lambda: synth_pattern_gif_payloads(spark, sf_dir).mapInPandas(
             extract, schema="doc_id long, frame_idx int, fp_hi long, fp_lo long"
         ),

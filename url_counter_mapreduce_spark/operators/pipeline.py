@@ -14,7 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import ledger
 from ..functions.vector import stable_round
+from ..ledger import checkpoint
 from ..tables import load_table
 
 _TOKS = "filter(split(text, ' '), x -> x != '')"
@@ -112,7 +114,7 @@ def vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranged = (
         counts.repartitionByRange(F.col("cnt").desc(), F.col("token").asc())
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     sizes = {
         r["pid"]: r["n"]
@@ -209,7 +211,7 @@ def _bpe_merges_distributed(words: DataFrame, n_merges: int) -> list:
             "array_join(transform(sequence(1, length(token)),"
             " i -> concat(char(1), substring(token, i, 1), char(2))), '')"
         ).alias("symstr"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, eager=False)
     merges = []
     for rank in range(n_merges):
         best = (
@@ -238,7 +240,7 @@ def _bpe_merges_distributed(words: DataFrame, n_merges: int) -> list:
                 F.lit(_B1 + l + _B2 + _B1 + r + _B2),
                 F.lit(_B1 + l + r + _B2),
             ).alias("symstr"),
-        ).localCheckpoint(eager=False)
+        ).transform(checkpoint, eager=False)
     return merges
 
 
@@ -252,7 +254,7 @@ def bpe_merge_table(
     BPE_COLLECT_MAX_WORDS). The distributed corpus pass is the word-count
     aggregation the caller provides; the merge loop runs over the
     vocabulary-sized table only."""
-    words = words.localCheckpoint(eager=False)
+    words = words.transform(checkpoint, eager=False)
     if words.count() <= collect_max_words:
         pdf = words.toPandas()
         rows = _bpe_merges_local(list(zip(pdf["token"], pdf["cnt"])), n_merges)
@@ -296,7 +298,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint BEFORE fanning out: the word-count table feeds both the
     # training collect (inside bpe_merge_table) and the encode plan below —
     # un-truncated, the corpus tokenize+groupBy would execute twice
-    words = _token_counts(docs).localCheckpoint(eager=False)
+    words = _token_counts(docs).transform(checkpoint, eager=False)
     merges = sorted(
         (int(r["merge_rank"]), r["lhs"], r["rhs"]) for r in bpe_merge_table(words).collect()
     )
@@ -1091,14 +1093,14 @@ def training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncation the tokenize+classifier scan re-executes ~8×, measured
     # 28 s vs ~4 s at sf0.1. Non-eager localCheckpoint at each reuse
     # point: first consumer materializes, the rest read.
-    gated = _export_gated(base).localCheckpoint(eager=False)
+    gated = _export_gated(base).transform(checkpoint, eager=False)
     keepers = gated.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     survivors = (
         gated.join(keepers.select("doc_id"), "doc_id", "left_semi")
         .select(
             "doc_id", "source", "n_tokens", "fp", F.expr(_priority_hash("export")).alias("h")
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     admitted = (
         _with_prefix_cumsum(survivors, ["source"], "n_tokens", "cum_tokens")
@@ -1111,7 +1113,7 @@ def training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("one"),
             F.expr(_priority_hash("export-shuf")).alias("h"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     total: list = []
     ranked = _with_prefix_cumsum(admitted, [], "one", "shuffle_rank", grand_total=total)
@@ -1444,7 +1446,7 @@ def vocab_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("CASE WHEN is_train THEN 1 ELSE 0 END")).cast("long").alias("o_t"),
             F.sum(F.expr("CASE WHEN is_train THEN 0 ELSE 1 END")).cast("long").alias("o_h"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     totals = tok.agg(F.sum("o_t"), F.sum("o_h")).collect()[0]
     t_total, h_total = int(totals[0] or 1), int(totals[1] or 1)
@@ -1564,7 +1566,7 @@ def drift_ks_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         # helper's required unique tiebreak (= bin, unique post-groupBy)
         .withColumn("h", F.expr("bin * 65536"))
         .withColumn("doc_id", F.col("bin"))
-        .localCheckpoint(eager=False)  # two scan passes below share it
+        .transform(checkpoint, eager=False)  # two scan passes below share it
     )
     tot_a: list = []
     tot_b: list = []
@@ -1831,7 +1833,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     final aggregate. The merge table is a bounded driver artifact
     (BPE_MERGES rows) applied as literal projections."""
     docs = load_table(spark, sf_dir, "documents")
-    words = _token_counts(docs).localCheckpoint(eager=False)
+    words = _token_counts(docs).transform(checkpoint, eager=False)
     merges = sorted(
         (int(r["merge_rank"]), r["lhs"], r["rhs"]) for r in bpe_merge_table(words).collect()
     )
@@ -1925,16 +1927,15 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-unit vector; λ₂/λ₁ convergence is the textbook bound."""
     from ..functions.vector import finite_norm_pred, stable_round
     from ..tables import scalar_join, spread
-    from .dedup import _cached_signatures
     from .similarity import _xq_expr
 
     d = COV_DIMS
-    # keyed persist (dedup._SIG_CACHE discipline) instead of a bare
-    # .persist(): repeated invocations — e.g. the full-registry gate —
-    # reuse one cached quantized frame and the FIFO eviction unpersists
-    # it, so pinned executor storage can't accumulate across calls.
-    embq = _cached_signatures(
-        (spark.sparkContext.applicationId, sf_dir, "pca_embq"),
+    # a ledger artifact of its own family instead of a bare .persist():
+    # repeated invocations — e.g. the full-registry gate — reuse one cached
+    # quantized frame and LRU eviction unpersists it, so pinned executor
+    # storage can't accumulate across calls.
+    embq = ledger.of(spark).family("pca-embq").get_or_build(
+        sf_dir,
         lambda: (
             spread(load_table(spark, sf_dir, "embeddings"))
             .filter(F.expr(finite_norm_pred("embedding")))

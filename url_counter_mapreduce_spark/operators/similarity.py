@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from .. import ledger
 from ..functions.vector import cosine_expr, finite_norm_pred, sign_bucket_expr, stable_round
 from ..tables import load_table, spread
-from ..session_cache import SessionFrameCache
 
 N_QUERIES = 8  # vec_id < 8 are the query vectors
 TOP_K = 5
@@ -406,15 +406,16 @@ def build_ivf_index_q(
     table additionally carries the quantized vector so probe-cell
     computation reuses it. Memoized like build_ivf_index."""
     full_key = (cache_key, "q", n_cells, iters) if cache_key is not None else None
-    if full_key is not None and full_key in _IVF_INDEX:
-        return _IVF_INDEX.get(full_key)
+    cache = _ivf_index(emb)
+    if full_key is not None and full_key in cache:
+        return cache.get(full_key)
     embq = emb.withColumn("xq", F.expr(_xq_expr("embedding"))).persist()
     cents = _kmeans_centroids_q(embq.select("vec_id", "xq"), n_cells, iters)
     assigned = embq.withColumn("cell", F.expr(_int_best_cell_sql(cents, "xq"))).persist()
     assigned.count()  # materialize the index; training cache no longer needed
     embq.unpersist()
     if full_key is not None:
-        _IVF_INDEX.put(full_key, (cents, assigned))
+        cache.put(full_key, (cents, assigned))
     return cents, assigned
 
 
@@ -454,12 +455,6 @@ def _kmeans_centroids(
     return cents
 
 
-# (applicationId, sf_dir/caller key, n_cells, iters) → (centroids, persisted
-# assignment DataFrame). The IVF index is TRAINED AND ASSIGNED ONCE and
-# reused across query calls — the 'precomputed and persisted' posture a real
-# deployment has, instead of rebuilding the quantizer per query. Bounded
-# like dedup._SIG_CACHE so many-corpus sessions can't pile up cached
-# assignment tables; clear_ivf_cache() is the explicit release.
 def _unpersist_index_entry(entry: tuple) -> None:
     """Release the persisted DataFrame of a cached index entry — entries
     are (centroids, assigned_df) for IVF and (coarse, books, subdim,
@@ -467,12 +462,13 @@ def _unpersist_index_entry(entry: tuple) -> None:
     entry[-1].unpersist()
 
 
-_IVF_INDEX = SessionFrameCache("ivf-index", max_entries=4, evict_fn=_unpersist_index_entry)
-
-
-def clear_ivf_cache() -> None:
-    """Unpersist and drop every cached IVF / IVF-PQ index."""
-    _IVF_INDEX.clear()
+def _ivf_index(emb: DataFrame) -> ledger.Family:
+    """The "ivf-index" ledger family of ``emb``'s session: (caller key,
+    n_cells, iters, ...) → (centroids, persisted assignment DataFrame).
+    The IVF index is TRAINED AND ASSIGNED ONCE and reused across query
+    calls — the 'precomputed and persisted' posture a real deployment has,
+    instead of rebuilding the quantizer per query."""
+    return ledger.of(emb.sparkSession).family("ivf-index", release=_unpersist_index_entry)
 
 
 def build_ivf_index(
@@ -489,15 +485,16 @@ def build_ivf_index(
     processes; long-lived sessions should pass a cache_key so repeat calls
     share one copy."""
     full_key = (cache_key, n_cells, iters) if cache_key is not None else None
-    if full_key is not None and full_key in _IVF_INDEX:
-        return _IVF_INDEX.get(full_key)
+    cache = _ivf_index(emb)
+    if full_key is not None and full_key in cache:
+        return cache.get(full_key)
     emb = emb.persist()
     cents = _kmeans_centroids(emb, n_cells, iters)
     assigned = emb.withColumn("cell", F.expr(_best_cell_sql(cents, "embedding"))).persist()
     assigned.count()  # materialize the index; training cache no longer needed
     emb.unpersist()
     if full_key is not None:
-        _IVF_INDEX.put(full_key, (cents, assigned))
+        cache.put(full_key, (cents, assigned))
     return cents, assigned
 
 
@@ -560,7 +557,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings")).filter(
         F.expr(finite_norm_pred("embedding"))
     )
-    return ivf_topk(emb, cache_key=(spark.sparkContext.applicationId, sf_dir))
+    return ivf_topk(emb, cache_key=sf_dir)
 
 
 # --------------------------------------------------------------------------
@@ -598,8 +595,9 @@ def build_pq_index(
     ADC lookup tables dot the raw float query subvectors against the
     dequantized (cq/1e6) codewords."""
     key = (cache_key, "q", n_cells, iters, PQ_M, PQ_KS) if cache_key is not None else None
-    if key is not None and key in _IVF_INDEX:
-        return _IVF_INDEX.get(key)
+    cache = _ivf_index(emb)
+    if key is not None and key in cache:
+        return cache.get(key)
     dim = len(emb.select("embedding").first()["embedding"])
     if dim % PQ_M != 0:
         raise ValueError(f"embedding dim {dim} not divisible by PQ_M={PQ_M}")
@@ -630,7 +628,7 @@ def build_pq_index(
     embq.unpersist()
     index = (coarse, books, subdim, encoded)
     if key is not None:
-        _IVF_INDEX.put(key, index)
+        cache.put(key, index)
     return index
 
 
@@ -739,7 +737,7 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings")).filter(
         F.expr(finite_norm_pred("embedding"))
     )
-    return ivf_pq_topk(emb, cache_key=(spark.sparkContext.applicationId, sf_dir, "pq"))
+    return ivf_pq_topk(emb, cache_key=(sf_dir, "pq"))
 
 
 # hard-negative mining knobs: top-K negatives per anchor; candidates with

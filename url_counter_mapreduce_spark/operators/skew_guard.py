@@ -46,9 +46,10 @@ Cost of the probe: one aggregation over the posting-size frame plus a
 is EAGER: resolving ``cap="auto"`` runs a Spark job during DataFrame
 CONSTRUCTION (before any action on the returned frame), because the cap
 decision changes the plan being built. Two disciplines bound that cost:
-every call site sits inside (or feeds) a SessionFrameCache build, and the
-decision itself is memoized per ``cache_key`` (below), so repeated
-construction of the same operator in one session probes exactly once. At
+every call site sits inside (or feeds) a persisted ledger artifact's
+build, and the decision itself is memoized per ``cache_key`` in the
+session's ledger (below), so repeated construction of the same operator
+in one session probes exactly once. At
 100 TB that is one cheap linear pass bought against a potential P²-row
 shuffle.
 
@@ -65,6 +66,8 @@ from typing import Hashable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import ledger
 
 log = logging.getLogger(__name__)
 
@@ -83,15 +86,14 @@ AUTO_BLOCK_CAP = 8
 # type alias for the knob: None (off), int (manual), or "auto"
 CapSpec = int | str | None
 
-# memoized "auto" resolutions: cache_key → the full decision entry (cap,
-# engaged, measured numbers). Keys embed the applicationId (same
-# convention as SessionFrameCache), so a stale decision is never returned
-# across sessions. Bounded by _DECISION_MAX. The whole entry is kept —
-# not just the cap — so a cache hit can still append to the decision log
-# (ADVICE r11: a memoized hit that skipped the log made a later query's
-# cap engagement invisible to the gate harness, misattributing a
-# cap-induced oracle diff as a plain MISMATCH).
-_DECISION_CACHE: dict[Hashable, dict] = {}
+# memoized "auto" resolutions: the ledger memo "skew-decisions" of the
+# session that probed, cache_key → the full decision entry (cap, engaged,
+# measured numbers), so a decision never outlives or crosses its session.
+# Bounded by _DECISION_MAX. The whole entry is kept — not just the cap —
+# so a cache hit can still append to the decision log (ADVICE r11: a
+# memoized hit that skipped the log made a later query's cap engagement
+# invisible to the gate harness, misattributing a cap-induced oracle diff
+# as a plain MISMATCH).
 _DECISION_MAX = 64
 
 # chronological record of every resolution this session, newest last —
@@ -115,9 +117,9 @@ def pop_decisions() -> list[dict]:
     return out
 
 
-def clear_decision_cache() -> None:
-    """Drop memoized resolutions and the decision record (tests)."""
-    _DECISION_CACHE.clear()
+def clear_decision_cache(spark) -> None:
+    """Drop ``spark``'s memoized resolutions and the decision record (tests)."""
+    ledger.of(spark).memo.pop("skew-decisions", None)
     _DECISION_LOG.clear()
 
 
@@ -150,17 +152,18 @@ def resolve_cap(
     run records exactly what was done and why.
 
     NB the probe is an EAGER Spark job (see module docstring). Pass
-    ``cache_key`` — conventionally ``(applicationId, sf_dir, name)`` plus
-    any parameters that change the sizes frame — to memoize the decision:
-    the probe then runs at most once per key per session.
+    ``cache_key`` — conventionally ``(name, sf_dir)`` plus any parameters
+    that change the sizes frame — to memoize the decision: the probe then
+    runs at most once per key per session.
     """
     if cap != "auto":
         return cap  # None or a hand-set int
-    if cache_key is not None and cache_key in _DECISION_CACHE:
+    memo = ledger.of(sizes.sparkSession).memo.setdefault("skew-decisions", {})
+    if cache_key is not None and cache_key in memo:
         # Memoized hit: skip the probe job but STILL log the decision, so
         # every query that runs under this cap gets its own engagement
         # entry for the gate harness to drain (ADVICE r11 medium).
-        hit = _DECISION_CACHE[cache_key]
+        hit = memo[cache_key]
         _record({**hit, "cached": True})
         return hit["cap"]
     row = sizes.agg(
@@ -182,9 +185,9 @@ def resolve_cap(
     }
     _record(entry)
     if cache_key is not None:
-        if len(_DECISION_CACHE) >= _DECISION_MAX:
-            _DECISION_CACHE.clear()  # tiny dict of scalars; wholesale reset
-        _DECISION_CACHE[cache_key] = entry
+        if len(memo) >= _DECISION_MAX:
+            memo.clear()  # tiny dict of scalars; wholesale reset
+        memo[cache_key] = entry
     if not engaged:
         log.info(
             "skew guard %s: fan-out %d pairs / %d rows (budget %d×) — cap stays off",

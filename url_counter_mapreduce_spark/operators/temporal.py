@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..ledger import checkpoint
 from ..tables import load_table
 
 SESSION_GAP_MIN = 30
@@ -580,7 +581,7 @@ def revenue_mom_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rev_cents"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .localCheckpoint(eager=False)  # fans into self-joins below
+        .transform(checkpoint, eager=False)  # fans into self-joins below
     )
     prev = m.select(
         F.expr("add_months(month_ts, 1)").cast("timestamp").alias("month_ts"),
@@ -637,7 +638,7 @@ def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     filled = (
         spine.join(hourly, ["et", "b"], "left")
         .select("et", "b", F.coalesce("n", F.lit(0)).cast("long").alias("n"))
-        .localCheckpoint(eager=False)  # fans into one pair join per lag
+        .transform(checkpoint, eager=False)  # fans into one pair join per lag
     )
     lagged = None
     for k in AC_LAGS:
@@ -730,7 +731,7 @@ def user_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ELSE CAST(floor(value * 100 + 0.5) AS BIGINT) END"
             )
         ).alias("m_metric"),
-    ).localCheckpoint(eager=False)  # boundary agg + assignment share it
+    ).transform(checkpoint, eager=False)  # boundary agg + assignment share it
     bounds = u.agg(
         *[
             F.expr(f"percentile({m}_metric, {q})").alias(f"{m}q{int(q * 100)}")
@@ -1104,7 +1105,7 @@ def events_user_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     daily = mdu.groupBy("month", "day").agg(
         F.count(F.lit(1)).cast("long").alias("dau")

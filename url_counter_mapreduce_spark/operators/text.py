@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ledger import checkpoint
 from ..tables import load_table
 
 _TOKS = "filter(split(text, ' '), x -> x != '')"
@@ -550,7 +551,7 @@ def lm_bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         spread(docs.select("doc_id", "text"))
         .select("doc_id", F.expr(_TOKS).alias("toks"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     docbig = (
         toks.filter(F.expr("size(toks) >= 2"))
@@ -566,13 +567,13 @@ def lm_bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "b.w1", F.expr("concat_ws(' ', b.w1, b.w2)").alias("bigram"))
         .groupBy("doc_id", "w1", "bigram")
         .agg(F.count(F.lit(1)).alias("n_occ"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     uni = (
         toks.select(F.explode("toks").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c_uni"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     # the one eager pass: materializes toks + uni and reads V off the
     # materialized unigram aggregate (no separate re-aggregation job)
@@ -1120,7 +1121,7 @@ def lm_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         spread(docs)
         .select("doc_id", F.expr(_DECILE).alias("decile"), F.expr(_TOKS_SAFE).alias("toks"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     train = toks.filter(F.col("decile") < LM_SB_TRAIN_DECILES)
     score = toks.filter(F.col("decile") >= LM_SB_TRAIN_DECILES)
@@ -1129,7 +1130,7 @@ def lm_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         train.select(F.explode("toks").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     n_tokens = tr_uni.agg(F.sum("c1")).collect()[0][0] or 1
     tr_bi = (
@@ -1141,7 +1142,7 @@ def lm_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("big")
         .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     tr_tri = (
         train.filter(F.expr("size(toks) >= 3"))
@@ -1228,12 +1229,12 @@ def bigram_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once and feeds all four consumers (the recompute-fanout
     rule)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.expr(_TOKS_SAFE).alias("toks")).localCheckpoint(eager=False)
+    toks = docs.select(F.expr(_TOKS_SAFE).alias("toks")).transform(checkpoint, eager=False)
     unis = (
         toks.select(F.explode("toks").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c_w"))
-        .localCheckpoint(eager=False)  # reused: N scalar + two joins
+        .transform(checkpoint, eager=False)  # reused: N scalar + two joins
     )
     bigs = (
         toks.filter(F.expr("size(toks) >= 2"))
@@ -1247,7 +1248,7 @@ def bigram_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p.a", "p.b")
         .agg(F.count(F.lit(1)).alias("c_ab"))
-        .localCheckpoint(eager=False)  # reused: M scalar + ranking
+        .transform(checkpoint, eager=False)  # reused: M scalar + ranking
     )
     n_uni = int(unis.agg(F.sum("c_w")).collect()[0][0] or 1)
     m_big = int(bigs.agg(F.sum("c_ab")).collect()[0][0] or 1)
@@ -1885,7 +1886,7 @@ def lm_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         spread(docs.select("doc_id", "text"))
         .select("doc_id", F.expr(_TOKS).alias("toks"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     docbig = (
         toks.filter(F.expr("size(toks) >= 2"))
@@ -1901,13 +1902,13 @@ def lm_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "b.w1", F.expr("concat_ws(' ', b.w1, b.w2)").alias("bigram"))
         .groupBy("doc_id", "w1", "bigram")
         .agg(F.count(F.lit(1)).alias("n_occ"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     uni = (
         toks.select(F.explode("toks").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c_uni"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     vocab_v = uni.count()
     big = docbig.groupBy("bigram").agg(F.sum("n_occ").alias("c_big"))
@@ -1975,7 +1976,7 @@ def token_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(F.expr(_TOKS_SAFE).alias("toks")).localCheckpoint(eager=False)
+    toks = docs.select(F.expr(_TOKS_SAFE).alias("toks")).transform(checkpoint, eager=False)
     big = (
         toks.filter(F.expr("size(toks) >= 2"))
         .select(
@@ -1989,7 +1990,7 @@ def token_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("b.w1", "b.bigram")
         .agg(F.count(F.lit(1)).alias("c_big"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     ctx = big.groupBy("w1").agg(F.sum("c_big").alias("c_ctx"))
     lnm = "CAST(floor(ln(CAST({c} AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)"

@@ -15,7 +15,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import ckpt_tracker
+from . import ledger
 from .operators import core, dedup, index_store, multimodal, relational, similarity, text
 from .session import prep
 from .streaming import event_count
@@ -29,15 +29,29 @@ ORACLES: dict[str, str | None] = {}
 
 
 def _register(name: str, fn: QueryFn, sql: str | None) -> None:
+    """Register ``fn`` under ``name``. The registered builder preps the
+    session and builds while holding the session ledger's lock, as one
+    invocation keyed by ``(name, sf_dir)``.
+
+    Contracts (ledger.py has the details):
+
+    - Stale handles: building a query releases the local checkpoints of
+      the previous build of the same ``(name, sf_dir)``, so an action on a
+      frame from that previous call that reads them raises
+      ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``; frames of other queries, and
+      of the same query over another sf_dir, stay usable. Build, run,
+      then discard — and rebuild rather than re-run an old handle.
+    - One query at a time: builds on one session are serialized by the
+      lock; running the built frames concurrently is fine. A Structured
+      Streaming foreachBatch callback must not call a registered builder
+      (the build that started the stream holds the lock).
+    """
+
     def wrapped(
         spark: SparkSession, sf_dir: str, _fn: QueryFn = fn, _name: str = name
     ) -> DataFrame:
         prep(spark)
-        # releases the PREVIOUS same-(query, sf_dir) invocation's
-        # localCheckpoint blocks, then records this invocation's — repeat
-        # calls in one session stay flat instead of accumulating dead
-        # checkpoint storage (r13 "Not yet optimized"; guide §5)
-        with ckpt_tracker.track_invocation(spark, (_name, sf_dir)):
+        with ledger.of(spark).invocation((_name, sf_dir)):
             return _fn(spark, sf_dir)
 
     wrapped.__name__ = name

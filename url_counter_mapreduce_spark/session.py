@@ -26,6 +26,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import ledger
+
 # AQE coalescing policy (optimization round 13): keep the Spark default,
 # parallelismFirst=true. An earlier commit this round flipped it to false on
 # the strength of a 12-query sf0.01 sample, reasoning that honoring the 64 MB
@@ -96,16 +98,16 @@ def prep(spark: SparkSession) -> SparkSession:
     this package to executor Python workers (addPyFile) so UDF closures
     resolve regardless of the driver process's cwd/sys.path.
 
-    Memoized per session: every registry builder calls prep() (the driver
-    invokes builders one at a time against its own session), so without
-    the guard a 200+-query gate pays five py4j conf round-trips per call
-    for confs that are already set — measurable aggregate drift on a
-    suite dominated by sub-second queries. All in-package conf mutations
-    outside prep() snapshot/restore their keys (join_bloom_filtered,
-    sql_scripting_surface), so re-applying is never needed within one
-    session.
+    Memoized in the session's ledger: every registry builder calls prep()
+    (the driver invokes builders one at a time against its own session),
+    so without the guard a 200+-query gate pays five py4j conf round-trips
+    per call for confs that are already set — measurable aggregate drift
+    on a suite dominated by sub-second queries. Every other in-package
+    conf change goes through ledger.scoped_conf, which restores its keys,
+    so re-applying is never needed within one session.
     """
-    if getattr(spark, "_spark_graft_prepped", False):
+    memo = ledger.of(spark).memo
+    if memo.get("prepped"):
         return spark
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -133,12 +135,13 @@ def prep(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # immutable under some configs; harmless
     _ship_package(spark)
-    spark._spark_graft_prepped = True
+    memo["prepped"] = True
     return spark
 
 
 def _ship_package(spark: SparkSession) -> None:
-    if getattr(spark, "_spark_graft_shipped", False):
+    memo = ledger.of(spark).memo
+    if memo.get("shipped"):
         return
     import hashlib
     import shutil
@@ -165,4 +168,4 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:
         pass  # e.g. Spark Connect without SparkContext; closures are self-contained anyway
-    spark._spark_graft_shipped = True
+    memo["shipped"] = True

@@ -3,7 +3,7 @@
 DISTRIBUTED text writer (repartition(N, bucket) puts all of a bucket's
 rows in one task), then concatenate each bucket's part files to its final
 fixed name. One implementation so the staging/concat lifecycle can't
-drift between the layouts that use it (the _cached_signatures lesson)."""
+drift between the layouts that use it."""
 
 from __future__ import annotations
 

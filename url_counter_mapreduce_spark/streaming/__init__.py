@@ -4,10 +4,10 @@ X14). The reference is batch-only (§2.2); these are capability extensions."""
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
+
+from ..ledger import scoped_conf
 
 
-@contextmanager
 def stream_shuffle_partitions(spark):
     """Scope a stream start/drain to the STREAM state-partition count.
 
@@ -35,18 +35,19 @@ def stream_shuffle_partitions(spark):
     hundreds/thousands; resumed checkpoints keep their recorded count
     regardless, so the knob can never corrupt existing state.
 
-    Restores the previous session value on exit so surrounding BATCH
-    queries keep their AQE initial-partition setting.
+    Restores the previous session value on exit (ledger.scoped_conf) so
+    surrounding BATCH queries keep their AQE initial-partition setting.
+    The scope holds the session lock while the stream drains; the
+    foreachBatch callbacks it runs must not take it.
 
     Deployment sizing formula and first-start caveats: docs/USAGE.md §4
     ("Production MUST-SET").
     """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"),
+    return scoped_conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": os.environ.get(
+                "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"
+            )
+        },
     )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)

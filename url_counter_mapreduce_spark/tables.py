@@ -15,6 +15,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import ledger
+
 TABLES = (
     "region",
     "nation",
@@ -116,15 +118,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     fp = file_fingerprint(path) if os.path.exists(path) else None
-    # Per-session lazy-relation memo, stored ON the session object so its
-    # lifetime is exactly the session's — a dropped session takes its memo
-    # with it, with no module-level registry to leak (ADVICE r13). Repeat
-    # calls return the identical lazy frame (~0 ms vs ~20 ms to rebuild
-    # the reader + driver-side file index). One slot per (sf_dir, name)
-    # with the fingerprint inside: a regenerated fixture at the same path
-    # evicts its predecessor rather than piling up beside it.
-    memo = spark.__dict__.setdefault("_spark_graft_table_memo", {})
-    hit = memo.get((sf_dir, name))
+    # Per-session lazy-relation memo in the session's ledger, so a dropped
+    # session takes it along (ADVICE r13). Repeat calls return the
+    # identical lazy frame (~0 ms vs ~20 ms to rebuild the reader +
+    # driver-side file index). One slot per (sf_dir, name) with the
+    # fingerprint inside: a regenerated fixture at the same path evicts
+    # its predecessor rather than piling up beside it.
+    memo = ledger.of(spark).memo
+    hit = memo.get(("table", sf_dir, name))
     if hit is not None and hit[0] == fp and fp is not None:
         return hit[1]
     cached = _TABLE_SCHEMAS.get((sf_dir, name))
@@ -137,7 +138,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = _normalize_events_ts(df)
     if fp is not None:
-        memo[(sf_dir, name)] = (fp, df)
+        memo[("table", sf_dir, name)] = (fp, df)
     return df
 
 
@@ -181,29 +182,18 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-# SparkSession → sf_dir whose views are currently registered; re-reading
-# and re-analyzing 10 parquet footers per spark.sql query call is pure
-# constant overhead once the views exist. Keyed on the SESSION OBJECT
-# (weakly, so a dropped session frees its slot): temp views are
-# session-scoped, and sibling sessions from spark.newSession() share an
-# applicationId but NOT a view catalog, so an appId key would silently
-# skip registration for them.
-_VIEWS_REGISTERED: "weakref.WeakKeyDictionary" = None  # set below
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` works too.
-    Idempotent per (session, sf_dir); switching sf_dir re-registers."""
-    global _VIEWS_REGISTERED
-    if _VIEWS_REGISTERED is None:
-        import weakref
-
-        _VIEWS_REGISTERED = weakref.WeakKeyDictionary()
-    if _VIEWS_REGISTERED.get(spark) == sf_dir:
+    Idempotent per (session, sf_dir); switching sf_dir re-registers.
+    The registered sf_dir is a ledger memo: temp views are per session,
+    and so is the ledger (sibling sessions from ``spark.newSession()``
+    share an applicationId but not a view catalog)."""
+    memo = ledger.of(spark).memo
+    if memo.get("views") == sf_dir:
         return
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _VIEWS_REGISTERED[spark] = sf_dir
+    memo["views"] = sf_dir
 
 
 class _LocalRowsFallback(Exception):
