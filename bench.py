@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -455,7 +456,7 @@ def _paired_main(ref: str, only: list[str] | None = None) -> None:
             # different protocol (ADVICE r12)
             with open(os.path.join(here, "BENCH_PAIRED.json"), "w") as fh:
                 json.dump(full, fh, indent=1, sort_keys=True)
-        med_ratio = sorted(ratios.values())[len(ratios) // 2] if ratios else -1.0
+        med_ratio = statistics.median(ratios.values()) if ratios else -1.0
         print(
             json.dumps(
                 {
@@ -488,7 +489,7 @@ def _conf_paired_main(key: str, val_a: str, val_b: str, only: list[str] | None =
     are not — spark.conf.set would raise)."""
     spark = get_spark("spark-graft-bench-confpaired")
     spark.sparkContext.setLogLevel("ERROR")
-    # global warmup also runs prep() once (memoized), so its env-derived
+    # global warmup also runs prep() once (memoized), so its
     # conf.set of this key cannot override the per-arm values below
     QUERIES["url_topk"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
@@ -523,7 +524,6 @@ def _conf_paired_main(key: str, val_a: str, val_b: str, only: list[str] | None =
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    srt = sorted(ratios.values())
     out = {
         "metric": "conf_paired_ab",
         "conf_key": key,
@@ -535,7 +535,7 @@ def _conf_paired_main(key: str, val_a: str, val_b: str, only: list[str] | None =
         "n": len(ratios),
         "total_a": round(sum(a_t.values()), 4),
         "total_b": round(sum(b_t.values()), 4),
-        "median_ratio_b_over_a": srt[len(srt) // 2] if srt else -1.0,
+        "median_ratio_b_over_a": statistics.median(ratios.values()) if ratios else -1.0,
         "queries_a": a_t,
         "queries_b": b_t,
         "ratios_b_over_a": ratios,
@@ -630,20 +630,48 @@ def main() -> None:
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    total = round(sum(timings.values()), 4)
-
-    # regression guard: flag queries >1.5× slower than the last recorded
-    # round (ignoring sub-0.2s noise); informational, emitted in the JSON.
-    # Each flag carries the load the row was measured under and a `noisy`
-    # marker (load1 > 1.5× this run's median per-query load1) — the
-    # mechanized quiet-window annotation (VERDICT r10 item 6): a flag on a
-    # noisy row is host drift until reproduced, a flag on a clean row is
-    # signal.
     baseline_file, prev = _previous_round_timings()
-    loads = sorted(
-        s["load1"] for s in spreads.values() if s.get("load1", -1.0) >= 0
-    )
-    run_median_load = loads[len(loads) // 2] if loads else -1.0
+    full, line = _summarize(timings, spreads, prev, sf_val, baseline_file)
+    # full per-query map: an EARLIER stdout line + a committed file. The
+    # driver captures only the last ~2000 chars of stdout, so the FINAL line
+    # must stay well under that (round 4 lost its perf signal to exactly this
+    # truncation — BENCH_r04.json parsed:null).
+    print(json.dumps(full))
+    if sf_val == 0.1:
+        here = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(here, "BENCH_FULL.json"), "w") as fh:
+            json.dump(full, fh, indent=1, sort_keys=True)
+    print(line)
+    spark.stop()
+
+
+SUMMARY_ROWS = 15  # slowest rows on the final line, besides every regressed row
+SUMMARY_MAX_CHARS = 1000  # hard guarantee: never outgrow the tail capture
+
+
+def _summarize(
+    timings: dict[str, float],
+    spreads: dict[str, dict],
+    prev: dict[str, float],
+    sf_val,
+    baseline_file: str | None,
+) -> tuple[dict, str]:
+    """The run's full JSON record and its one-line summary.
+
+    Regression guard: flag queries >1.5× slower than the last recorded
+    round (ignoring sub-0.2s noise); informational, emitted in the JSON.
+    Each flag carries the load the row was measured under and a `noisy`
+    marker (load1 > 1.5× this run's median per-query load1) — the
+    mechanized quiet-window annotation (VERDICT r10 item 6): a flag on a
+    noisy row is host drift until reproduced, a flag on a clean row is
+    signal.
+
+    The summary line shows the SUMMARY_ROWS slowest rows plus every
+    regressed row. Past SUMMARY_MAX_CHARS it drops the regression details
+    first, then the fastest rows that did not regress."""
+    total = round(sum(timings.values()), 4)
+    loads = [s["load1"] for s in spreads.values() if s.get("load1", -1.0) >= 0]
+    run_median_load = statistics.median(loads) if loads else -1.0
     regressions: dict[str, dict] = {}
     if prev and sf_val == 0.1:
         for name, t in timings.items():
@@ -672,37 +700,36 @@ def main() -> None:
         "baseline": baseline_file,
         "regressions": regressions,
     }
-    # full per-query map: an EARLIER stdout line + a committed file. The
-    # driver captures only the last ~2000 chars of stdout, so the FINAL line
-    # must stay well under that (round 4 lost its perf signal to exactly this
-    # truncation — BENCH_r04.json parsed:null).
-    print(json.dumps(full))
-    if sf_val == 0.1:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_FULL.json"), "w") as fh:
-            json.dump(full, fh, indent=1, sort_keys=True)
 
-    slowest5 = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
-    )
+    slowest = sorted(timings, key=timings.get, reverse=True)
+    shown = [n for i, n in enumerate(slowest) if i < SUMMARY_ROWS or n in regressions]
     summary = {
         "metric": "headline_queries_total_sec",
         "value": total,
         "unit": "sec",
         "sf": sf_val,
         "n_queries": len(timings),
-        "queries": slowest5,
+        "queries": {},
         "queries_truncated": True,
         "queries_file": "BENCH_FULL.json",
+        "n_regressions": len(regressions),
         "regressions": regressions,
     }
-    line = json.dumps(summary)
-    if len(line) > 1000:  # hard guarantee: never outgrow the tail capture
-        summary.pop("regressions", None)
-        summary["queries"] = dict(list(slowest5.items())[:3])
-        line = json.dumps(summary)
-    print(line)
-    spark.stop()
+
+    def render() -> str:
+        summary["queries"] = {n: timings[n] for n in shown}
+        summary["queries_truncated"] = len(shown) < len(timings)
+        return json.dumps(summary)
+
+    line = render()
+    if len(line) > SUMMARY_MAX_CHARS:
+        summary.pop("regressions")
+        line = render()
+    while len(line) > SUMMARY_MAX_CHARS and shown:
+        unregressed = [n for n in shown if n not in regressions]
+        shown.remove((unregressed or shown)[-1])
+        line = render()
+    return full, line
 
 
 if __name__ == "__main__":

@@ -4,6 +4,7 @@ stale-handle and two-thread contracts, and a source guard that keeps every
 piece of session state in the ledger. The artifact LRU itself is covered
 with fakes in tests/test_session_cache.py."""
 
+import ast
 import hashlib
 import inspect
 import io
@@ -17,10 +18,15 @@ import pytest
 from tests.conftest import REPO_ROOT, SF_SMOKE
 from url_counter_mapreduce_spark import QUERIES, clear_caches
 from url_counter_mapreduce_spark.ledger import scoped_conf
+from url_counter_mapreduce_spark.session import SQL_CONFS, prep
 
 
-def _persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted(spark) -> set[int]:
+    """Ids of the session's persisted RDDs. The tests compare id sets, not
+    counts: an RDD some earlier test left unreferenced can be released by
+    the context cleaner at any moment, which moves a count but not the
+    ids a query added."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
 def _hash(df) -> str:
@@ -45,24 +51,25 @@ def test_local_checkpoint_is_not_patched(spark):
 
 def test_clear_caches_releases_every_family(spark):
     """host_scc fills the SCC-label family and dedup_image_dhash_pairs the
-    perceptual-fingerprint family; clear_caches returns the session's
-    persistent-RDD count to where it was before either call."""
+    perceptual-fingerprint family; clear_caches releases every RDD the
+    two calls persisted."""
     clear_caches(spark)
     before = _persisted(spark)
     QUERIES["host_scc"](spark, SF_SMOKE).count()
     QUERIES["dedup_image_dhash_pairs"](spark, SF_SMOKE).count()
-    assert _persisted(spark) > before
+    assert _persisted(spark) - before
     clear_caches(spark)
-    assert _persisted(spark) == before
+    assert not _persisted(spark) - before
 
 
 def test_repeat_calls_release_superseded_checkpoints(spark):
     """Re-invoking a query releases the checkpoints of its previous
-    invocation: the persistent-RDD count stays flat across calls."""
+    invocation: the number of RDDs the calls hold persisted stays flat."""
+    base = _persisted(spark)
     counts = []
     for _ in range(3):
         QUERIES["host_communities_lpa"](spark, SF_SMOKE).count()
-        counts.append(_persisted(spark))
+        counts.append(len(_persisted(spark) - base))
     assert counts[2] == counts[0], counts
 
 
@@ -141,6 +148,20 @@ def test_two_threads_run_queries_on_one_session(spark):
     assert {k: spark.conf.get(k) for k in keys} == before
 
 
+def test_prep_gives_a_plain_session_the_conf_table(spark):
+    """A session built elsewhere (here: one whose SQL confs were reset to
+    Spark's defaults) reads every SQL_CONFS value once prep() has run."""
+    plain = spark.newSession()
+    for key in SQL_CONFS:
+        plain.conf.unset(key)
+    assert {k: plain.conf.get(k, None) for k in SQL_CONFS} != SQL_CONFS
+    prep(plain)
+    assert {k: plain.conf.get(k, None) for k in SQL_CONFS} == SQL_CONFS
+    assert plain.conf.get("spark.sql.shuffle.partitions") == os.environ.get(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
+    )
+
+
 # -- source guard -------------------------------------------------------------
 
 PKG = os.path.join(REPO_ROOT, "url_counter_mapreduce_spark")
@@ -192,4 +213,61 @@ def test_session_state_lives_only_in_the_ledger():
         for i, line in enumerate(_code_lines(src)):
             if "applicationId" in line and _APP_ID_ALLOWED.get(rel, "\0") not in raw[i]:
                 hits.append(f"{rel}:{i + 1}: applicationId outside a scratch-dir name")
+    assert not hits, hits
+
+
+TOOLS = os.path.join(REPO_ROOT, "tools")
+# a session is built in session.get_spark only; drive_contract.py imitates
+# the driver's plain session on purpose
+_BUILDER = re.compile(r"\.builder\b")
+_BUILDER_ALLOWED = {"url_counter_mapreduce_spark/session.py", "tools/drive_contract.py"}
+# deployment settings; every tuning conf lives in session.SQL_CONFS
+_ENV_ALLOWED = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_SCRATCH_DIR",
+}
+
+
+def test_sessions_are_built_only_by_get_spark():
+    sources = [(f"url_counter_mapreduce_spark/{rel}", src) for rel, src in _package_sources()]
+    for f in sorted(os.listdir(TOOLS)):
+        if f.endswith(".py"):
+            with open(os.path.join(TOOLS, f)) as fh:
+                sources.append((f"tools/{f}", fh.read()))
+    hits = [
+        f"{rel}:{src.count(chr(10), 0, m.start()) + 1}"
+        for rel, src in sources
+        if rel not in _BUILDER_ALLOWED
+        for m in _BUILDER.finditer(src)
+    ]
+    assert not hits, hits
+
+
+def _env_reads(tree: ast.AST):
+    """(line, setting name) for every os.environ / os.getenv use; the name
+    is None where the use is not a read of one constant name."""
+    parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv")):
+            continue
+        up = parents[node]
+        if isinstance(up, ast.Attribute) and up.attr == "get":
+            up = parents[up]  # os.environ.get(...): the call
+        if isinstance(up, ast.Subscript):
+            arg = up.slice
+        else:
+            arg = up.args[0] if isinstance(up, ast.Call) and up.args else None
+        yield node.lineno, arg.value if isinstance(arg, ast.Constant) else None
+
+
+def test_package_reads_only_deployment_env_settings():
+    hits = [
+        f"{rel}:{line}: {key}"
+        for rel, src in _package_sources()
+        for line, key in _env_reads(ast.parse(src))
+        if key not in _ENV_ALLOWED
+    ]
     assert not hits, hits

@@ -101,6 +101,16 @@ def test_reserved_or_spaced_column_names(spark):
     assert got.collect()[0][0] == 1
 
 
+def test_name_list_with_spaced_and_quoted_names(spark):
+    rows = [(1, "a", 2.5), (2, None, 0.5)]
+    names = ["two words", "sel`ect", "offset"]
+    got = local_rows_df(spark, rows, names)
+    want = spark.createDataFrame(rows, names)
+    assert "LocalRelation" in got._jdf.queryExecution().optimizedPlan().toString()
+    assert _names_types(got) == _names_types(want)
+    assert _rows_set(got) == _rows_set(want)
+
+
 def test_escaped_string_literals_session_falls_back(spark):
     old = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")

@@ -4,8 +4,10 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== leg 1: full suite at sf0.001 (fast) =="
+echo "== leg 1: full suite at sf0.001 (fast), plus the benchmark's own tests"
+echo "   (tools/stage_profile.py imports perfbench/layers.py) =="
 python -m pytest tests/ -q
+python -m pytest perfbench/tests -q
 
 echo "== leg 2: oracle parity at sf0.01 (the driver's scale) =="
 SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q

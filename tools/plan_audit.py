@@ -12,14 +12,13 @@ tests/test_plans.py enforces, here visible per query.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from url_counter_mapreduce_spark import QUERIES, get_spark  # noqa: E402
+from url_counter_mapreduce_spark.plans import explain_str  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 # deliberate exact brute-force baseline, and the recall harnesses that
@@ -31,10 +30,7 @@ BNL_ALLOWED = set(BNL_ALLOWANCE)
 
 
 def plan_of(spark, name: str) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        QUERIES[name](spark, SF_DIR).explain("formatted")
-    return buf.getvalue()
+    return explain_str(QUERIES[name](spark, SF_DIR))
 
 
 def main() -> None:

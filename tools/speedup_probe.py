@@ -33,21 +33,11 @@ QUERIES = os.environ.get(
 
 _CHILD = r"""
 import json, sys, time
-cores, sf_dir, names = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
-from pyspark.sql import SparkSession
-spark = (
-    SparkSession.builder.master(f"local[{cores}]")
-    .appName(f"speedup-{cores}")
-    .config("spark.sql.shuffle.partitions", max(int(cores), 2))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.driver.memory", "8g")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+sf_dir, names = sys.argv[1], sys.argv[2].split(",")
 sys.path.insert(0, %(repo)r)
-from url_counter_mapreduce_spark import QUERIES
-from url_counter_mapreduce_spark.session import prep
-prep(spark)
+from url_counter_mapreduce_spark import QUERIES, get_spark
+spark = get_spark("speedup-probe")
+spark.sparkContext.setLogLevel("ERROR")
 # warmup: amortize codegen/scan setup so the measured runs see a warm JVM
 QUERIES["url_count"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 out = {}
@@ -65,9 +55,16 @@ spark.stop()
 
 
 def run(cores: int) -> dict[str, float]:
-    env = dict(os.environ)
+    # the master is fixed at JVM startup: one child per core count, its
+    # session built by get_spark() from these deployment settings
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS=str(cores),
+        SPARK_GRAFT_SHUFFLE_PARTITIONS=str(max(cores, 2)),
+        SPARK_GRAFT_DRIVER_MEM="8g",
+    )
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD % {"repo": REPO}, str(cores), SF_DIR, ",".join(QUERIES)],
+        [sys.executable, "-c", _CHILD % {"repo": REPO}, SF_DIR, ",".join(QUERIES)],
         capture_output=True,
         text=True,
         env=env,

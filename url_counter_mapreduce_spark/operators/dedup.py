@@ -83,25 +83,6 @@ def _shingles(df: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """MinHash signature: mh_j = min over shingles of the first 16 hex chars
-    of md5("<j>:<shingle>") — a lexicographic min over a 64-bit hash space,
-    identical in Spark and DuckDB.
-
-    Formulated as explode → groupBy with K min-aggregates rather than
-    array_min(transform(...)): higher-order lambdas evaluate interpreted,
-    while explode + min is whole-stage-codegen'd with map-side partial
-    aggregation (measured ~5× faster; the shuffle carries one K-column row
-    per doc per partition, negligible at any scale)."""
-    exploded = _shingles(docs).select("doc_id", F.explode("shingles").alias("s"))
-    return exploded.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(f"substring(md5(concat('{j}:', s)), 1, 16)")).alias(f"mh{j}")
-            for j in range(MINHASH_K)
-        ]
-    )
-
-
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature table (doc_id, mh0..mh7) — the verifiable
     intermediate of the near-dup pipeline. E[fraction of equal minhashes]
@@ -115,7 +96,14 @@ def _signatures_with_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, mh0..mh7, shingles) in ONE aggregation pass: the minhash
     mins and a collect_set rebuild of the shingle set share the same
     explode + groupBy, so the verify step needs no extra join against a
-    recomputed shingle table (which would re-scan and re-hash everything)."""
+    recomputed shingle table (which would re-scan and re-hash everything).
+
+    mh_j = min over shingles of the first 16 hex chars of
+    md5("<j>:<shingle>") — a lexicographic min over a 64-bit hash space,
+    identical in Spark and DuckDB. Formulated as explode → groupBy with K
+    min-aggregates rather than array_min(transform(...)): higher-order
+    lambdas evaluate interpreted, while explode + min is whole-stage-codegen'd
+    with map-side partial aggregation (measured ~5× faster)."""
     exploded = _shingles(docs).select("doc_id", F.explode("shingles").alias("s"))
     return exploded.groupBy("doc_id").agg(
         *[
@@ -195,23 +183,6 @@ def _band_keys_8x1(sigs: DataFrame, carry: list[str]) -> DataFrame:
         ).alias("bk"),
     )
     return bands.select("doc_id", *carry, "bk.band", "bk.key")
-
-
-def minhash_candidate_pairs(docs: DataFrame) -> DataFrame:
-    """LSH banding: 4 bands of 2 minhashes; docs sharing any band key are
-    candidates. Returns distinct (doc_a, doc_b) with doc_a < doc_b.
-
-    The band join is an equi-join on (band, key) — at 100 TB this is a
-    shuffle on short hash keys, never a cross join.
-    """
-    bands = _band_keys(minhash_signatures(docs), carry=[])
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def _jaccard_expr() -> str:
@@ -468,8 +439,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
        families expand via a signature self-join (hamming 0, exactly the
        output), cross-signature sig-pairs expand to their doc cross
        products (also exactly the output). Measured at sf0.1: band-join
-       candidate volume 9.47M (old) → 0.17M sig-level (tools/
-       simhash_band_probe.py, docs/SCALE.md §11.16).
+       candidate volume 9.47M (old) → 0.17M sig-level (docs/SCALE.md
+       §11.16; probe at `git show 4ab1d46:tools/simhash_band_probe.py`).
 
     Recall is unchanged: hamming(x, y) ≤ 3 with 4 bands ⇒ some 16-bit
     block equal (pigeonhole), so the sig-level join sees every qualifying
@@ -1222,81 +1193,6 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("est_jaccard_b1", F.expr(stable_round(est, 6)))
         .filter(F.col("est_jaccard_b1") >= BBIT_MIN_EST)
-    )
-
-
-WINNOW_W = 4  # fingerprint window: expected density 2/(w+1) = 0.4
-
-
-def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every POSITIONAL 3-token
-    k-gram, slide a WINNOW_W-window over the hash sequence, keep each
-    window's minimum — guaranteeing any shared run of >= w+k-1 tokens
-    contributes a shared fingerprint, at expected density 2/(w+1).
-    The local-selection alternative to dedup_substring_spans' exact
-    window mining: ~0.4× the index size with a coverage guarantee.
-
-    Selection tie-break BY SPEC: lexicographic min of (hash, position) —
-    encoded as one fixed-width sortable string so both engines' window
-    MIN agree bit-for-bit. Only complete w-windows select (docs with
-    fewer than w k-grams yield no fingerprints). Output is the per-doc
-    fingerprint census + an order-insensitive XOR signature; the
-    fingerprint sets themselves are the (doc, hash) join surface a MOSS
-    pass would bucket on. One doc_id window shuffle; per-doc cost linear."""
-    from pyspark.sql.window import Window
-
-    from ..functions.vector import stable_round
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.expr("filter(split(coalesce(text, ''), ' '), x -> x != '')").alias("toks")
-    ).filter(F.expr("size(toks) >= 3"))
-    kg = (
-        spread(toks)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 3),"
-                    " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
-                )
-            ).alias("pos", "sh"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.expr(
-                "concat(substring(md5(sh), 1, 16), ':', lpad(CAST(pos AS STRING), 8, '0'))"
-            ).alias("key"),
-        )
-    )
-    wdoc = Window.partitionBy("doc_id")
-    wsel = wdoc.orderBy("pos").rowsBetween(Window.currentRow, WINNOW_W - 1)
-    sel = (
-        kg.withColumn("win_min", F.min("key").over(wsel))
-        .withColumn("max_pos", F.max("pos").over(wdoc))
-        .filter(F.col("pos") <= F.col("max_pos") - (WINNOW_W - 1))
-    )
-    fp = sel.select("doc_id", "max_pos", "win_min").distinct()
-    return (
-        fp.groupBy("doc_id")
-        .agg(
-            (F.max("max_pos") + 1).cast("long").alias("n_kgrams"),
-            F.count(F.lit(1)).cast("long").alias("n_fingerprints"),
-            F.expr(
-                "bit_xor(CAST(conv(substring(win_min, 1, 15), 16, 10) AS BIGINT))"
-            ).alias("fp_sig"),
-        )
-        .select(
-            "doc_id",
-            "n_kgrams",
-            "n_fingerprints",
-            F.expr(stable_round("CAST(n_fingerprints AS DOUBLE) / n_kgrams", 6)).alias(
-                "density"
-            ),
-            "fp_sig",
-        )
     )
 
 

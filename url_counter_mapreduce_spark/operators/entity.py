@@ -57,7 +57,7 @@ SNM_WINDOW = 5
 # posting_cap discipline — deterministic, not a sample), bounding
 # per-block pair cost at cap² while keeping every block represented;
 # members beyond the cap lose their in-block edges (measured recall
-# tradeoff: tools/er_scale_probe.py).
+# tradeoff: docs/SCALE.md, probe at `git show 4ab1d46:tools/er_scale_probe.py`).
 #
 # Default None — NOT "auto", and the round-10 ci leg 3 failure is why:
 # er_golden_record's contract is recall-1 blocking (the match rule

@@ -36,6 +36,10 @@ from ..tables import load_table
 from .dedup import _verified_pairs_for
 
 
+# floor of _fixed_plan_loop's static partition count
+_GRAPH_LOOP_MIN_PARTITIONS = 4
+
+
 def _fixed_plan_loop(spark: SparkSession, anchor: DataFrame):
     """Disable AQE around a fixed-size iteration loop (optimization r14,
     guide §2.2: AQE is per-stage-job overhead on tiny iterations).
@@ -51,12 +55,11 @@ def _fixed_plan_loop(spark: SparkSession, anchor: DataFrame):
     derived from ``anchor`` — the loop's eagerly-checkpointed edge frame,
     whose partition count IS AQE's bytes-derived coalescing decision for
     this graph (1 at sf0.1, ~bytes/64MB at 100 TB) — floored by
-    SPARK_GRAFT_GRAPH_LOOP_PARTITIONS (default 4; a local-mode idle-cores
-    floor that is irrelevant at scale where the derived count dominates).
+    _GRAPH_LOOP_MIN_PARTITIONS (a local-mode idle-cores floor that is
+    irrelevant at scale where the derived count dominates).
     Conf-only and restored on exit: the loop's arithmetic, and therefore
     every oracle hash, is untouched."""
-    floor = int(os.environ.get("SPARK_GRAFT_GRAPH_LOOP_PARTITIONS", "4"))
-    parts = max(anchor.rdd.getNumPartitions(), floor, 1)
+    parts = max(anchor.rdd.getNumPartitions(), _GRAPH_LOOP_MIN_PARTITIONS)
     return scoped_conf(
         spark,
         {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(parts)},

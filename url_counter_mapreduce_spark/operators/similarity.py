@@ -285,10 +285,6 @@ def _best_cell_sql(cents: list, col: str) -> str:
     return f"{_cell_scores_sql(cents, col)}[0].cell"
 
 
-def _probe_cells_sql(cents: list, col: str, nprobe: int) -> str:
-    return f"slice(transform({_cell_scores_sql(cents, col)}, s -> s.cell), 1, {nprobe})"
-
-
 def _l2_cell_scores_sql(cents: list, col: str) -> str:
     """Per-row array of (cell, d) structs sorted best-first under L2,
     centroids as literals. d = |c|² − 2·dot(v, c) — the |v|² term is

@@ -1082,12 +1082,12 @@ _register(
 _register(
     "multimodal_framesample",
     multimodal.multimodal_framesample,
-    """
+    f"""
     WITH f AS (
         SELECT doc_id,
-               (8 + doc_id % 9) AS w,
-               (8 + (doc_id * 3) % 9) AS h,
-               (1 + doc_id % 5) AS nf
+               ({multimodal.GIF_W}) AS w,
+               ({multimodal.GIF_H}) AS h,
+               ({multimodal.GIF_NFRAMES}) AS nf
         FROM documents
     ), s AS (
         SELECT doc_id, w, h,

@@ -40,8 +40,9 @@ from . import ledger
 # max(min(advisory, totalBytes/defaultParallelism), minPartitionSize), so at
 # 100 TB (bytes/parallelism >> 64 MB) it honors the advisory exactly as
 # `false` would, and only drops below it for small shuffles where idle cores
-# cost more than dispatch. Env override kept for A/B measurement.
-_PARALLELISM_FIRST = os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
+# cost more than dispatch. A/B any alternative with
+# `bench.py --conf-paired <key> <a> <b>`.
+_PARALLELISM_FIRST = "true"
 
 # AQE coalescing floor (optimization round 13, guide §2.5's "bytes are a bad
 # proxy for CPU-dense work" in its mildest form). With parallelismFirst=true
@@ -57,50 +58,64 @@ _PARALLELISM_FIRST = os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
 # 64 MB advisory (bytes/parallelism >> any floor); the floor only bites when
 # a shuffle is small relative to the cluster — exactly when idle cores cost
 # more than small fetches.
-_AQE_MIN_PARTITION_SIZE = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k")
+_AQE_MIN_PARTITION_SIZE = "256k"
+
+# The one table of SQL confs every session runs under: get_spark() builds
+# with it and prep() sets it at runtime on a session someone else built.
+# (events.parquet's TIMESTAMP(NANOS) column needs no conf: tables.load_table
+# branches on the observed ts dtype, covering both the native NTZ read of
+# Spark >= 4.1 and legacy nanosAsLong sessions.)
+SQL_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": _PARALLELISM_FIRST,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": _AQE_MIN_PARTITION_SIZE,
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # InferFiltersFromGenerate synthesizes size(e)>0 pre-filters for every
+    # explode; with computed arrays (shingles, token lists) the filter
+    # inlines the whole array expression below the exchange and re-evaluates
+    # it per row on the scan side (measured 5× slowdown on the MinHash
+    # pipeline). Our exploded arrays are non-empty by construction.
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+}
 
 
-def get_spark(app_name: str = "spark-graft", shuffle_partitions: int | None = None) -> SparkSession:
+def _shuffle_partitions() -> str:
+    return os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+
+
+def get_spark(app_name: str = "spark-graft") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Spark-default coalescing policy; see the module comment above for
-        # why the bytes-first variant (false) regressed the full bench
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", _PARALLELISM_FIRST)
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", _AQE_MIN_PARTITION_SIZE)
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        .config("spark.sql.shuffle.partitions", _shuffle_partitions())
+        .config(map=SQL_CONFS)
     )
     return builder.getOrCreate()
 
 
 def prep(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable configs to an externally-created session.
+    """Apply SQL_CONFS and the shuffle partition count to an
+    externally-created session.
 
     The driver harness creates its own SparkSession and hands it to
     ``__spark_entry__.entry``/``queries()`` callables; those can't choose
-    JVM-startup configs, but the semantics-relevant ones (timezone, AQE,
-    shuffle partitions) are runtime-settable and applied here. Also ships
-    this package to executor Python workers (addPyFile) so UDF closures
-    resolve regardless of the driver process's cwd/sys.path.
+    JVM-startup configs, but every conf in SQL_CONFS is runtime-settable,
+    so a plain session runs under the same confs as get_spark()'s. Also
+    ships this package to executor Python workers (addPyFile) so UDF
+    closures resolve regardless of the driver process's cwd/sys.path.
 
     Memoized in the session's ledger: every registry builder calls prep()
     (the driver invokes builders one at a time against its own session),
-    so without the guard a 200+-query gate pays five py4j conf round-trips
+    so without the guard a 200+-query gate pays ten py4j conf round-trips
     per call for confs that are already set — measurable aggregate drift
     on a suite dominated by sub-second queries. Every other in-package
     conf change goes through ledger.scoped_conf, which restores its keys,
@@ -109,29 +124,10 @@ def prep(spark: SparkSession) -> SparkSession:
     memo = ledger.of(spark).memo
     if memo.get("prepped"):
         return spark
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", _PARALLELISM_FIRST
-    )
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", _AQE_MIN_PARTITION_SIZE
-    )
-    # (events.parquet's TIMESTAMP(NANOS) column needs no conf: tables.
-    # load_table branches on the observed ts dtype, covering both the
-    # native NTZ read of Spark >= 4.1 and legacy nanosAsLong sessions)
-    # InferFiltersFromGenerate synthesizes size(e)>0 pre-filters for every
-    # explode; with computed arrays (shingles, token lists) the filter
-    # inlines the whole array expression below the exchange and re-evaluates
-    # it per row on the scan side (measured 5× slowdown on the MinHash
-    # pipeline). Our exploded arrays are non-empty by construction.
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
+    for key, value in SQL_CONFS.items():
+        spark.conf.set(key, value)
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+        spark.conf.set("spark.sql.shuffle.partitions", _shuffle_partitions())
     except Exception:
         pass  # immutable under some configs; harmless
     _ship_package(spark)

@@ -30,8 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def file_fingerprint(path: str) -> str:
     """Content fingerprint of a source file or directory of part files
@@ -322,7 +320,11 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
                     # instead of r13's silent CAST-to-first-type (ADVICE)
                     raise _LocalRowsFallback("unmergeable column types")
                 types.append(t)
-            ddl = ", ".join(f"{n} {t}" for n, t in zip(schema, types))
+            # backtick-quoted so a name with a space or a reserved word
+            # splits as one name, not as name + start of the type
+            ddl = ", ".join(
+                "`" + n.replace("`", "``") + f"` {t}" for n, t in zip(schema, types)
+            )
         cols = _split_schema(ddl)
         if any(
             isinstance(v, str) for row in rows for v in row
