@@ -217,9 +217,9 @@ def _pre_sample_reset(name: str) -> None:
     resumes it); without a reset the warmup drain consumes every input
     file and the timed samples measure checkpoint-resume overhead, not an
     end-to-end drain (ADVICE r11). The reset runs OUTSIDE the timer — it
-    is harness bookkeeping, not query cost. Glob-based (not the package's
-    reset_checkpoint) so paired mode resets the BASELINE version's
-    differently-keyed checkpoint too."""
+    is harness bookkeeping, not query cost. Glob-based (every checkpoint
+    directory the audit could have keyed) so paired mode resets the
+    BASELINE version's differently-keyed checkpoint too."""
     if name == "stream_state_audit":
         import glob
         import shutil

@@ -216,6 +216,28 @@ def test_session_state_lives_only_in_the_ledger():
     assert not hits, hits
 
 
+_MEMORY_SINK = re.compile(r"""\.format\(\s*["']memory["']\s*\)""")
+
+
+def test_one_memory_sink_drain_and_one_stateful_dedup_api():
+    """Every memory-sink streaming query drains through
+    streaming.memory_drain, and first-seen dedup has the one
+    applyInPandasWithState formulation."""
+    sinks = [
+        f"{rel}:{src.count(chr(10), 0, m.start()) + 1}"
+        for rel, src in _package_sources()
+        for m in _MEMORY_SINK.finditer(src)
+    ]
+    assert len(sinks) == 1 and sinks[0].startswith("streaming/__init__.py:"), sinks
+    tws = [
+        f"{rel}:{i + 1}"
+        for rel, src in _package_sources()
+        for i, line in enumerate(_code_lines(src))
+        if "transformWithStateInPandas" in line
+    ]
+    assert not tws, tws
+
+
 TOOLS = os.path.join(REPO_ROOT, "tools")
 # a session is built in session.get_spark only; drive_contract.py imitates
 # the driver's plain session on purpose

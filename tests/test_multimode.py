@@ -25,7 +25,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # label propagation) and a grouped FLOAT aggregation (embedding_quantize's
 # mse — accumulation order varies across partitionings; stable rounding
 # must absorb it) — plus the three exact-oracle STREAMING queries
-# (stream-stream interval join, transformWithState dedup, foreachBatch
+# (stream-stream interval join, stateful first-seen dedup, foreachBatch
 # dedup sink): micro-batch task scheduling and state-store partitioning
 # differ between local[1] and local[8], and the reference's
 # Sequential-vs-Distributed discipline (test_test.go:145-171) applies to

@@ -656,35 +656,55 @@ def test_connected_components_long_chain(spark):
 def test_connected_components_strategies_agree(spark):
     """The driver union-find fast path (edge count ≤ threshold) and the
     distributed propagation loop (forced via collect_max_edges=0) are two
-    physical strategies for ONE contract: identical labels on a mixed
-    graph of chains, a triangle-with-tail, and singletons."""
+    physical strategies for ONE contract: identical labels on (a) a mixed
+    graph of chains, a triangle-with-tail, and singletons, and (b) a long
+    chain (worst case for plain propagation), a clique (the near-dup
+    common case), a seeded random graph, and isolated nodes."""
+    import random
+
     from url_counter_mapreduce_spark.operators.graph import connected_components
 
-    nodes = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
-    raw = (
+    def both(node_ids, raw):
+        nodes = spark.createDataFrame([(i,) for i in node_ids], "doc_id long")
+        edges = spark.createDataFrame(raw, "doc_a long, doc_b long")
+        local = {r.doc_id: int(r.group_id) for r in connected_components(nodes, edges).collect()}
+        dist = {
+            r.doc_id: int(r.group_id)
+            for r in connected_components(nodes, edges, collect_max_edges=0).collect()
+        }
+        assert local == dist
+        return local
+
+    local = both(
+        range(30),
         [(i, i + 1) for i in range(0, 9)]          # 10-chain
         + [(20, 21), (21, 22), (20, 22), (22, 23)]  # triangle + tail
-        + [(25, 27)]
+        + [(25, 27)],
     )
-    edges = spark.createDataFrame(raw, "doc_a long, doc_b long")
-    local = {r.doc_id: r.group_id for r in connected_components(nodes, edges).collect()}
-    dist = {
-        r.doc_id: r.group_id
-        for r in connected_components(nodes, edges, collect_max_edges=0).collect()
-    }
-    assert local == dist
     assert local[23] == 20 and local[9] == 0 and local[27] == 25 and local[29] == 29
+
+    rng = random.Random(13)
+    raw = []
+    raw += [(i, i + 1) for i in range(100, 130)]          # 31-chain
+    raw += [(a, b) for a in range(200, 210) for b in range(a + 1, 210)]  # 10-clique
+    raw += [(300 + rng.randrange(40), 300 + rng.randrange(40)) for _ in range(60)]
+    raw = [e for e in raw if e[0] != e[1]]
+    node_ids = sorted({x for e in raw for x in e} | set(range(400, 410)))  # + isolated
+    base = both(node_ids, raw)
+    assert base[130] == 100 and base[209] == 200
+    for i in range(400, 410):
+        assert base[i] == i
 
 
 def test_dedup_groups_cluster_injected_dups(spark):
     """End-to-end cluster resolution on injected duplicates: the exact dup,
     its near dup, and the original collapse into one group; the unrelated
     doc stays its own representative."""
-    from url_counter_mapreduce_spark.operators.dedup import verified_jaccard_pairs_rejoin
+    from url_counter_mapreduce_spark.operators.dedup import verified_jaccard_pairs
     from url_counter_mapreduce_spark.operators.graph import connected_components
 
     docs = _synthetic_docs(spark)
-    edges = verified_jaccard_pairs_rejoin(docs, 0.5).select("doc_a", "doc_b")
+    edges = verified_jaccard_pairs(docs, 0.5).select("doc_a", "doc_b")
     labels = {r.doc_id: r.group_id for r in connected_components(docs.select("doc_id"), edges).collect()}
     assert labels == {1: 1, 2: 1, 3: 1, 4: 4}
 
@@ -698,7 +718,7 @@ def test_lsh_bucket_cap_bounds_candidates_keeps_small_bucket_recall(spark):
     NON-boilerplate near-dup pair, whose buckets have size 2 < cap."""
     import random
 
-    from url_counter_mapreduce_spark.operators.dedup import verified_jaccard_pairs_rejoin
+    from url_counter_mapreduce_spark.operators.dedup import verified_jaccard_pairs
 
     rng = random.Random(7)
     words = [f"w{r}" for r in range(400)]
@@ -717,10 +737,10 @@ def test_lsh_bucket_cap_bounds_candidates_keeps_small_bucket_recall(spark):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
 
-    uncapped = {(r.doc_a, r.doc_b) for r in verified_jaccard_pairs_rejoin(docs, 0.5).collect()}
+    uncapped = {(r.doc_a, r.doc_b) for r in verified_jaccard_pairs(docs, 0.5).collect()}
     capped = {
         (r.doc_a, r.doc_b)
-        for r in verified_jaccard_pairs_rejoin(docs, 0.5, bucket_cap=16).collect()
+        for r in verified_jaccard_pairs(docs, 0.5, bucket_cap=16).collect()
     }
 
     # uncapped: every 20-way cluster produces all C(20,2)=190 pairs
@@ -1004,39 +1024,6 @@ def test_cms_estimates_dominate_exact_counts(spark, sf_dir):
     # top-1 agreement: the estimated heavy hitter carries the max exact count
     max_cnt = max(exact.values())
     assert exact[est_rows[0].token] == max_cnt
-
-
-def test_star_cc_matches_label_propagation(spark):
-    """The large-star/small-star variant must produce exactly the same
-    clustering as the default pointer-halving label propagation on shapes
-    that stress different regimes: a long chain (worst case for plain
-    propagation), cliques (the near-dup common case), isolated nodes, and
-    a seeded random graph."""
-    import random
-
-    from url_counter_mapreduce_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(13)
-    edges = []
-    edges += [(i, i + 1) for i in range(100, 130)]          # 31-chain
-    edges += [(a, b) for a in range(200, 210) for b in range(a + 1, 210)]  # 10-clique
-    edges += [(300 + rng.randrange(40), 300 + rng.randrange(40)) for _ in range(60)]
-    node_ids = sorted({x for e in edges for x in e} | set(range(400, 410)))  # + isolated
-    nodes = spark.createDataFrame([(i,) for i in node_ids], "doc_id long")
-    edf = spark.createDataFrame(
-        [e for e in edges if e[0] != e[1]], "doc_a long, doc_b long"
-    )
-
-    base = {r.doc_id: int(r.group_id) for r in connected_components(nodes, edf).collect()}
-    star = {r.doc_id: int(r.group_id) for r in connected_components_star(nodes, edf).collect()}
-    assert base == star
-    # sanity on the shapes themselves
-    assert base[130] == 100 and base[209] == 200
-    for i in range(400, 410):
-        assert base[i] == i
 
 
 def test_quality_gopher_flags_repetitive_doc(spark, monkeypatch):
@@ -1352,21 +1339,6 @@ def test_stream_quality_gate_matches_batch_keep_set(spark, sf_dir):
         for r in QUERIES["stream_quality_gate"](spark, sf_dir).collect()
     }
     assert stream == batch
-
-
-def test_decontaminate_formulations_agree(spark):
-    """Join-form and one-pass decontamination must agree row-for-row,
-    including under the df_cap hot-shingle guard."""
-    from url_counter_mapreduce_spark.operators.pipeline import (
-        decontaminate_frame,
-        decontaminate_frame_onepass,
-    )
-
-    docs = _synthetic_docs(spark)
-    for cap in (None, 1):
-        a = sorted(map(tuple, decontaminate_frame(docs, df_cap=cap).collect()))
-        b = sorted(map(tuple, decontaminate_frame_onepass(docs, df_cap=cap).collect()))
-        assert a == b, f"df_cap={cap}: {a} vs {b}"
 
 
 def test_multiprobe_recall_dominates_single_probe_recall(spark, sf_dir):

@@ -106,8 +106,7 @@ def _write_docs(spark, path: str, rows: list) -> None:
     )
 
 
-def _run_dedup_incarnation(spark, src: str, sink_dir: str, chk: str,
-                           force_fallback: bool) -> list:
+def _run_dedup_incarnation(spark, src: str, sink_dir: str, chk: str) -> list:
     """One checkpointed incarnation of the stateful first-seen dedup over
     the file-source directory; returns the (fp, keeper_id) rows THIS
     incarnation emitted. Sink is foreachBatch → parquet append (the memory
@@ -121,7 +120,7 @@ def _run_dedup_incarnation(spark, src: str, sink_dir: str, chk: str,
         batch_df.write.mode("append").parquet(sink_dir)
 
     q = (
-        first_seen_dedup(stream, force_fallback=force_fallback)
+        first_seen_dedup(stream)
         .writeStream.foreachBatch(_sink)
         .outputMode("update")
         .option("checkpointLocation", chk)
@@ -135,7 +134,7 @@ def _run_dedup_incarnation(spark, src: str, sink_dir: str, chk: str,
         return []  # incarnation emitted nothing → sink dir never created
 
 
-def _dedup_restart_scenario(spark, force_fallback: bool) -> None:
+def _dedup_restart_scenario(spark) -> None:
     """Mid-stream kill + resume for the stateful dedup (reference
     test_test.go:193-227's fault-injection spirit): incarnation 1 sees
     fingerprints A and B and dies after committing; batch 2 carries
@@ -149,12 +148,12 @@ def _dedup_restart_scenario(spark, force_fallback: bool) -> None:
     os.makedirs(src)
     try:
         _write_docs(spark, src, [(10, "alpha text"), (11, "alpha text"), (20, "beta text")])
-        got1 = _run_dedup_incarnation(spark, src, os.path.join(base, "sink1"), chk, force_fallback)
+        got1 = _run_dedup_incarnation(spark, src, os.path.join(base, "sink1"), chk)
         # batch 1: A keeps min(10,11)=10, B keeps 20
         assert sorted(k for _, k in got1) == [10, 20]
 
         _write_docs(spark, src, [(5, "alpha text"), (6, "beta text"), (30, "gamma text")])
-        got2 = _run_dedup_incarnation(spark, src, os.path.join(base, "sink2"), chk, force_fallback)
+        got2 = _run_dedup_incarnation(spark, src, os.path.join(base, "sink2"), chk)
         # incarnation 2: state recovered — A and B are already-seen keys and
         # must NOT re-emit (even though doc 5 < keeper 10); only C emits
         assert sorted(k for _, k in got2) == [30]
@@ -162,22 +161,10 @@ def _dedup_restart_scenario(spark, force_fallback: bool) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stateful_dedup_restart_fallback_path(spark):
-    """applyInPandasWithState path: exactly-once keepers across restart."""
-    _dedup_restart_scenario(spark, force_fallback=True)
-
-
-def test_stateful_dedup_restart_tws_path(spark):
-    """transformWithState path (protobuf-gated in this container)."""
-    import pytest
-
-    from url_counter_mapreduce_spark.streaming.stateful_v2 import (
-        _have_transform_with_state,
-    )
-
-    if not _have_transform_with_state():
-        pytest.skip("protobuf absent: transformWithState cannot run here")
-    _dedup_restart_scenario(spark, force_fallback=False)
+def test_stateful_dedup_restart(spark):
+    """Exactly-once first-seen keepers across a restart (default state
+    store provider)."""
+    _dedup_restart_scenario(spark)
 
 
 def test_stateful_dedup_restart_rocksdb_provider(spark):
@@ -194,7 +181,7 @@ def test_stateful_dedup_restart_rocksdb_provider(spark):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        _dedup_restart_scenario(spark, force_fallback=True)
+        _dedup_restart_scenario(spark)
     finally:
         if prev is None:
             spark.conf.unset(key)

@@ -51,3 +51,6 @@ if missing:
     raise SystemExit(1)
 print(f"bench coverage OK: {len(benched)} benched / {len(QUERIES)} registered")
 EOF
+
+echo "== lines of git-tracked .py under the package + tools/ (ROADMAP aim 2) =="
+git ls-files 'url_counter_mapreduce_spark/*.py' 'tools/*.py' | xargs cat | wc -l

@@ -196,27 +196,6 @@ def _jaccard_expr() -> str:
 _JACCARD_EXPR = _jaccard_expr()
 
 
-def _pairs_carry(bands: DataFrame) -> DataFrame:
-    """Candidate pairs with shingle arrays CARRIED through the band join
-    (bands must include a `shingles` column): the banded shuffle hauls each
-    doc's full shingle set once per band, but signatures and shingles are
-    computed exactly once and no verify-side re-join exists. Duplicate
-    candidates from multiple band collisions are dropped on the pair key
-    alone — every copy carries identical arrays."""
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.shingles").alias("sh_a"),
-            F.col("b.shingles").alias("sh_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
 def _capped_bands(bands: DataFrame, cap: int) -> DataFrame:
     """Bucket-size cap (docs/SCALE.md §4 mitigation 2): drop every band
     bucket holding more than ``cap`` docs BEFORE pair generation. A bucket
@@ -247,8 +226,9 @@ def _pairs_rejoin(
     joins the persisted signature table twice to fetch shingles. Cuts the
     band-shuffle payload ~bands× at the cost of two extra equi-joins; the
     signature table is persisted so its aggregation runs once, not thrice.
-    Benchmarked against _pairs_carry at sf0.1 (see dedup_minhash_pairs
-    docstring for the numbers).
+    Benchmarked against a carry variant (shingle arrays hauled through
+    the band join) at sf0.1 (see dedup_minhash_pairs docstring for the
+    numbers).
 
     Persist lifecycle: inputs that arrive already persisted (the
     _signatures_for session index — the production path) are left alone;
@@ -291,18 +271,6 @@ def _pairs_rejoin(
     ).join(sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")), "doc_b")
 
 
-def verified_jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
-    """Exact shingle-set Jaccard on 4×2-band LSH candidates only (carry
-    variant — see _pairs_carry / _pairs_rejoin for the payload tradeoff)."""
-    bands = _band_keys(_signatures_with_shingles(docs), carry=["shingles"])
-    return (
-        _pairs_carry(bands)
-        .withColumn("jaccard", F.expr(_JACCARD_EXPR))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def _verified_pairs_from_sigs(
     sigs_sh: DataFrame, threshold: float, bucket_cap: int | str | None = None
 ) -> DataFrame:
@@ -314,11 +282,11 @@ def _verified_pairs_from_sigs(
     )
 
 
-def verified_jaccard_pairs_rejoin(
+def verified_jaccard_pairs(
     docs: DataFrame, threshold: float, bucket_cap: int | str | None = "auto"
 ) -> DataFrame:
-    """Re-join formulation of verified_jaccard_pairs — identical result,
-    different shuffle economics (benchmarked in tools/bench_variants.py).
+    """Exact shingle-set Jaccard ≥ ``threshold`` on 4×2-band LSH
+    candidates of ``docs``, in the re-join formulation (_pairs_rejoin).
     ``bucket_cap`` enables the skew guard (docs/SCALE.md §4 mitigation 2):
     band buckets larger than the cap are dropped before pair generation.
     Default ``"auto"``: the measured cost trigger (operators/skew_guard.py)
@@ -341,8 +309,8 @@ def dedup_minhash_pairs(
 
     Ships the RE-JOIN formulation: the round-1 carry variant hauled every
     doc's shingle array through the band shuffle 4×; measured head-to-head
-    at sf0.1 (tools/bench_variants.py, best-of-3): carry 1.34–1.42 s vs
-    rejoin 0.63–1.22 s — rejoin wins locally AND cuts band-shuffle bytes
+    at sf0.1 (``git show d5a103c:tools/bench_variants.py``, best-of-3):
+    carry 1.34–1.42 s vs rejoin 0.63–1.22 s — rejoin wins locally AND cuts band-shuffle bytes
     ~4× at scale (it shuffles only (doc_id, band, key); shingles come from
     two hash joins against the persisted signature table). The signature
     table comes from the per-(session, corpus) index (_signatures_for), the
@@ -351,7 +319,7 @@ def dedup_minhash_pairs(
     ``bucket_cap`` (default ``"auto"`` — the measured cost trigger stays
     off at oracle scale, so oracles remain exact, and self-engages on
     clone/boilerplate-heavy corpora) enables the LSH bucket-size skew
-    guard; see verified_jaccard_pairs_rejoin and operators/skew_guard.py."""
+    guard; see verified_jaccard_pairs and operators/skew_guard.py."""
     return _verified_pairs_for(spark, sf_dir, 0.5, bucket_cap=bucket_cap)
 
 

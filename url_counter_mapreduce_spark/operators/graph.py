@@ -11,13 +11,11 @@ with per-round persist + count (the count is simultaneously the
 materialization barrier and the convergence check) and lineage truncation
 via localCheckpoint so the plan doesn't grow per round. At real scale the
 same loop holds — the per-round cost is one join + one aggregate on the
-EDGE set (candidates, not corpus); the large-star/small-star alternative
+EDGE set (candidates, not corpus). The large-star/small-star alternative
 (Kiveris et al., "Connected components in MapReduce and beyond", SoCC
-2014) is implemented below as connected_components_star — equivalence-
-tested and A/B-measured (tools/bench_variants.py); the propagation form
-stays the default because near-dup graphs have tiny diameters, where its
-fewer/cheaper rounds win, and both are shuffle-proportional to the dup
-graph, not the corpus.
+2014) lost the head-to-head on near-dup graphs, whose tiny diameters
+favour propagation's fewer, cheaper rounds (sf0.1 verified-pair graph:
+1.19 s vs 1.52 s, ``git show d5a103c:tools/bench_variants.py``).
 
 Deterministic end state (min doc_id of the component) → exact DuckDB
 oracle via a recursive CTE over the same edge set.
@@ -254,85 +252,6 @@ def dedup_groups(
         "doc_a", "doc_b"
     )
     return connected_components(docs.select("doc_id"), edges)
-
-
-def connected_components_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected components in MapReduce and beyond", SoCC 2014) — the
-    published refinement the default label-propagation loop's docstring
-    points at, kept as a measured VARIANT beside it
-    (tools/bench_variants.py; equivalence-tested in tests).
-
-    Each round rewrites the EDGE SET itself (two groupBy-min + re-emit
-    passes) instead of propagating labels over a static edge set:
-    large-star hangs every neighbor larger than u off u's minimum
-    neighbor; small-star re-hangs the smaller neighborhood. Endpoints
-    only ever decrease, components contract toward stars rooted at their
-    minima in O(log²) rounds. The practical difference vs the default: the
-    shuffled relation SHRINKS as chains collapse (good when the dup graph
-    has long chains / big components), at the cost of two aggregates per
-    round instead of one join — on near-dup graphs (tiny diameters) the
-    default's fewer, cheaper rounds win; both are shuffle ∝ edge set.
-    Measured (sf0.1 verified-pair graph, local[32], best of 3):
-    propagation 1.19 s vs star 1.52 s — the default stays the default.
-
-    Fixpoint detection: endpoints never increase, so the (edge count,
-    Σ(u+v)) pair strictly decreases in sum whenever anything changed at
-    equal count — equality of the pair across a round proves convergence
-    (one tiny aggregate per round, no set-difference join)."""
-    e = (
-        edges.select(
-            F.col("doc_a").cast("long").alias("u"), F.col("doc_b").cast("long").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(checkpoint)
-    )
-    prev: tuple | None = None
-    for _ in range(MAX_CC_ITERS):
-        # large-star: m = min over full neighborhood ∪ self; (v, m) for v > u
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            sym.union(sym.select("u", F.col("u").alias("v")))
-            .groupBy("u")
-            .agg(F.min("v").alias("m"))
-        )
-        e = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: direct every edge to its smaller endpoint, m = min of
-        # that in-neighborhood ∪ self; re-hang neighborhood and u on m
-        d = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        mins2 = (
-            d.union(d.select("u", F.col("u").alias("v")))
-            .groupBy("u")
-            .agg(F.min("v").alias("m"))
-        )
-        e = (
-            d.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .transform(checkpoint)
-        )
-        row = e.agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s")).first()
-        sig = (row["n"], row["s"])
-        if sig == prev:
-            break
-        prev = sig
-    else:
-        raise RuntimeError(f"connected_components_star did not converge in {MAX_CC_ITERS} rounds")
-    labels = e.select(F.col("u").alias("_lbl_id"), F.col("v").alias("group_id"))
-    return (
-        nodes.select("doc_id")
-        .join(labels, nodes.doc_id == F.col("_lbl_id"), "left")
-        .select("doc_id", F.coalesce("group_id", F.col("doc_id").cast("long")).alias("group_id"))
-    )
 
 
 # ---------------------------------------------------------------------------

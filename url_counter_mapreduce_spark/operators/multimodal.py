@@ -1119,9 +1119,10 @@ def dedup_image_dhash_pairs(
     The oracle replays the SAME band-candidate rule (not brute force), so
     the result is exact by construction, not recall-approximate.
 
-    Measured vs brute-force all-pairs (tools/bench_variants.py, sf0.1,
-    N=5,000): brute 0.29 s vs banded 0.45 s — at this N, 12.5M cheap
-    xor/bit_count comparisons beat the band explode + join overhead, and
+    Measured vs brute-force all-pairs
+    (``git show d5a103c:tools/bench_variants.py``, sf0.1, N=5,000): brute
+    0.29 s vs banded 0.45 s — at this N, 12.5M cheap xor/bit_count
+    comparisons beat the band explode + join overhead, and
     both produce identical pairs. Banding ships anyway because brute is
     O(N²): the same arithmetic rate puts 50k docs at ~30 s and 5M docs at
     ~12.5T comparisons, while the banded join's cost tracks candidate

@@ -614,7 +614,14 @@ def decontaminate_frame(docs: DataFrame, df_cap: int | None = None) -> DataFrame
     on the already-distinct index, one extra cheap aggregate), bounding
     per-key join fan-out at df_cap while keeping every low-multiplicity —
     i.e. genuinely identifying — overlap. Real pipelines do exactly this
-    (boilerplate n-grams are not evidence of leakage)."""
+    (boilerplate n-grams are not evidence of leakage).
+
+    The one-pass alternative (one groupBy on the shingle hash collecting
+    each side's doc set, then exploding test × train) measured slower at
+    sf0.1, best-of-3: 1.81 s vs this join form's 1.40 s
+    (``git show d5a103c:tools/bench_variants.py``). Its conditional
+    collect_set builds a doc-id set for every shingle, most of them
+    train-only; the map-side-distinct train index here never does."""
     from ..tables import spread
 
     # spread() before shingling: md5 over every 5-token window is the
@@ -658,66 +665,6 @@ def decontaminate_frame(docs: DataFrame, df_cap: int | None = None) -> DataFrame
             F.countDistinct("sh").alias("n_shared_shingles"),
             F.countDistinct("train_id").alias("n_train_docs"),
         )
-    )
-    test_docs = base.filter(F.col("decile") == 9).select("doc_id")
-    return test_docs.join(hits, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_shared_shingles", F.lit(0)).alias("n_shared_shingles"),
-        F.coalesce("n_train_docs", F.lit(0)).alias("n_train_docs"),
-    )
-
-
-def decontaminate_frame_onepass(docs: DataFrame, df_cap: int | None = None) -> DataFrame:
-    """One-pass formulation of decontaminate_frame: instead of deriving a
-    train index and a test probe side from the shingle frame (two scans +
-    one shuffle join), aggregate the shingle frame ONCE by shingle hash,
-    collecting each side's doc set, then explode the (test × train) pairs
-    of shingles that have both. Same two shuffles (by sh, then by test
-    doc), but the corpus is tokenized and md5-shingled exactly once —
-    the scan/hash work halves while the pair volume (the skew hazard) is
-    unchanged.
-
-    MEASURED LOSER (tools/bench_variants.py, sf0.1, best-of-3: join form
-    1.40 s vs one-pass 1.81 s) — and the reason scales: the conditional
-    collect_set materializes a doc-id set for EVERY shingle, but the vast
-    majority of shingles are train-only (no test member) and get filtered
-    right after; the join form's map-side-distinct train index never
-    builds per-key sets for shingles the test side doesn't probe. Kept as
-    the documented variant; decontaminate_frame ships."""
-    from ..tables import spread
-
-    base = spread(docs.select("doc_id", "text")).select(
-        "doc_id",
-        F.expr(_DECILE).alias("decile"),
-        F.expr(_TOKS).alias("toks"),
-    )
-    sh = base.filter(F.size("toks") >= DECON_NGRAM).select(
-        "doc_id",
-        "decile",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(0, size(toks) - {DECON_NGRAM}),"
-                    f" i -> md5(concat_ws(' ', slice(toks, i + 1, {DECON_NGRAM}))))"
-                )
-            )
-        ).alias("sh"),
-    )
-    sides = sh.groupBy("sh").agg(
-        F.collect_set(F.expr("CASE WHEN decile < 8 THEN doc_id END")).alias("train_ids"),
-        F.collect_set(F.expr("CASE WHEN decile = 9 THEN doc_id END")).alias("test_ids"),
-    )
-    both = sides.filter((F.size("train_ids") > 0) & (F.size("test_ids") > 0))
-    if df_cap is not None:
-        both = both.filter(F.size("train_ids") <= df_cap)
-    pairs = both.select(
-        "sh",
-        F.explode("test_ids").alias("doc_id"),
-        "train_ids",
-    ).select("sh", "doc_id", F.explode("train_ids").alias("train_id"))
-    hits = pairs.groupBy("doc_id").agg(
-        F.countDistinct("sh").alias("n_shared_shingles"),
-        F.countDistinct("train_id").alias("n_train_docs"),
     )
     test_docs = base.filter(F.col("decile") == 9).select("doc_id")
     return test_docs.join(hits, "doc_id", "left").select(

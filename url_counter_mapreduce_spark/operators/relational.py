@@ -191,8 +191,8 @@ def approx_distinct_users_sketch(
     oracle asserts as TRUE. That upgrades the gate verdict from rows-only
     to a checked accuracy contract. ``gate=False`` keeps the pure
     one-pass estimate-only plan (no exact countDistinct anywhere) for the
-    bench/plan evidence (tools/bench_variants.py section 6,
-    tests/test_properties.py)."""
+    bench/plan evidence (section 6 of
+    ``git show d5a103c:tools/bench_variants.py``, tests/test_properties.py)."""
     est = F.hll_sketch_estimate(F.hll_sketch_agg("user_id", F.lit(12))).alias(
         "approx_users"
     )

@@ -395,8 +395,9 @@ def gopher_metrics_arrow(df: DataFrame) -> DataFrame:
     trades JVM-interpreted tree-walking for CPython loops + O(1) hashing:
     measured 13.7 s -> 0.9 s on the warm sf0.1 stream drain (single
     source partition, where the interpreted cost is undiluted) and ~1.7x
-    on the 32-way batch select (tools/bench_variants.py section 5), with
-    bit-identical doubles.
+    on the 32-way batch select (section 5 of
+    ``git show d5a103c:tools/bench_variants.py``), with bit-identical
+    doubles.
 
     Determinism contract (why the values hash-match the DuckDB oracle):
     every float is computed with the same IEEE-754 double ops as the SQL

@@ -1602,7 +1602,7 @@ _register(
     """,
 )
 
-# transformWithState first-seen dedup: deterministic keeper (min doc_id),
+# applyInPandasWithState first-seen dedup: deterministic keeper (min doc_id),
 # single batch ⇒ equals batch groupBy ⇒ EXACT oracle
 _register(
     "stream_dedup_stateful",

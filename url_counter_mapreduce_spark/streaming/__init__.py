@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import DataFrame
+
 from ..ledger import scoped_conf
 
 
@@ -30,7 +32,7 @@ def stream_shuffle_partitions(spark):
     partition size), not to core count. ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS``
     (default 8) parameterizes it; 8 is sized to the fixture streams' state
     (thousands of keys) while keeping enough parallelism for the
-    python-stateful transformWithState paths (measured WORSE at 2 than at 8
+    python-stateful applyInPandasWithState paths (measured WORSE at 2 than at 8
     — Arrow batches need concurrent workers). At 100 TB state, set it to
     hundreds/thousands; resumed checkpoints keep their recorded count
     regardless, so the knob can never corrupt existing state.
@@ -51,3 +53,20 @@ def stream_shuffle_partitions(spark):
             )
         },
     )
+
+
+def memory_drain(
+    stream: DataFrame, sink: str, mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Drain ``stream`` with Trigger.AvailableNow into the memory sink
+    ``sink`` in output ``mode`` under stream_shuffle_partitions, and return
+    the sink table. Every memory-sink streaming query goes through here, so
+    the trigger/sink discipline cannot drift between them. ``checkpoint``
+    pins the checkpoint location (default: a temporary one per start)."""
+    spark = stream.sparkSession
+    writer = stream.writeStream.format("memory").queryName(sink).outputMode(mode)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with stream_shuffle_partitions(spark):
+        writer.trigger(availableNow=True).start().awaitTermination()
+    return spark.table(sink)

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .event_count import _events_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 # value buckets: floor(value) clamped to [0, 9] — events values are small
 # nonnegative doubles, so this is a ten-bin histogram with full coverage
@@ -60,17 +60,7 @@ def stream_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = ev.groupBy(F.col("w.start").alias("wstart"), "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("obs")
     )
-    sink = "stream_drift_chi2_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    drained = spark.table(sink)
+    drained = memory_drain(counts, "stream_drift_chi2_sink", "complete")
 
     ref = (
         load_table(spark, sf_dir, "events")

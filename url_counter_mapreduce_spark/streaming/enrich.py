@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .event_count import _events_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 
 def stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,14 +32,4 @@ def stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("nation")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    sink = "stream_enriched_counts_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(enriched, "stream_enriched_counts_sink", "complete")

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 
 def _stream_dir_for(sf_dir: str, table: str) -> str:
@@ -112,17 +112,7 @@ def stream_event_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = "stream_event_count_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(windowed, "stream_event_count_sink", "complete")
 
 
 def stream_sliding_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,14 +134,4 @@ def stream_sliding_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = "stream_sliding_count_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(windowed, "stream_sliding_count_sink", "complete")

@@ -31,7 +31,7 @@ from ..operators.multimodal import (
     pattern_png_bytes,
 )
 from .url_count import _documents_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 
 def _spread_stream(ids: DataFrame) -> DataFrame:
@@ -44,22 +44,6 @@ def _spread_stream(ids: DataFrame) -> DataFrame:
     (8 bytes/row), noise next to per-row container decode at any scale."""
     sc = ids.sparkSession.sparkContext
     return ids.repartition(sc.defaultParallelism)
-
-
-def _drain(fps: DataFrame, sink: str) -> DataFrame:
-    """AvailableNow drain of a stateless fingerprint stream into a memory
-    sink; shared by the three modalities so the trigger/sink discipline
-    cannot drift between them."""
-    with stream_shuffle_partitions(fps.sparkSession):
-        q = (
-            fps.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return fps.sparkSession.table(sink)
 
 
 def stream_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,7 +68,7 @@ def stream_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = _spread_stream(_documents_stream(spark, sf_dir).select("doc_id")).mapInPandas(
         extract, schema="doc_id long, width int, height int, fp_hi long, fp_lo long"
     )
-    return _drain(fps, "stream_image_dhash_sink")
+    return memory_drain(fps, "stream_image_dhash_sink", "append")
 
 
 def stream_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,7 +96,7 @@ def stream_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract,
         schema="doc_id long, sample_rate int, n_samples long, fp_hi long, fp_lo long",
     )
-    return _drain(fps, "stream_audio_fingerprint_sink")
+    return memory_drain(fps, "stream_audio_fingerprint_sink", "append")
 
 
 def stream_video_keyframe_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,7 +122,7 @@ def stream_video_keyframe_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = _spread_stream(_documents_stream(spark, sf_dir).select("doc_id")).mapInPandas(
         extract, schema="doc_id long, frame_idx int, fp_hi long, fp_lo long"
     )
-    return _drain(fps, "stream_video_keyframe_dhash_sink")
+    return memory_drain(fps, "stream_video_keyframe_dhash_sink", "append")
 
 
 def stream_ingest_dedup_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,14 +205,4 @@ def stream_ingest_dedup_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("best.hamming").alias("best_hamming"),
         F.col("best.partner").alias("dup_of"),
     )
-    sink = "stream_ingest_dedup_check_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(out, "stream_ingest_dedup_check_sink", "complete")

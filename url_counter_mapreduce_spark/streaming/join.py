@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .event_count import _events_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 JOIN_WINDOW = "30 minutes"
 
@@ -64,14 +64,4 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """purchase stream ⋈ view stream: (purchase, view) pairs per user with
     the view in [purchase.ts − 30 min, purchase.ts]."""
     joined = joined_stream(spark, sf_dir)
-    sink = "stream_stream_join_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(joined, "stream_stream_join_sink", "append")

@@ -15,8 +15,8 @@ array-expression drain cost 14.5 s at sf0.1 (VERDICT r10's one weak) vs
 ~0.9 s for the same math over Arrow batches — the stream source is ONE
 file read serially, so the interpreted-lambda cost is undiluted there
 (measured drains 13.7 s vs 0.9 s warm, identical rows); the 32-way batch
-select shows the same kernel winning ~1.7x (tools/bench_variants.py
-section 5).
+select shows the same kernel winning ~1.7x
+(``git show d5a103c:tools/bench_variants.py`` section 5).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.text import gopher_metrics_arrow
 from .url_count import _documents_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,14 +39,4 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "n_words", "top_bigram_char_frac", "dup_trigram_char_frac"
         )
     )
-    sink = "stream_quality_gate_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            gated.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(gated, "stream_quality_gate_sink", "append")

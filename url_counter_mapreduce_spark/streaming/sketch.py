@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from .event_count import _events_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 
 def stream_hll_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,17 +44,7 @@ def stream_hll_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"))
     )
-    sink = "stream_hll_uniques_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            sk.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    stream_est = spark.table(sink).select(
+    stream_est = memory_drain(sk, "stream_hll_uniques_sink", "complete").select(
         "event_type", F.hll_sketch_estimate("sk").alias("est_stream")
     )
     batch = (

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..tables import tmp_scratch_dir
 from .event_count import _events_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 # bump to invalidate checkpoints if the stream's plan ever changes shape
 # (a resumed checkpoint with a different aggregation layout fails loudly)
@@ -51,17 +51,6 @@ def _checkpoint_dir(sf_dir: str) -> str:
     )
 
 
-def reset_checkpoint(sf_dir: str) -> None:
-    """Remove the audit's persistent checkpoint so the next call drains the
-    source from scratch. Bench harness hook (ADVICE r11): without it, a
-    warmup drain consumes every input file and the timed samples measure
-    checkpoint-resume overhead, not an end-to-end drain like every other
-    stream row."""
-    import shutil
-
-    shutil.rmtree(_checkpoint_dir(sf_dir), ignore_errors=True)
-
-
 def stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type running counts drained through a CHECKPOINTED complete-mode
     aggregation, then re-read from the state store itself. Returns one row
@@ -78,17 +67,7 @@ def stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    sink = "stream_state_audit_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    memory_drain(counts, "stream_state_audit_sink", "complete", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),

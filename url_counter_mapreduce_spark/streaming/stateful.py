@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .event_count import _events_stream
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 SESSION_GAP = "30 minutes"
 
@@ -56,17 +56,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions within 1h of the stream's end stay open (checked as a subset
     of the batch sessionization in tests)."""
     windowed = sessionized_stream(spark, sf_dir)
-    sink = "stream_sessionize_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(windowed, "stream_sessionize_sink", "append")
 
 
 STATE_SCHEMA = "n long, total double"
@@ -104,24 +94,14 @@ def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    sink = "stream_user_stats_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drained = memory_drain(stats, "stream_user_stats_sink", "update")
     # update mode may emit a user several times across micro-batches; the
     # final state per user is the row with the largest n_events
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table(sink)
-        .withColumn("rn", F.row_number().over(w))
+        drained.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )

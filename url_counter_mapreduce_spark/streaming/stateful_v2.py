@@ -1,9 +1,8 @@
-"""transformWithState streaming dedup — the arbitrary-stateful-processor
-API (successor to applyInPandasWithState, already covered in stateful.py):
-a StatefulProcessor with explicit named state that emits each content
-fingerprint's keeper exactly ONCE across the life of the stream — the
-streaming half of the incremental-crawl dedup (operators/dedup.py
-incremental_new_docs is the batch half).
+"""Streaming first-seen dedup over the documents stream: a keyed
+applyInPandasWithState processor that emits each content fingerprint's
+keeper exactly ONCE across the life of the stream — the streaming half of
+the incremental-crawl dedup (operators/dedup.py incremental_new_docs is
+the batch half).
 
 Native streaming dropDuplicates keeps the FIRST ARRIVAL, which is
 partition-race nondeterministic; keeping the MIN doc_id per fingerprint
@@ -20,20 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .event_count import _stream_dir_for
-from . import stream_shuffle_partitions
-
-
-def _have_transform_with_state() -> bool:
-    """transformWithState's state protocol rides on protobuf, which this
-    container lacks — gate behind import-try per the environment contract
-    and fall back to the applyInPandasWithState formulation (identical
-    output, previous-generation API)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+from . import memory_drain
 
 
 def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,85 +38,42 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents stream → fingerprint → keyed stateful dedup: per-key state
     records the keeper; a key yields output only on first sight. State
     lives for the stream's life (a production deployment adds a TTL to
-    bound it — the transformWithState API supports that natively)."""
+    bound it, e.g. a GroupStateTimeout that drops idle keys)."""
     deduped = dedup_stream(spark, sf_dir)
-    sink = "stream_dedup_stateful_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(deduped, "stream_dedup_stateful_sink", "update")
 
 
-def first_seen_dedup(src: DataFrame, force_fallback: bool = False) -> DataFrame:
+def first_seen_dedup(src: DataFrame) -> DataFrame:
     """The keyed first-seen-keeper transform over any streaming documents
     frame (needs text + doc_id): one output row per fingerprint, emitted
     the first time the key is seen across the LIFE of the stream —
     including across checkpointed restarts (state recovery is asserted in
-    tests/test_streaming_recovery.py). ``force_fallback`` pins the
-    applyInPandasWithState formulation even where transformWithState is
-    available, so both code paths stay testable."""
-    keyed = src.withColumn(
-        "fp", F.md5(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    ).select("fp", "doc_id").groupBy("fp")
+    tests/test_streaming_recovery.py)."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    if _have_transform_with_state() and not force_fallback:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
+    def first_seen(key, pdfs, state: GroupState):
+        import pandas as pd
 
-        class FirstSeenKeeper(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._seen = handle.getValueState("seen", "keeper long")
+        best = None
+        for pdf in pdfs:
+            b = int(pdf["doc_id"].min())
+            best = b if best is None else min(best, b)
+        if not state.exists:
+            state.update((best,))
+            yield pd.DataFrame({"fp": [key[0]], "keeper_id": [best]})
 
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as pd
-
-                best = None
-                for pdf in rows:
-                    b = int(pdf["doc_id"].min())
-                    best = b if best is None else min(best, b)
-                if not self._seen.exists():
-                    self._seen.update((best,))
-                    yield pd.DataFrame({"fp": [key[0]], "keeper_id": [best]})
-
-            def close(self) -> None:
-                pass
-
-        deduped = keyed.transformWithStateInPandas(
-            statefulProcessor=FirstSeenKeeper(),
-            outputStructType="fp string, keeper_id long",
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-        def first_seen(key, pdfs, state: GroupState):
-            import pandas as pd
-
-            best = None
-            for pdf in pdfs:
-                b = int(pdf["doc_id"].min())
-                best = b if best is None else min(best, b)
-            if not state.exists:
-                state.update((best,))
-                yield pd.DataFrame({"fp": [key[0]], "keeper_id": [best]})
-
-        deduped = keyed.applyInPandasWithState(
+    return (
+        src.withColumn("fp", F.md5(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
+        .select("fp", "doc_id")
+        .groupBy("fp")
+        .applyInPandasWithState(
             first_seen,
             outputStructType="fp string, keeper_id long",
             stateStructType="keeper long",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    return deduped
+    )
 
 
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,7 +83,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark passes its event time + delay, so state size is
     ∝ distinct keys per delay window rather than stream history — the
     correct default for an unbounded 100 TB event stream (the custom
-    transformWithState keeper needs an explicit TTL for the same bound).
+    first-seen keeper needs an explicit timeout for the same bound).
 
     Which duplicate ROW survives is arrival-order-racy, so the operator
     projects ONLY the dedup key columns — the surviving key SET is
@@ -154,14 +97,4 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    sink = "stream_dedup_watermark_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    return memory_drain(deduped, "stream_dedup_watermark_sink", "append")

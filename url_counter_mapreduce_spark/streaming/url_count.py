@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructType
 
 from .event_count import _stream_dir_for
-from . import stream_shuffle_partitions
+from . import memory_drain
 
 
 def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,18 +44,8 @@ def stream_url_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    sink = "stream_url_count_sink"
-    with stream_shuffle_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(sink)
+        memory_drain(counts, "stream_url_count_sink", "complete")
         .orderBy(F.col("cnt").desc(), F.col("token").asc())
         .limit(100)
     )
