@@ -1,200 +1,92 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: times every bench row at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 testdata, see SF_DIR) on local[$SPARK_GRAFT_CPUS].
 
-Each query is materialized with a noop-sink action (the driver's
-contract measures end-to-end plan execution, not driver-side collection of
-megabytes). Timing protocol: per query, one discarded warmup then
-median-of-3, with the (min, med, max) spread recorded — see _run for why
-single-sample minima were retired in round 8.
+    python bench.py                                      # plain run
+    python bench.py --paired REF [--queries a,b]         # this tree vs git REF
+    python bench.py --conf-paired KEY A B [--queries a,b]  # KEY=A vs KEY=B
+
+All three modes share one protocol. The rows are one table (_rows): every
+registered query, the four sketch ship plans and the three steady-state
+stream rows. Each row is measured by one sampling loop (_interleave) over
+the mode's arms — one for a plain run, current and baseline code for
+--paired, the two conf values for --conf-paired. A sample is one
+noop-sink materialization, so it measures end-to-end plan execution, not
+driver-side collection of megabytes.
+
+A plain run prints the full JSON record, then ONE short final line:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {slowest
+rows}, "sf": ...}; at sf0.1 it writes the record to BENCH_FULL.json.
 """
 
 from __future__ import annotations
 
+import functools
+import importlib
 import json
 import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-from url_counter_mapreduce_spark import QUERIES, get_spark  # noqa: E402
+import url_counter_mapreduce_spark as PKG  # noqa: E402
+from url_counter_mapreduce_spark import QUERIES, get_spark, ledger  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+SF = float(_sf) if _sf.replace(".", "").isdigit() else _sf
 
-# headline set: the reference surface + the heavy relational/LLM operators
-BENCH_QUERIES = [
-    "url_count",
-    "url_topk",
-    "sort_by_key",
-    "agg_pricing_summary",
-    "filter_shipdate",
-    "join_customer_nation",
-    "join_semi_anti",
-    "window_topn_per_group",
-    "rollup_orders",
-    "set_ops",
-    "distinct_users",
-    "scalar_functions",
-    "window_tumbling_count",
-    "udf_surface",
-    # LLM-pipeline surface
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "dedup_simhash",
-    "dedup_ngram_topk",
-    "similarity_topk",
-    "similarity_lsh",
-    "text_token_stats",
-    "quality_score",
-    "doc_fingerprint",
-    "multimodal_meta",
-    # round-2 pipeline surface
-    "dedup_groups",
-    "tf_idf_topk",
-    "vocab_build",
-    "events_dedup_latest",
-    "embedding_quantize",
-    "bucketed_join",
-    "corpus_profile",
-    "token_freq_histogram",
-    "json_struct_extract",
-    "join_skew_salted",
-    "udtf_surface",
-    "source_jsonl_roundtrip",
-    "sink_partitioned_parquet",
-    "train_test_split",
-    "doc_chunks",
-    "context_pack",
-    "pii_scrub",
-    "merge_upsert",
-    # round-3 pipeline surface (split_leakage_safe omitted: its CC pass is
-    # already timed via dedup_groups)
-    "decontaminate_ngrams",
-    "sample_stratified",
-    "url_topk_sketch",
-    # round-4 pipeline surface
-    "quality_gopher",
-    "url_host_stats",
-    "mix_sources",
-    "ann_recall",
-    "lm_bigram_quality",
-    "similarity_lsh_multiprobe",
-    "sink_compacted_parquet",
-    "ann_recall_multiprobe",
-    "dedup_substring_spans",
-    "dedup_substring_clean",
-    "multimodal_dedup",
-    "dedup_report",
-    # round-5 pipeline surface
-    "dedup_semantic",
-    "vocab_build_bpe",
-    "bpe_encode_corpus",
-    "quality_classifier_score",
-    "bm25_topk",
-    "sample_token_budget",
-    "corpus_shuffle",
-    "training_export",
-    "host_pagerank",
-    # temporal / advanced relational
-    "sessionize_events",
-    "join_asof",
-    "quantiles_value",
-    "pivot_events",
-    "range_join_events",
-    "sql_surface",
-    "agg_filtered_revenue",
-    "decorrelated_subquery",
-    "running_total_orders",
-    "agg_string_concat",
-    # round-5 batch 2: windows / graph census / cogroup / exact stats
-    "window_sliding_count",
-    "events_gap_fill",
-    "session_window_agg",
-    "host_triangles",
-    "cogroup_reconcile",
-    "unpivot_lineitem",
-    "corr_pricing",
-    "embedding_centroid",
-    # round-5 batch 3
-    "scd2_intervals",
-    "retention_cohorts",
-    "funnel_conversion",
-    "inverted_index",
-    "host_degree_histogram",
-    "arrow_surface",
-    "layout_zorder",
-    # round-5 batch 4
-    "langid_confusion",
-    "vocab_coverage",
-    "rolling_daily_avg",
-    "value_bucketing",
-    "dq_constraints",
-    "hll_sketch_rollup",
-    "source_xml_roundtrip",
-    "source_binaryfile_scan",
-    "url_normalize_dedup",
-    "dedup_minhash_recall",
-    "join_partition_pruned",
-]
+ROUNDS = 3  # timed samples per arm, after one discarded warmup
 
-# stream_* queries are benched under their own protocol (below): each call
-# runs a full Trigger.AvailableNow drain — source discovery, checkpoint,
-# state store, sink — so its wall time is an end-to-end drain latency, not
-# a bare operator throughput like the batch numbers. Since round 11 they
-# get the SAME warmup + median-of-3 as batch queries (spread.samples = 3):
-# the single-drain protocol made the stream rows the noisiest in
-# BENCH_FULL.json (VERDICT r10 item 5), and the ~2 extra drains per query
-# (~90 s of bench wall across 15 streams) buy spread data where it was
-# most missing.
-# Every other registry query is benched batch-style: the explicit list
-# above fixes the measurement order for round-over-round comparability,
-# and the auto-include below appends any registry query not yet listed, so
-# a new operator can never be silently unbenched.
-STREAM_PREFIX = "stream_"
-STREAM_QUERIES = sorted(q for q in QUERIES if q.startswith(STREAM_PREFIX))
-BENCH_QUERIES += sorted(
-    q
-    for q in QUERIES
-    if q not in BENCH_QUERIES and not q.startswith(STREAM_PREFIX)
-)
+# The four sketch SHIP plans (gate=False) as bench rows. The registered
+# `*_sketch` forms carry their accuracy contract (an extra exact leg or
+# invariant columns), so their rows measure CONTRACT cost; these rows
+# measure the one-pass plans that deploy at 100 TB. They stay out of the
+# registry (sketch values are engine-specific, so there is no oracle;
+# the gated twins pin accuracy), but are timed so "sketch is cheaper than
+# exact" stays a measured claim. Row name → (module under the package,
+# function).
+SHIP_ROWS = {
+    "approx_distinct_users_sketch_ship": (
+        "operators.relational",
+        "approx_distinct_users_sketch",
+    ),
+    "approx_quantiles_sketch_ship": ("operators.advanced", "approx_quantiles_sketch"),
+    "hll_rollup_sketch_ship": ("operators.advanced", "hll_rollup_sketch"),
+    "audience_overlap_sketch_ship": ("operators.advanced", "audience_overlap_sketch"),
+}
 
 
-def _ship_variants():
-    """The four sketch SHIP plans as first-class bench rows (VERDICT r11
-    item 4). The registered `*_sketch` forms deliberately carry their
-    accuracy contract (an extra exact leg or invariant columns), so their
-    bench rows measure CONTRACT cost; these `*_sketch_ship` rows measure
-    the gate=False one-pass plans that actually deploy at 100 TB. Kept
-    out of the registry (no oracle — sketch values are engine-specific;
-    accuracy is pinned by the gated twins) but in the headline table so
-    'sketch is cheaper than exact' stays an up-to-date measured claim."""
-    from url_counter_mapreduce_spark.operators.advanced import (
-        approx_quantiles_sketch,
-        audience_overlap_sketch,
-        hll_rollup_sketch,
-    )
-    from url_counter_mapreduce_spark.operators.relational import (
-        approx_distinct_users_sketch,
-    )
+def _rows(pkg) -> dict:
+    """The bench's one row table for package module ``pkg``, in
+    measurement order, as ``{name: fn(spark, sf_dir) -> DataFrame}``:
 
-    return {
-        "approx_distinct_users_sketch_ship": lambda spark, sf: approx_distinct_users_sketch(
-            spark, sf, gate=False
-        ),
-        "approx_quantiles_sketch_ship": lambda spark, sf: approx_quantiles_sketch(
-            spark, sf, gate=False
-        ),
-        "hll_rollup_sketch_ship": lambda spark, sf: hll_rollup_sketch(
-            spark, sf, gate=False
-        ),
-        "audience_overlap_sketch_ship": lambda spark, sf: audience_overlap_sketch(
-            spark, sf, gate=False
-        ),
-    }
+    - the registry's batch queries, in registration order;
+    - its ``stream_*`` queries: each call is a full Trigger.AvailableNow
+      drain (source discovery, checkpoint, state store, sink), so the row
+      is an end-to-end drain latency;
+    - the SHIP_ROWS sketch plans, resolved inside ``pkg``;
+    - the ``*_steady`` stream rows (streaming/steady.py): checkpoint
+      resume plus one delta, the deployment marginal of a drain. The
+      warmup primes their persistent checkpoint.
+
+    ``pkg`` is this package or, under --paired, the baseline's aliased
+    copy, so each side's rows run that side's code."""
+    rows = {n: fn for n, fn in pkg.QUERIES.items() if not n.startswith("stream_")}
+    rows.update((n, fn) for n, fn in pkg.QUERIES.items() if n.startswith("stream_"))
+    for row, (module, fn_name) in SHIP_ROWS.items():
+        fn = getattr(importlib.import_module(f"{pkg.__name__}.{module}"), fn_name)
+        rows[row] = functools.partial(fn, gate=False)
+    steady = importlib.import_module(f"{pkg.__name__}.streaming.steady")
+    rows.update(steady.steady_variants())
+    return rows
+
+
+def _select(rows: dict, only: list[str] | None) -> dict:
+    return rows if only is None else {n: fn for n, fn in rows.items() if n in only}
 
 
 def _load1() -> float:
@@ -231,95 +123,81 @@ def _pre_sample_reset(name: str) -> None:
             shutil.rmtree(d, ignore_errors=True)
 
 
-def _run_once(spark, name: str, fn=None) -> float:
+def _sample(spark, name: str, fn) -> float:
+    """One timed sample of row ``name``: the per-sample reset (outside the
+    timer), then build and materialize through the noop sink."""
     _pre_sample_reset(name)
-    fn = fn or QUERIES[name]
     t0 = time.perf_counter()
-    df = fn(spark, SF_DIR)
-    # force full execution without shipping the result to python
-    df.write.format("noop").mode("overwrite").save()
+    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
 
 
-def _run(spark, name: str, fn=None) -> tuple[float, dict[str, float]]:
-    """Variance-controlled timing: one discarded warmup (absorbs codegen /
-    python-worker startup / parquet footer caching), then three timed
-    runs; the headline number is the MEDIAN and the (min, med, max)
-    spread is recorded alongside. The r7 driver re-run flagged 4
-    regressions >=1.5x on UNCHANGED source — single-sample minima have no
-    variance control, so run-to-run host noise (shared-VM steal, GC
-    stalls) was being recorded as signal. A median of three post-warmup
-    samples is robust to one stalled sample in either direction, and the
-    recorded spread lets a reader judge whether a round-over-round delta
-    exceeds the measurement's own noise floor.
+def _interleave(arms: list) -> list[tuple[float, dict]]:
+    """The one sampling loop. Each arm is a callable that takes one sample
+    and returns its seconds. Every arm gets one discarded warmup (codegen,
+    python-worker startup, parquet footer caching, checkpoint priming),
+    then ROUNDS strictly interleaved rounds (a, b, a, b, ...), so a
+    host-noise window hits every arm alike and a ratio between arms is a
+    genuine code or conf delta. Returns, per arm, its median and its
+    (min, med, max, load1) spread.
 
-    load1 is sampled AFTER the warmup and again after the last timed run,
-    and the recorded value is their mean (ADVICE r11): a pre-warmup sample
-    can be stale by the time the timed window opens — multi-second stream
-    warmups especially — weakening the noisy/clean adjudication the
-    regression block automates."""
-    _run_once(spark, name, fn)  # warmup, discarded
+    The median of three post-warmup samples is robust to one stalled
+    sample in either direction; single-sample minima had no variance
+    control and recorded shared-host noise as regressions. load1 is the
+    mean of the 1-minute loadavg after the warmups and after the last
+    round: a pre-warmup sample can be stale by the time the timed window
+    opens."""
+    for arm in arms:
+        arm()  # warmup, discarded
     load_open = _load1()
-    samples = sorted(_run_once(spark, name, fn) for _ in range(3))
-    load_close = _load1()
-    loads = [v for v in (load_open, load_close) if v >= 0]
-    spread = {
-        "min": round(samples[0], 4),
-        "med": round(samples[1], 4),
-        "max": round(samples[2], 4),
-        "load1": round(sum(loads) / len(loads), 2) if loads else -1.0,
-    }
-    return samples[1], spread
+    samples: list[list[float]] = [[] for _ in arms]
+    for _ in range(ROUNDS):
+        for arm, taken in zip(arms, samples):
+            taken.append(arm())
+    loads = [v for v in (load_open, _load1()) if v >= 0]
+    load1 = round(sum(loads) / len(loads), 2) if loads else -1.0
+    out = []
+    for taken in samples:
+        med = statistics.median(taken)
+        spread = {
+            "min": round(min(taken), 4),
+            "med": round(med, 4),
+            "max": round(max(taken), 4),
+            "load1": load1,
+        }
+        out.append((med, spread))
+    return out
+
+
+def _session(app: str):
+    """A bench session after the global warmup (JVM, codegen, parquet
+    footer caches). The warmup also runs prep() once (memoized), so its
+    conf.set of a key cannot override a --conf-paired arm's value."""
+    spark = get_spark(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    _sample(spark, "url_topk", QUERIES["url_topk"])
+    return spark
+
+
+def _write(filename: str, record: dict) -> None:
+    with open(os.path.join(HERE, filename), "w") as fh:
+        json.dump(record, fh, indent=1, sort_keys=True)
 
 
 def _previous_round_timings() -> tuple[str | None, dict[str, float]]:
-    """Best available prior full per-query timing map at sf0.1.
-
-    Preference order: the committed BENCH_FULL.json (written by every bench
-    run, always carries the complete map), then the newest driver-recorded
-    BENCH_r{N}.json whose tail parsed (since round 5 the final stdout line is
-    a compact summary, so driver files hold only the slowest-5 — still usable
-    as a partial baseline when no full file exists)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    full = os.path.join(here, "BENCH_FULL.json")
+    """The committed BENCH_FULL.json's per-row timings. Only an sf0.1
+    plain run writes that file, and every such run does."""
     try:
-        with open(full) as fh:
-            data = json.load(fh)
-        # a paired-protocol artifact (interleaved single-session medians)
-        # is not comparable to this run's warmup+median-of-3 numbers —
-        # skip it rather than adjudicate regressions across protocols
-        if (
-            data.get("sf") == 0.1
-            and data.get("queries")
-            and not str(data.get("protocol", "")).startswith("paired")
-        ):
-            return "BENCH_FULL.json", dict(data["queries"])
-    except Exception:
-        pass
-    # sort by round NUMBER — lexicographic order would put r10 before r9
-    files = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
-    )
-    for path in reversed(files):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-            parsed = data.get("parsed") or data
-            if parsed.get("sf") == 0.1 and parsed.get("queries"):
-                return os.path.basename(path), dict(parsed["queries"])
-        except Exception:
-            continue
-    return None, {}
+        with open(os.path.join(HERE, "BENCH_FULL.json")) as fh:
+            return "BENCH_FULL.json", dict(json.load(fh)["queries"])
+    except (OSError, ValueError, KeyError):
+        return None, {}
 
 
 def _load_paired_baseline(ref: str):
     """Check ``ref`` out in a git worktree, copy its package under an
-    alias importable ALONGSIDE the current one, and return its QUERIES
-    registry plus a cleanup closure.
+    alias importable ALONGSIDE the current one, and return that package
+    module, a closure that ships it to executors, and a cleanup closure.
 
     The alias rename (url_counter_mapreduce_spark → _paired_baseline_pkg)
     is what makes one-process interleaving possible: all intra-package
@@ -332,10 +210,9 @@ def _load_paired_baseline(ref: str):
     import subprocess
     import tempfile
 
-    here = os.path.dirname(os.path.abspath(__file__))
     wt = tempfile.mkdtemp(prefix="bench_paired_wt_")
     subprocess.run(
-        ["git", "-C", here, "worktree", "add", "--detach", wt, ref],
+        ["git", "-C", HERE, "worktree", "add", "--detach", wt, ref],
         check=True,
         capture_output=True,
     )
@@ -345,7 +222,6 @@ def _load_paired_baseline(ref: str):
     )
     sys.path.insert(0, wt)
     base_mod = __import__(alias)
-    base_queries = dict(base_mod.QUERIES)
 
     def ship_baseline(spark) -> None:
         """Ship the baseline package zip to executor python workers.
@@ -369,74 +245,56 @@ def _load_paired_baseline(ref: str):
     def cleanup() -> None:
         sys.path.remove(wt)
         subprocess.run(
-            ["git", "-C", here, "worktree", "remove", "--force", wt],
+            ["git", "-C", HERE, "worktree", "remove", "--force", wt],
             check=False,
             capture_output=True,
         )
         shutil.rmtree(wt, ignore_errors=True)
 
-    return base_queries, ship_baseline, cleanup
+    return base_mod, ship_baseline, cleanup
 
 
 def _paired_main(ref: str, only: list[str] | None = None) -> None:
-    """--paired <git-ref>: the mechanized cross-round adjudication
-    (VERDICT r11 item 3). Cross-round medians drift ~1.13× with host load
-    even with loadavg annotation, because the two rounds' samples run
-    minutes-to-days apart. Here BOTH versions run in ONE Spark session
-    with strictly interleaved timed samples (cur/base/cur/base/...), so
-    any host-noise window hits both sides equally and the per-query ratio
-    is a genuine code-delta signal. BENCH_FULL's regressions block is then
-    computed from paired ratios ONLY (no cross-round file comparison)."""
-    base_queries, ship_baseline, cleanup = _load_paired_baseline(ref)
+    """--paired <git-ref>: the cross-round adjudication. Cross-round
+    medians drift ~1.13× with host load, because the two rounds' samples
+    run minutes to days apart. Here both versions run in ONE Spark session
+    with interleaved samples, so the per-row ratio current/baseline is a
+    genuine code-delta signal, and the regressions block is computed from
+    paired ratios only. A row the baseline lacks runs alone and is listed
+    under ``unpaired``."""
+    base_pkg, ship_baseline, cleanup = _load_paired_baseline(ref)
     try:
-        from url_counter_mapreduce_spark import get_spark
-
-        spark = get_spark("spark-graft-bench-paired")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _session("spark-graft-bench-paired")
         ship_baseline(spark)
-        QUERIES["url_topk"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-        names = [n for n in BENCH_QUERIES if n in QUERIES] + STREAM_QUERIES
-        if only:
-            names = [n for n in names if n in only]
+        base_rows = _rows(base_pkg)
         timings: dict[str, float] = {}
         base_timings: dict[str, float] = {}
         ratios: dict[str, float] = {}
         unpaired: list[str] = []
-        for name in names:
-            cur_fn = QUERIES[name]
-            base_fn = base_queries.get(name)
-            if base_fn is None:
-                med, _ = _run(spark, name)
-                timings[name] = round(med, 4)
+        for name, fn in _select(_rows(PKG), only).items():
+            arms = [functools.partial(_sample, spark, name, fn)]
+            if name in base_rows:
+                arms.append(functools.partial(_sample, spark, name, base_rows[name]))
+            else:
                 unpaired.append(name)
-                continue
-            _run_once(spark, name, cur_fn)  # warmup current
-            _run_once(spark, name, base_fn)  # warmup baseline
-            cur_s, base_s = [], []
-            for _ in range(3):  # strict interleave: noise hits both sides
-                cur_s.append(_run_once(spark, name, cur_fn))
-                base_s.append(_run_once(spark, name, base_fn))
-            cur_med = sorted(cur_s)[1]
-            base_med = sorted(base_s)[1]
-            timings[name] = round(cur_med, 4)
-            base_timings[name] = round(base_med, 4)
-            ratios[name] = round(cur_med / base_med, 4) if base_med > 0 else -1.0
+            meds = [med for med, _ in _interleave(arms)]
+            timings[name] = round(meds[0], 4)
+            if len(meds) == 2:
+                base_timings[name] = round(meds[1], 4)
+                ratios[name] = round(meds[0] / meds[1], 4) if meds[1] > 0 else -1.0
 
         regressions = {
             n: {"base": base_timings[n], "now": timings[n], "ratio": r}
             for n, r in ratios.items()
             if timings[n] > 0.2 and r > 1.5
         }
-        sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-        sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
         full = {
             "metric": "headline_queries_total_sec",
             "value": round(sum(timings.values()), 4),
             "unit": "sec",
             "queries": timings,
             "protocol": "paired-interleaved+median-of-3",
-            "sf": sf_val,
+            "sf": SF,
             "paired": {
                 "ref": ref,
                 "baseline_queries": base_timings,
@@ -446,26 +304,17 @@ def _paired_main(ref: str, only: list[str] | None = None) -> None:
             "regressions": regressions,
         }
         print(json.dumps(full))
-        if sf_val == 0.1:
-            here = os.path.dirname(os.path.abspath(__file__))
-            # paired artifacts persist ONLY under their own name: paired
-            # medians come from interleaved single-session samples (no
-            # spreads, no ship rows), so letting them overwrite
-            # BENCH_FULL.json would hand a later unpaired run's
-            # _previous_round_timings a baseline measured under a
-            # different protocol (ADVICE r12)
-            with open(os.path.join(here, "BENCH_PAIRED.json"), "w") as fh:
-                json.dump(full, fh, indent=1, sort_keys=True)
-        med_ratio = statistics.median(ratios.values()) if ratios else -1.0
+        if SF == 0.1:
+            _write("BENCH_PAIRED.json", full)
         print(
             json.dumps(
                 {
                     "metric": "paired_median_ratio",
-                    "value": med_ratio,
+                    "value": statistics.median(ratios.values()) if ratios else -1.0,
                     "ref": ref,
                     "n_paired": len(ratios),
                     "n_regressions": len(regressions),
-                    "sf": sf_val,
+                    "sf": SF,
                 }
             )
         )
@@ -476,61 +325,37 @@ def _paired_main(ref: str, only: list[str] | None = None) -> None:
 
 def _conf_paired_main(key: str, val_a: str, val_b: str, only: list[str] | None = None) -> None:
     """--conf-paired <conf-key> <valA> <valB>: same-code, per-arm
-    session-conf A/B (VERDICT r13 item 1). ``--paired`` runs both code
-    versions in ONE session, so a SESSION-CONF change applies to both arms
-    identically and is structurally invisible to it — exactly the
-    instrument gap that left the 256 KB AQE coalescing floor's suite-level
-    net unproven in round 13. Here the code is fixed and the conf is
-    flipped around every timed sample, strictly interleaved
-    a/b/a/b/a/b per query, so host-noise windows hit both arms equally
-    and the per-query ratio isolates the conf's effect. Only
-    runtime-settable SQL confs qualify (minPartitionSize,
-    parallelismFirst, advisoryPartitionSizeInBytes are; JVM-startup confs
-    are not — spark.conf.set would raise)."""
-    spark = get_spark("spark-graft-bench-confpaired")
-    spark.sparkContext.setLogLevel("ERROR")
-    # global warmup also runs prep() once (memoized), so its
-    # conf.set of this key cannot override the per-arm values below
-    QUERIES["url_topk"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    session-conf A/B. ``--paired`` runs both code versions in ONE session,
+    so a session-conf change applies to both arms alike and is invisible
+    to it. Here the code is fixed and each arm's sample runs under its own
+    value, set with ledger.scoped_conf, so the per-row ratio B/A isolates
+    the conf's effect. Only runtime-settable SQL confs qualify
+    (minPartitionSize, parallelismFirst, advisoryPartitionSizeInBytes
+    are; JVM-startup confs are not — spark.conf.set would raise)."""
+    spark = _session("spark-graft-bench-confpaired")
 
-    names = [n for n in BENCH_QUERIES if n in QUERIES] + STREAM_QUERIES
-    extra = dict(_ship_variants())
-    from url_counter_mapreduce_spark.streaming.steady import steady_variants
+    def arm(val: str, name: str, fn) -> float:
+        with ledger.scoped_conf(spark, {key: val}):
+            return _sample(spark, name, fn)
 
-    extra.update(steady_variants())
-    names += list(extra)
-    if only:
-        names = [n for n in names if n in only]
     a_t: dict[str, float] = {}
     b_t: dict[str, float] = {}
     ratios: dict[str, float] = {}
-    for name in names:
-        fn = QUERIES.get(name) or extra[name]
-        spark.conf.set(key, val_a)
-        _run_once(spark, name, fn)  # warmup arm A
-        spark.conf.set(key, val_b)
-        _run_once(spark, name, fn)  # warmup arm B
-        sa: list[float] = []
-        sb: list[float] = []
-        for _ in range(3):  # strict interleave: noise hits both arms
-            spark.conf.set(key, val_a)
-            sa.append(_run_once(spark, name, fn))
-            spark.conf.set(key, val_b)
-            sb.append(_run_once(spark, name, fn))
-        am, bm = sorted(sa)[1], sorted(sb)[1]
+    for name, fn in _select(_rows(PKG), only).items():
+        (am, _), (bm, _) = _interleave(
+            [functools.partial(arm, val_a, name, fn), functools.partial(arm, val_b, name, fn)]
+        )
         a_t[name] = round(am, 4)
         b_t[name] = round(bm, 4)
         ratios[name] = round(bm / am, 4) if am > 0 else -1.0
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     out = {
         "metric": "conf_paired_ab",
         "conf_key": key,
         "arm_a": val_a,
         "arm_b": val_b,
         "unit": "sec",
-        "sf": sf_val,
+        "sf": SF,
         "protocol": "conf-paired-interleaved+median-of-3",
         "n": len(ratios),
         "total_a": round(sum(a_t.values()), 4),
@@ -540,107 +365,31 @@ def _conf_paired_main(key: str, val_a: str, val_b: str, only: list[str] | None =
         "queries_b": b_t,
         "ratios_b_over_a": ratios,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_CONF_PAIRED.json"), "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-    print(
-        json.dumps(
-            {
-                k: out[k]
-                for k in (
-                    "metric",
-                    "conf_key",
-                    "arm_a",
-                    "arm_b",
-                    "sf",
-                    "n",
-                    "total_a",
-                    "total_b",
-                    "median_ratio_b_over_a",
-                )
-            }
-        )
-    )
+    _write("BENCH_CONF_PAIRED.json", out)
+    summary = ("metric", "conf_key", "arm_a", "arm_b", "sf", "n", "total_a", "total_b",
+               "median_ratio_b_over_a")
+    print(json.dumps({k: out[k] for k in summary}))
     spark.stop()
 
 
 def main() -> None:
-    spark = get_spark("spark-graft-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warmup: JVM, codegen, parquet footer caches
-    QUERIES["url_topk"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
+    spark = _session("spark-graft-bench")
     timings: dict[str, float] = {}
     spreads: dict[str, dict[str, float]] = {}
-    for name in BENCH_QUERIES:
-        if name not in QUERIES:
-            continue
-        med, spread = _run(spark, name)
+    for name, fn in _rows(PKG).items():
+        [(med, spread)] = _interleave([functools.partial(_sample, spark, name, fn)])
         timings[name] = round(med, 4)
         spreads[name] = spread
 
-    # streaming surface: warmup drain (absorbs state-store / python-worker
-    # first-start cost) then median-of-3 timed AvailableNow drains
-    for name in STREAM_QUERIES:
-        med, spread = _run(spark, name)
-        spread["samples"] = 3
-        timings[name] = round(med, 4)
-        spreads[name] = spread
-
-    # sketch ship plans: same protocol, callables outside the registry
-    for name, fn in _ship_variants().items():
-        med, spread = _run(spark, name, fn)
-        timings[name] = round(med, 4)
-        spreads[name] = spread
-
-    # steady-state stream rows (VERDICT r12 item 8): the stream_* rows
-    # above charge a full per-drain startup; these measure the DEPLOYMENT
-    # marginal — checkpoint resume + one-delta processing (the bench
-    # warmup primes the persistent checkpoint; each timed sample appends
-    # a delta file and drains only it; see streaming/steady.py)
-    from url_counter_mapreduce_spark.streaming.steady import steady_variants
-
-    _steady = steady_variants()
-    for name, fn in _steady.items():
-        med, spread = _run(spark, name, fn)
-        spread["samples"] = 3
-        timings[name] = round(med, 4)
-        spreads[name] = spread
-
-    # end-of-run re-verification: a sustained multi-minute noise window on a
-    # shared host can slow a whole stretch of queries past any per-query
-    # resampling. Queries whose MEDIAN still looks regressed vs the last
-    # recorded round get one more median-of-3 now (typically minutes later,
-    # under different host conditions); keep the faster median. This only
-    # ever replaces a timing with a corroborated re-measurement of the same
-    # query — it cannot hide a true regression, which reproduces.
-    _, _prev = _previous_round_timings()
-    _ship = dict(_ship_variants())
-    _ship.update(_steady)  # re-verify path must resolve steady rows too (same
-    # closures — their primed checkpoints carry over, so a re-verify stays a
-    # marginal drain, not a re-prime)
-    for name, t in list(timings.items()):
-        if name in _prev and t > 0.2 and t > 1.3 * _prev[name]:
-            med, spread = _run(spark, name, _ship.get(name))
-            if name.startswith(STREAM_PREFIX):
-                spread["samples"] = 3
-            if med < t:
-                timings[name] = round(med, 4)
-                spreads[name] = spread
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     baseline_file, prev = _previous_round_timings()
-    full, line = _summarize(timings, spreads, prev, sf_val, baseline_file)
+    full, line = _summarize(timings, spreads, prev, SF, baseline_file)
     # full per-query map: an EARLIER stdout line + a committed file. The
     # driver captures only the last ~2000 chars of stdout, so the FINAL line
     # must stay well under that (round 4 lost its perf signal to exactly this
     # truncation — BENCH_r04.json parsed:null).
     print(json.dumps(full))
-    if sf_val == 0.1:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_FULL.json"), "w") as fh:
-            json.dump(full, fh, indent=1, sort_keys=True)
+    if SF == 0.1:
+        _write("BENCH_FULL.json", full)
     print(line)
     spark.stop()
 

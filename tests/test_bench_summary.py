@@ -1,6 +1,6 @@
-"""bench.py's run summary on synthetic timings: true medians for an even
-number of samples, every regressed row on the final line, and that line
-under its size cap."""
+"""bench.py's sampling loop on scripted arms, and its run summary on
+synthetic timings: true medians for an even number of samples, every
+regressed row on the final line, and that line under its size cap."""
 
 import json
 
@@ -45,3 +45,25 @@ def test_summary_stays_under_the_cap_when_everything_regressed():
     assert summary["queries"]  # the slowest rows survive the trim
     slowest = max(timings, key=timings.get)
     assert slowest in summary["queries"]
+
+
+def test_interleave_warms_each_arm_then_alternates_and_takes_true_medians():
+    calls: list[str] = []
+
+    def arm(label: str, times: list[float]):
+        script = iter(times)
+
+        def sample() -> float:
+            calls.append(label)
+            return next(script)
+
+        return sample
+
+    # first value of each script is the discarded warmup
+    a = arm("A", [99.0, 3.0, 1.0, 2.0])
+    b = arm("B", [0.0, 5.0, 9.0, 7.0])
+    (a_med, a_spread), (b_med, b_spread) = bench._interleave([a, b])
+    assert calls == ["A", "B", "A", "B", "A", "B", "A", "B"]
+    assert (a_med, b_med) == (2.0, 7.0)
+    assert (a_spread["min"], a_spread["med"], a_spread["max"]) == (1.0, 2.0, 3.0)
+    assert (b_spread["min"], b_spread["med"], b_spread["max"]) == (5.0, 7.0, 9.0)

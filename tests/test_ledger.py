@@ -62,6 +62,24 @@ def test_clear_caches_releases_every_family(spark):
     assert not _persisted(spark) - before
 
 
+def test_uncached_ivf_indexes_are_ledger_owned(spark):
+    """An IVF index built without a cache key lives in the ledger's
+    "ivf-index" family, so clear_caches releases every RDD five uncached
+    ivf_topk calls persisted. Each call trains a different cell count, so
+    no two indexes share one cached plan."""
+    from url_counter_mapreduce_spark.operators.similarity import ivf_topk
+
+    rows = [(i, [float((i * 7 + d) % 5) - 2.0 for d in range(8)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    clear_caches(spark)
+    before = _persisted(spark)
+    for n_cells in range(2, 7):
+        ivf_topk(emb, n_queries=4, k=2, n_cells=n_cells).count()
+    assert _persisted(spark) - before
+    clear_caches(spark)
+    assert not _persisted(spark) - before
+
+
 def test_repeat_calls_release_superseded_checkpoints(spark):
     """Re-invoking a query releases the checkpoints of its previous
     invocation: the number of RDDs the calls hold persisted stays flat."""

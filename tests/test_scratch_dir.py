@@ -79,3 +79,25 @@ def test_real_artifact_lands_under_knob(monkeypatch, spark, tmp_path):
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR")
     default_root = index_store.index_dir(SF_SMOKE)
     assert default_root != root
+
+
+def test_refresh_scratch_rewrites_only_when_the_source_changes(tmp_path):
+    """The write runs once per source fingerprint: an untouched source is
+    skipped, and a 1 µs mtime move within the same second rewrites."""
+    src = tmp_path / "documents.parquet"
+    src.write_bytes(b"v1")
+    t_ns = 1_700_000_000 * 10**9 + 500_000_000
+    os.utime(src, ns=(t_ns, t_ns))
+    d = str(tmp_path / "derived")
+    writes = []
+
+    def refresh(tag=8):
+        return tables.refresh_scratch(d, str(src), tag, lambda: writes.append(tag))
+
+    assert refresh() == d and refresh() == d
+    assert writes == [8]
+    os.utime(src, ns=(t_ns, t_ns + 1000))  # same size, same whole second
+    refresh()
+    assert writes == [8, 8]
+    refresh(tag=16)  # a changed layout parameter rewrites too
+    assert writes == [8, 8, 16]

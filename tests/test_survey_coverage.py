@@ -486,15 +486,18 @@ def test_readme_surface_counts_match_registry():
 
 
 def test_bench_covers_every_query():
-    """Every registry query is benched: batch queries via BENCH_QUERIES
-    (warmup + median-of-3), stream_* queries via STREAM_QUERIES (one
-    AvailableNow drain each) — the union must be the whole registry with
-    no overlap or duplicates."""
+    """Every registry query is a bench row exactly once, and the only other
+    rows are the 4 sketch ship plans and the 3 steady-state stream rows."""
     import bench
 
-    assert set(bench.STREAM_QUERIES) == {
-        q for q in QUERIES if q.startswith(bench.STREAM_PREFIX)
-    }
-    assert set(bench.BENCH_QUERIES) | set(bench.STREAM_QUERIES) == set(QUERIES)
-    assert not set(bench.BENCH_QUERIES) & set(bench.STREAM_QUERIES)
-    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES))
+    rows = bench._rows(bench.PKG)
+    ship = [n for n in rows if n.endswith("_sketch_ship")]
+    steady = [n for n in rows if n.endswith("_steady")]
+    assert len(ship) == 4 and len(steady) == 3
+    assert set(ship) == set(bench.SHIP_ROWS)
+    # rows is a dict, so each name appears once; registered names come first
+    assert list(rows)[: len(QUERIES)] == [
+        *(q for q in QUERIES if not q.startswith("stream_")),
+        *(q for q in QUERIES if q.startswith("stream_")),
+    ]
+    assert len(rows) == len(QUERIES) + 7

@@ -144,63 +144,33 @@ def decode_blobs(payloads: DataFrame) -> DataFrame:
     blob's sha256 (status 'fake'). Audio rows carry (sample_rate,
     n_channels) and use n_frames for AUDIO frames (data bytes /
     block_align); image rows leave the audio fields NULL.
-
-    NB: the closure is deliberately self-contained (imports + helpers
-    inside) so cloudpickle ships it by value — executors' Python workers
-    need no access to this package on their sys.path.
     """
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-        import io as _io
-        import struct as _st
+        import io
 
         try:
             from PIL import Image  # type: ignore
         except ImportError:
             Image = None
 
-        def p_png(blob):
-            if len(blob) < 24 or blob[:8] != b"\x89PNG\r\n\x1a\n" or blob[12:16] != b"IHDR":
-                return None
-            w, h = _st.unpack(">II", blob[16:24])
-            return int(w), int(h), 1
-
-        def p_wav(blob):
-            if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-                return None
-            pos, rate, chans, block, nframes = 12, None, None, None, None
-            while pos + 8 <= len(blob):
-                cid = blob[pos : pos + 4]
-                (size,) = _st.unpack("<I", blob[pos + 4 : pos + 8])
-                if cid == b"fmt " and size >= 16:
-                    if pos + 24 > len(blob):  # truncated fmt chunk
-                        return None
-                    _f, chans, rate, _b, block, _bt = _st.unpack("<HHIIHH", blob[pos + 8 : pos + 24])
-                elif cid == b"data" and block:
-                    nframes = size // block
-                pos += 8 + size + (size & 1)
-            if rate is None or nframes is None:
-                return None
-            return int(rate), int(chans), int(nframes)
-
         def decode_one(blob: bytes) -> tuple:
             blob = bytes(blob)
-            png = p_png(blob)
+            png = parse_png(blob)
             if png is not None:
                 w, h, nf = png
                 return w, h, nf, None, None, "png"
-            wav = p_wav(blob)
+            wav = parse_wav(blob)
             if wav is not None:
                 rate, chans, nf = wav
                 return None, None, nf, rate, chans, "wav"
             if Image is not None:
                 try:
-                    with Image.open(_io.BytesIO(blob)) as im:
+                    with Image.open(io.BytesIO(blob)) as im:
                         return im.width, im.height, getattr(im, "n_frames", 1), None, None, "pil"
                 except Exception:
                     pass  # not an image (or truncated) → deterministic fake
-            d = _hl.sha256(blob).digest()
+            d = hashlib.sha256(blob).digest()
             return 64 + d[0] % 192, 64 + d[1] % 192, 1 + d[2] % 30, None, None, "fake"
 
         for pdf in batches:

@@ -285,27 +285,6 @@ def _best_cell_sql(cents: list, col: str) -> str:
     return f"{_cell_scores_sql(cents, col)}[0].cell"
 
 
-def _l2_cell_scores_sql(cents: list, col: str) -> str:
-    """Per-row array of (cell, d) structs sorted best-first under L2,
-    centroids as literals. d = |c|² − 2·dot(v, c) — the |v|² term is
-    constant across cells for a given row, so argmin d == argmin L2²."""
-    from ..functions.vector import dot_expr
-
-    structs = ", ".join(
-        f"named_struct('cell', {cell}, "
-        f"'d', CAST({sum(x * x for x in c)!r} AS DOUBLE) - 2.0D * {dot_expr(col, _lit_arr(c))})"
-        for cell, c in cents
-    )
-    return (
-        f"array_sort(array({structs}), (a, b) -> CASE WHEN a.d < b.d THEN -1 "
-        f"WHEN a.d > b.d THEN 1 WHEN a.cell < b.cell THEN -1 ELSE 1 END)"
-    )
-
-
-def _l2_best_cell_sql(cents: list, col: str) -> str:
-    return f"{_l2_cell_scores_sql(cents, col)}[0].cell"
-
-
 # --------------------------------------------------------------------------
 # Integer-quantized deterministic k-means (round 7)
 #
@@ -401,23 +380,19 @@ def build_ivf_index_q(
     frame, all map-only literal-centroid projections); the assignment
     table additionally carries the quantized vector so probe-cell
     computation reuses it. Memoized like build_ivf_index."""
-    full_key = (cache_key, "q", n_cells, iters) if cache_key is not None else None
+    full_key = (_index_key(cache_key), "q", n_cells, iters)
     cache = _ivf_index(emb)
-    if full_key is not None and full_key in cache:
+    if full_key in cache:
         return cache.get(full_key)
     embq = emb.withColumn("xq", F.expr(_xq_expr("embedding"))).persist()
     cents = _kmeans_centroids_q(embq.select("vec_id", "xq"), n_cells, iters)
     assigned = embq.withColumn("cell", F.expr(_int_best_cell_sql(cents, "xq"))).persist()
     assigned.count()  # materialize the index; training cache no longer needed
     embq.unpersist()
-    if full_key is not None:
-        cache.put(full_key, (cents, assigned))
-    return cents, assigned
+    return cache.put(full_key, (cents, assigned))
 
 
-def _kmeans_centroids(
-    emb: DataFrame, n_cells: int, iters: int, metric: str = "cos"
-) -> list:
+def _kmeans_centroids(emb: DataFrame, n_cells: int, iters: int) -> list:
     """Deterministic Lloyd k-means over an embedding DataFrame: seeds are
     the vectors with vec_id < n_cells; each iteration assigns every vector
     to its best cell via the literal-centroid projection (no join, no
@@ -425,20 +400,16 @@ def _kmeans_centroids(
     per-dimension means. Centroids (k × d floats) are collected to the
     driver between iterations — O(k·d), not O(N) — which breaks the
     exponential lineage growth a pure-DataFrame loop would build. Returns
-    [(cell, [centroid])]. Cells that lose all members drop out.
-
-    ``metric``: 'cos' assigns by cosine (the IVF coarse quantizer), 'l2'
-    by Euclidean distance (the PQ sub-quantizers — Jégou et al. train
-    codebooks under L2).
+    [(cell, [centroid])]. Cells that lose all members drop out. Vectors
+    are assigned by cosine (the IVF coarse quantizer).
 
     The caller is expected to persist() emb — each iteration re-reads it."""
-    best = _best_cell_sql if metric == "cos" else _l2_best_cell_sql
     cents = [
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.filter(F.col("vec_id") < n_cells).select("vec_id", "embedding").collect()
     ]
     for _ in range(iters):
-        assigned = emb.withColumn("cell", F.expr(best(cents, "embedding")))
+        assigned = emb.withColumn("cell", F.expr(_best_cell_sql(cents, "embedding")))
         new = (
             assigned.select("cell", F.posexplode("embedding").alias("pos", "x"))
             .groupBy("cell", "pos")
@@ -467,6 +438,13 @@ def _ivf_index(emb: DataFrame) -> ledger.Family:
     return ledger.of(emb.sparkSession).family("ivf-index", release=_unpersist_index_entry)
 
 
+def _index_key(cache_key):
+    """``cache_key``, or for an uncached build a fresh key no later call
+    can hit: the index still lives in the "ivf-index" family, so it is
+    LRU-bounded and :func:`ledger.clear_caches` releases it."""
+    return object() if cache_key is None else cache_key
+
+
 def build_ivf_index(
     emb: DataFrame, n_cells: int = 8, iters: int = 3, cache_key=None
 ) -> tuple:
@@ -475,23 +453,20 @@ def build_ivf_index(
     Corpus passes: `iters` training passes over the CACHED embedding frame
     + one assignment pass, all map-only projections (literal centroids) —
     no BroadcastNestedLoopJoin, no per-row window. The assignment table is
-    persisted and (with cache_key) memoized, so subsequent queries do
-    probe + rank only. Without a cache_key (tests, ad-hoc calls) the
-    persisted assignment lives until the session ends — short-lived
-    processes; long-lived sessions should pass a cache_key so repeat calls
-    share one copy."""
-    full_key = (cache_key, n_cells, iters) if cache_key is not None else None
+    persisted in the session's "ivf-index" family and (with cache_key)
+    memoized, so subsequent queries do probe + rank only. Without a
+    cache_key (tests, ad-hoc calls) every call builds a fresh index; the
+    family's LRU bound and ``clear_caches`` release it."""
+    full_key = (_index_key(cache_key), n_cells, iters)
     cache = _ivf_index(emb)
-    if full_key is not None and full_key in cache:
+    if full_key in cache:
         return cache.get(full_key)
     emb = emb.persist()
     cents = _kmeans_centroids(emb, n_cells, iters)
     assigned = emb.withColumn("cell", F.expr(_best_cell_sql(cents, "embedding"))).persist()
     assigned.count()  # materialize the index; training cache no longer needed
     emb.unpersist()
-    if full_key is not None:
-        cache.put(full_key, (cents, assigned))
-    return cents, assigned
+    return cache.put(full_key, (cents, assigned))
 
 
 def ivf_topk(
@@ -590,9 +565,9 @@ def build_pq_index(
     updates, bit-reproducible and replayed verbatim by the DuckDB oracle;
     ADC lookup tables dot the raw float query subvectors against the
     dequantized (cq/1e6) codewords."""
-    key = (cache_key, "q", n_cells, iters, PQ_M, PQ_KS) if cache_key is not None else None
+    key = (_index_key(cache_key), "q", n_cells, iters, PQ_M, PQ_KS)
     cache = _ivf_index(emb)
-    if key is not None and key in cache:
+    if key in cache:
         return cache.get(key)
     dim = len(emb.select("embedding").first()["embedding"])
     if dim % PQ_M != 0:
@@ -622,10 +597,7 @@ def build_pq_index(
     ).persist()
     encoded.count()  # materialize; training cache no longer needed
     embq.unpersist()
-    index = (coarse, books, subdim, encoded)
-    if key is not None:
-        cache.put(key, index)
-    return index
+    return cache.put(key, (coarse, books, subdim, encoded))
 
 
 def ivf_pq_topk(

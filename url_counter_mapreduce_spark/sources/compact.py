@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table, tmp_scratch_dir
+from ..tables import load_table, refresh_scratch, tmp_scratch_dir
 
 COMPACT_TARGET_BYTES = 4 * 1024 * 1024  # small target so the fixture corpus still yields >1 file
 SMALL_FILE_SHARDS = 64  # the "bad" pre-state: one tiny file per shard
@@ -61,21 +61,16 @@ def sink_compacted_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     file layout and row order cannot affect it) computed from the COMPACTED
     dataset, verified by the oracle against the original table."""
     docs = load_table(spark, sf_dir, "documents")
-    # scratch key includes a cheap content fingerprint (size + mtime) of the
-    # source parquet, not just its path: a regenerated fixture at the same
-    # path must re-shatter, or the query would silently compact stale data
-    # while the oracle reads the live table
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        key = f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        key = sf_dir
-    shattered = tmp_scratch_dir("shatter", key)
-    compacted = tmp_scratch_dir("compact", key)
-    marker = os.path.join(shattered, "_SUCCESS")
-    if not os.path.exists(marker):
-        docs.repartition(SMALL_FILE_SHARDS).write.mode("overwrite").parquet(shattered)
+    shattered = tmp_scratch_dir("shatter", sf_dir)
+    compacted = tmp_scratch_dir("compact", sf_dir)
+    # a regenerated fixture at the same path must re-shatter, or the query
+    # would silently compact stale data while the oracle reads the live table
+    refresh_scratch(
+        shattered,
+        os.path.join(sf_dir, "documents.parquet"),
+        SMALL_FILE_SHARDS,
+        lambda: docs.repartition(SMALL_FILE_SHARDS).write.mode("overwrite").parquet(shattered),
+    )
     compact_dataset(spark, shattered, compacted, COMPACT_TARGET_BYTES)
     back = spark.read.parquet(compacted)
     row_sig = (

@@ -10,42 +10,12 @@ the pruning itself asserted on the physical plan in tests/test_plans.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table, tmp_scratch_dir
-
-
-def _part_dir(sf_dir: str) -> str:
-    return tmp_scratch_dir("part", sf_dir)
-
-
-def _source_stamp(sf_dir: str) -> str:
-    """Content fingerprint of the source parquet (size+mtime): a
-    regenerated fixture must re-materialize the partitioned scratch, or
-    queries would aggregate stale partitions while the DuckDB oracle
-    reads fresh parquet (the sink_compacted_parquet lesson)."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    return f"{st.st_size}:{int(st.st_mtime)}"
-
-
-def _write_stamp(path: str, sf_dir: str) -> None:
-    import os
-
-    with open(os.path.join(path, "_STAMP"), "w") as f:
-        f.write(_source_stamp(sf_dir))
-
-
-def _stamp_fresh(path: str, sf_dir: str) -> bool:
-    import os
-
-    marker = os.path.join(path, "_STAMP")
-    if not os.path.exists(marker):
-        return False
-    with open(marker) as f:
-        return f.read() == _source_stamp(sf_dir)
+from ..tables import load_table, refresh_scratch, tmp_scratch_dir
 
 
 def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,9 +24,8 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition writer (one directory per lang); the read-back filter becomes
     a PartitionFilter, so only lang=en files are opened."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _part_dir(sf_dir)
+    path = tmp_scratch_dir("part", sf_dir)
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
-    _write_stamp(path, sf_dir)
     back = spark.read.parquet(path).filter(F.col("lang") == "en")
     return back.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -89,12 +58,15 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan asserted in tests/test_plans.py; correctness via the DuckDB
     oracle over the original parquet with the same inline dimension."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _part_dir(sf_dir)
-    # reuse the partitioned dataset only when its content stamp matches the
-    # current source parquet; a regenerated fixture forces a rewrite
-    if not _stamp_fresh(path, sf_dir):
-        docs.write.mode("overwrite").partitionBy("lang").parquet(path)
-        _write_stamp(path, sf_dir)
+    path = tmp_scratch_dir("part_dpp", sf_dir)
+    # the partitioned dataset is written once per source fingerprint; a
+    # regenerated fixture forces a rewrite
+    refresh_scratch(
+        path,
+        os.path.join(sf_dir, "documents.parquet"),
+        "lang",
+        lambda: docs.write.mode("overwrite").partitionBy("lang").parquet(path),
+    )
     fact = spark.read.parquet(path)
     # deliberately createDataFrame, NOT local_rows_df: a LocalRelation dim
     # constant-folds and the PartitionPruning rule no longer injects the

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table, tmp_scratch_dir
+from ..tables import load_table, refresh_scratch, tmp_scratch_dir
 
 
 def _rt_dir(kind: str, sf_dir: str) -> str:
@@ -121,26 +121,13 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the reader's partitioning knobs (maxPartitionBytes,
     filesMinPartitionNum) batch small files into tasks — the same
     small-files story as sink_compacted_parquet, on the ingest side."""
-    import hashlib
     import os
 
     docs = load_table(spark, sf_dir, "documents")
     sample = docs.filter(F.col("doc_id") < BINARYFILE_MAX_DOCS).select("doc_id", "text")
     d = _rt_dir("binfiles", sf_dir)
-    # reuse marker keyed on the sample-size constant AND a content
-    # fingerprint of the source parquet (the sink_compacted_parquet
-    # lesson): a changed cap or regenerated fixture must re-materialize,
-    # or the scan reads stale files while the oracle reads fresh parquet
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    stamp = f"{BINARYFILE_MAX_DOCS}:{st.st_size}:{int(st.st_mtime)}"
-    marker = os.path.join(d, "_DONE")
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read()
-    if current != stamp:
-        os.makedirs(d, exist_ok=True)
+
+    def write() -> None:
         for stale in os.listdir(d):
             if stale.endswith(".bin"):
                 os.unlink(os.path.join(d, stale))
@@ -148,8 +135,10 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         for _, row in pdf.iterrows():
             with open(os.path.join(d, f"{int(row.doc_id):06d}.bin"), "wb") as f:
                 f.write((row.text or "").encode("utf-8"))
-        with open(marker, "w") as f:
-            f.write(stamp)
+
+    # a changed cap or regenerated fixture re-materializes, or the scan
+    # would read stale files while the oracle reads fresh parquet
+    refresh_scratch(d, os.path.join(sf_dir, "documents.parquet"), BINARYFILE_MAX_DOCS, write)
     scanned = spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(d)
     return scanned.select(
         F.regexp_extract(F.col("path"), r"(\d{6})\.bin$", 1).cast("long").alias("doc_id"),
@@ -169,21 +158,14 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The added column is kept integral (2·n_chars) so the per-generation
     sums are exact BIGINTs — the oracle replays the generation split and
-    NULL semantics from the original parquet. Scratch is stamped on the
-    source's size+mtime (the sink_compacted_parquet lesson)."""
+    NULL semantics from the original parquet. Scratch is refreshed from
+    the source's fingerprint (tables.refresh_scratch)."""
     import os
 
     docs = load_table(spark, sf_dir, "documents")
     d = _rt_dir("evol", sf_dir)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    stamp = f"v2:{st.st_size}:{int(st.st_mtime)}"
-    marker = os.path.join(d, "_DONE")
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read()
-    if current != stamp:
+
+    def write() -> None:
         (
             docs.filter(F.col("doc_id") % 2 == 0)
             .select("doc_id", "text")
@@ -196,8 +178,8 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(d, "gen=2"))
         )
-        with open(marker, "w") as f:
-            f.write(stamp)
+
+    refresh_scratch(d, os.path.join(sf_dir, "documents.parquet"), "v2", write)
     back = spark.read.option("mergeSchema", "true").parquet(d)
     return back.groupBy("gen").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -126,27 +126,20 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     never happens."""
     import os
 
-    from ..tables import load_table, tmp_scratch_dir
+    from ..tables import load_table, refresh_scratch, tmp_scratch_dir
+    from .bucketed_files import write_bucketed_files
 
     docs = load_table(spark, sf_dir, "documents")
     d = tmp_scratch_dir("pyds", sf_dir)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    stamp = f"{PYDS_FILES}:{st.st_size}:{int(st.st_mtime)}"
-    marker = os.path.join(d, "_DONE")
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read()
-    if current != stamp:
-        from .bucketed_files import write_bucketed_files
-
-        os.makedirs(d, exist_ok=True)
-        # Distributed write of the reference's dataN.txt layout: bucket by
-        # doc_id % N — no per-row driver loop, scales with the corpus.
-        # NULL text rows become empty lines (coalesce), matching the
-        # tokenizer/oracle convention.
-        write_bucketed_files(
+    # Distributed write of the reference's dataN.txt layout: bucket by
+    # doc_id % N — no per-row driver loop, scales with the corpus. NULL
+    # text rows become empty lines (coalesce), matching the
+    # tokenizer/oracle convention.
+    refresh_scratch(
+        d,
+        os.path.join(sf_dir, "documents.parquet"),
+        PYDS_FILES,
+        lambda: write_bucketed_files(
             docs.select(
                 F.coalesce(F.col("text"), F.lit("")).alias("value"),
                 (F.col("doc_id") % PYDS_FILES).alias("bucket"),
@@ -154,9 +147,8 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             d,
             PYDS_FILES,
             "txt",
-        )
-        with open(marker, "w") as f:
-            f.write(stamp)
+        ),
+    )
     try:
         spark.dataSource.register(_pyds_classes())
     except Exception:

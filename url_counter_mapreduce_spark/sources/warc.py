@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table, tmp_scratch_dir
+from ..tables import load_table, refresh_scratch, tmp_scratch_dir
 
 WARC_FILES = 8
 
@@ -142,40 +142,31 @@ def _warc_record_expr() -> str:
 def _materialize_warc(spark: SparkSession, sf_dir: str) -> str:
     """Write the corpus as WARC_FILES dataN.warc files (distributed
     bucketed write + driver-side concat of each bucket's part files),
-    stamped on the source parquet's size+mtime so a regenerated fixture
-    re-materializes."""
+    refreshed from the source parquet's fingerprint so a regenerated
+    fixture re-materializes."""
     import os
 
-    d = tmp_scratch_dir("warc", sf_dir)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    stamp = f"{WARC_FILES}:{st.st_size}:{int(st.st_mtime)}"
-    marker = os.path.join(d, "_DONE")
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read()
-    if current == stamp:
-        return d
     from .bucketed_files import write_bucketed_files
 
-    os.makedirs(d, exist_ok=True)
+    d = tmp_scratch_dir("warc", sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     # each record's value ends '\r\n\r'; the text writer's row terminator
     # supplies the final '\n' — so the on-disk bytes end every record with
     # the spec's CRLF CRLF separator
-    write_bucketed_files(
-        docs.select(
-            F.expr(_warc_record_expr()).alias("value"),
-            (F.col("doc_id") % WARC_FILES).alias("bucket"),
-        ),
+    return refresh_scratch(
         d,
+        os.path.join(sf_dir, "documents.parquet"),
         WARC_FILES,
-        "warc",
+        lambda: write_bucketed_files(
+            docs.select(
+                F.expr(_warc_record_expr()).alias("value"),
+                (F.col("doc_id") % WARC_FILES).alias("bucket"),
+            ),
+            d,
+            WARC_FILES,
+            "warc",
+        ),
     )
-    with open(marker, "w") as f:
-        f.write(stamp)
-    return d
 
 
 def source_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -131,7 +131,9 @@ def steady_variants() -> dict:
         def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
             from ..tables import tmp_scratch_dir
 
-            base = tmp_scratch_dir(f"steady_{name}", sf_dir)
+            # keyed on the package name too, as ledger._ATTR is: a renamed
+            # copy of the package (bench.py --paired) keeps its own checkpoint
+            base = tmp_scratch_dir(f"steady_{name}", f"{__name__}:{sf_dir}")
             ckpt = os.path.join(base, "ckpt")
             if state["primed_for"] != sf_dir:
                 shutil.rmtree(base, ignore_errors=True)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +92,29 @@ def tmp_scratch_dir(prefix: str, key: str) -> str:
     uid = os.getuid() if hasattr(os, "getuid") else 0
     tag = hashlib.md5(key.encode()).hexdigest()[:8]
     return os.path.join(scratch_base_dir(), f"spark_graft_{prefix}_{uid}_{tag}")
+
+
+def refresh_scratch(d: str, src: str, tag, write: Callable[[], None]) -> str:
+    """The one freshness rule for scratch data derived from ``src``: run
+    ``write`` (which fills ``d``) only when ``d/_DONE`` differs from
+    ``f"{tag}:{file_fingerprint(src)}"``, then write that marker last, so
+    an interrupted write is redone. ``tag`` carries the layout parameters
+    (file counts, sample caps), so changing one rewrites too. The
+    fingerprint's nanosecond mtime catches a same-size fixture rewritten
+    within one second. Returns ``d``."""
+    stamp = f"{tag}:{file_fingerprint(src)}"
+    marker = os.path.join(d, "_DONE")
+    try:
+        with open(marker) as f:
+            if f.read() == stamp:
+                return d
+    except FileNotFoundError:
+        pass  # never written
+    os.makedirs(d, exist_ok=True)
+    write()
+    with open(marker, "w") as f:
+        f.write(stamp)
+    return d
 
 
 # (sf_dir, name) → (fingerprint, inferred StructType). Schema-metadata
