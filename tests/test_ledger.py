@@ -256,6 +256,48 @@ def test_one_memory_sink_drain_and_one_stateful_dedup_api():
     assert not tws, tws
 
 
+_PNG_WRITER = re.compile(r'b"\\x89PNG\\r\\n\\x1a\\n"\s*\+')
+_RIFF_WRITER = re.compile(r'b"RIFF"\s*\+')
+# the array tokenizer over the text column, NULL-safe or not
+_ARRAY_TOKENIZER = re.compile(r"filter\(split\((?:coalesce\()?text\b")
+
+
+def test_one_blob_kernel_one_codec_per_container_one_tokenizer_spelling():
+    """The multimodal leg's only mapInPandas is the per-row kernel
+    (multimodal.flatmap_blobs), each container has one writer, graph.py
+    applies the host regex once, and the array tokenizer over ``text`` is
+    spelled only in operators/core.py."""
+    from url_counter_mapreduce_spark.operators import multimodal
+
+    srcs = dict(_package_sources())
+    maps = [
+        (rel, i + 1)
+        for rel in ("operators/multimodal.py", "streaming/fingerprint.py")
+        for i, line in enumerate(_code_lines(srcs[rel]))
+        if ".mapInPandas(" in line
+    ]
+    assert len(maps) == 1, maps
+    assert maps[0][0] == "operators/multimodal.py", maps
+    lines, first = inspect.getsourcelines(multimodal.flatmap_blobs)
+    assert first <= maps[0][1] < first + len(lines), maps
+    ops = {rel: src for rel, src in srcs.items() if rel.startswith("operators/")}
+    for writer in (_PNG_WRITER, _RIFF_WRITER):
+        hits = [rel for rel, src in ops.items() for _ in writer.finditer(src)]
+        assert hits == ["operators/multimodal.py"], (writer.pattern, hits)
+    host_re = [
+        line for line in srcs["operators/graph.py"].splitlines()
+        if "URL_HOST_RE" in line and "import" not in line
+    ]
+    assert len(host_re) == 1, host_re
+    toks = [
+        f"{rel}:{src.count(chr(10), 0, m.start()) + 1}"
+        for rel, src in ops.items()
+        if rel != "operators/core.py"
+        for m in _ARRAY_TOKENIZER.finditer(src)
+    ]
+    assert not toks, toks
+
+
 TOOLS = os.path.join(REPO_ROOT, "tools")
 # a session is built in session.get_spark only; drive_contract.py imitates
 # the driver's plain session on purpose

@@ -329,3 +329,47 @@ def test_video_keyframe_contracts_and_general_lzw():
     # Code 8 is the KwKwK case: code == len(table) when it arrives.
     stream = pack([(4, 3), (0, 3), (1, 3), (6, 3), (8, 4), (5, 4)])
     assert _lzw_decode(stream, 2, 7) == bytes([0, 1, 0, 1, 0, 1, 0])
+
+
+class _CapturingFrame:
+    """Stands in for a DataFrame: records the function and schema handed
+    to mapInPandas so the batch function runs on scripted pandas batches,
+    with no Spark."""
+
+    def mapInPandas(self, func, schema):
+        self.func, self.schema = func, schema
+        return self
+
+
+def test_blob_kernel_row_shapes_on_scripted_batches():
+    """map_blobs (1→1): a None from fn is one row of NULLs, doc_id kept.
+    flatmap_blobs (1→N): a list is that many rows, a None is zero rows.
+    Both emit doc_id first, across batches, including an empty batch."""
+    import pandas as pd
+
+    from url_counter_mapreduce_spark.operators.multimodal import flatmap_blobs, map_blobs
+
+    b1 = pd.DataFrame({"doc_id": [1, 2, 3], "payload": [b"ab", b"", b"xyz"]})
+    b2 = pd.DataFrame({"doc_id": [4], "payload": [b"q"]})
+    empty = b1.iloc[:0]
+
+    one = map_blobs(
+        _CapturingFrame(), "payload", lambda b: (len(b), b.decode()) if b else None, "n int, s string"
+    )
+    assert one.schema == "doc_id long, n int, s string"
+    out = pd.concat(list(one.func(iter([b1, empty, b2]))), ignore_index=True)
+    assert list(out.columns) == ["doc_id", "n", "s"]
+    assert out["doc_id"].tolist() == [1, 2, 3, 4]
+    assert out["s"].tolist() == ["ab", None, "xyz", "q"]
+    assert pd.isna(out["n"][1]) and out["n"][[0, 2, 3]].tolist() == [2, 3, 1]
+
+    many = flatmap_blobs(
+        _CapturingFrame(),
+        "doc_id",
+        lambda i: [(i, k) for k in range(i)] if i % 2 else None,
+        "x long, k int",
+    )
+    parts = list(many.func(iter([b1, empty, b2])))
+    assert [len(p) for p in parts] == [4, 0, 0]
+    assert list(parts[1].columns) == ["doc_id", "x", "k"]
+    assert parts[0].values.tolist() == [[1, 1, 0], [3, 3, 0], [3, 3, 1], [3, 3, 2]]

@@ -1601,6 +1601,33 @@ def test_host_pagerank_ranks_hub_first_and_mass_bounded(spark, monkeypatch):
     assert sum(r["rank"] for r in out) <= 1.0 + 1e-6
 
 
+def test_host_graph_builders_keep_the_literal_www_dot(spark, monkeypatch):
+    """Every host-graph edge build normalizes hosts like url_host_stats
+    and the DuckDB oracles: the regex's ``www\\.`` is a literal dot, so
+    "wwwaexample.com" stays whole while "https://www.b.org/x" becomes
+    "b.org". A copy of the regex spliced into a SQL string literal loses
+    the backslash and strips "wwwa"."""
+    from url_counter_mapreduce_spark.operators import graph as graph_ops
+
+    text_val = "wwwaexample.com https://www.b.org/x wwwaexample.com"
+    docs = spark.createDataFrame(
+        [(1, text_val, "en", "s0", len(text_val))],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    monkeypatch.setattr(
+        "url_counter_mapreduce_spark.operators.graph.load_table",
+        lambda _s, _d, _n: docs,
+    )
+    und = {tuple(r) for r in graph_ops._host_undirected_edges(spark, "x").collect()}
+    assert und == {("b.org", "wwwaexample.com")}
+    nodes, edges = graph_ops._host_directed_graph(spark, "x")
+    assert {r.id for r in nodes.collect()} == {"b.org", "wwwaexample.com"}
+    assert {tuple(r) for r in edges.collect()} == {
+        ("wwwaexample.com", "b.org"),
+        ("b.org", "wwwaexample.com"),
+    }
+
+
 def test_triangle_census_matches_bruteforce(spark):
     """Degree-ordered distributed triangle counting vs itertools brute
     force on a seeded random graph — covers hubs (skewed degree), isolated

@@ -13,6 +13,7 @@ tests/test_plans.py enforces, here visible per query.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -27,6 +28,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 from url_counter_mapreduce_spark.plans.bnl_allowance import BNL_ALLOWANCE  # noqa: E402
 
 BNL_ALLOWED = set(BNL_ALLOWANCE)
+# one "(N) MapInPandas" / "(N) MapInArrow" line per node in the formatted
+# plan's detail section: the Python map stages, counted once each
+PYTHON_MAP = re.compile(r"^\(\d+\) MapIn(?:Pandas|Arrow)\b", re.M)
 
 
 def plan_of(spark, name: str) -> str:
@@ -61,6 +65,9 @@ def main() -> None:
             c = p.count(marker)
             if c:
                 feats.append(f"{label}×{c}" if c > 1 else label)
+        c = len(PYTHON_MAP.findall(p))
+        if c:
+            feats.append(f"python-map×{c}" if c > 1 else "python-map")
         if "CartesianProduct" in p:
             flags.append(f"{name}: CartesianProduct")
         if "BroadcastNestedLoopJoin" in p and name not in BNL_ALLOWED:

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from .. import ledger
 from ..ledger import checkpoint, scoped_conf
 from ..tables import load_table, register_views
+from .core import TOKS, TOKS_SAFE
 
 RANGE_WINDOW_S = 120  # pair events of the same user within 2 minutes
 
@@ -160,7 +161,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark_graft_bstats": docs.select(
                 "doc_id",
                 F.expr(
-                    "CAST(size(filter(split(text, ' '), x -> x != '')) AS BIGINT)"
+                    f"CAST(size({TOKS}) AS BIGINT)"
                 ).alias("n_tokens"),
             ),
         }
@@ -1121,10 +1122,10 @@ def skyline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (
         docs.select(
             F.expr(
-                "CAST(size(filter(split(coalesce(text, ''), ' '), x -> x != '')) AS BIGINT)"
+                f"CAST(size({TOKS_SAFE}) AS BIGINT)"
             ).alias("x"),
             F.expr(
-                "CAST(size(array_distinct(filter(split(coalesce(text, ''), ' '), x -> x != ''))) AS BIGINT)"
+                f"CAST(size(array_distinct({TOKS_SAFE})) AS BIGINT)"
             ).alias("y"),
         )
         .groupBy("x")
@@ -1482,7 +1483,7 @@ def recursive_cte_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         WITH RECURSIVE t AS (
-            SELECT transform(filter(split(coalesce(text, ''), ' '), x -> x != ''),
+            SELECT transform({TOKS_SAFE},
                        tk -> coalesce(nullif(regexp_extract(lower(tk), '{URL_HOST_RE}', 1), ''),
                                       lower(tk))) AS hosts
             FROM {{docs}}

@@ -46,6 +46,16 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
 
+# The same rule as one array-valued SQL expression over ``text``: every
+# array tokenizer in the package spells it with these two strings.
+TOKS = "filter(split(text, ' '), x -> x != '')"
+# NULL-safe variant: split(NULL) propagates NULL and size(NULL) = -1 in
+# Spark while DuckDB yields NULL — coalescing to '' gives an EMPTY token
+# array in both engines, so counts stay meaningful (0, not -1) on
+# NULL-text rows.
+TOKS_SAFE = "filter(split(coalesce(text, ''), ' '), x -> x != '')"
+
+
 def tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 tokenize/flatten (main.go:22-33): split on ' ', drop empty tokens.
 

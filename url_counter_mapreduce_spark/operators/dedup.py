@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from .. import ledger
 from ..ledger import checkpoint
 from ..tables import load_table, spread
+from .core import TOKS, TOKS_SAFE
 
 # number of minhash functions and band layout (4 bands x 2 rows)
 MINHASH_K = 8
@@ -54,7 +55,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _tokens_expr() -> str:
     """Distinct non-empty space-split tokens (reference tokenizer semantics,
     main.go:24-26) as a Catalyst expression."""
-    return "array_distinct(filter(split(text, ' '), x -> x != ''))"
+    return f"array_distinct({TOKS})"
 
 
 def _shingles(df: DataFrame) -> DataFrame:
@@ -68,7 +69,7 @@ def _shingles(df: DataFrame) -> DataFrame:
     reference — re-tokenizing the whole text once per shingle element
     (measured 4–5× slowdown)."""
     toks = df.select("doc_id", "lang", "source", "text").withColumn(
-        "toks", F.expr("filter(split(text, ' '), x -> x != '')")
+        "toks", F.expr(TOKS)
     )
     return spread(toks).withColumn(
         "shingles",
@@ -497,7 +498,7 @@ def _substring_windows_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         toks = spread(docs.select("doc_id", "text")).withColumn(
-            "toks", F.expr("filter(split(coalesce(text, ''), ' '), x -> x != '')")
+            "toks", F.expr(TOKS_SAFE)
         )
         return (
             toks.filter(F.expr(f"size(toks) >= {SUBSTR_NGRAM}"))
@@ -585,7 +586,7 @@ def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # toks is recomputed here (one scan + split, no hashing) for the final
     # rebuild; the EXPENSIVE window hashing comes from the shared cache.
     toks = spread(docs.select("doc_id", "text")).withColumn(
-        "toks", F.expr("filter(split(coalesce(text, ''), ' '), x -> x != '')")
+        "toks", F.expr(TOKS_SAFE)
     )
     wins = _substring_windows_for(spark, sf_dir)
     owners = (
@@ -1498,7 +1499,7 @@ def dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" i -> array_join(slice(toks, i + 1, {n}), ' ')))"
         )
         fp = (
-            docs.select(F.expr(_tokens_non_distinct()).alias("toks"))
+            docs.select(F.expr(TOKS_SAFE).alias("toks"))
             .filter(F.expr(f"size(toks) >= {n}"))
             .select(F.md5(F.expr(f"array_join(array_sort({grams}), char(30))")).alias("h"))
         )
@@ -1517,12 +1518,6 @@ def dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = row if out is None else out.unionAll(row)
     return out
-
-
-def _tokens_non_distinct() -> str:
-    """Order-preserving non-empty space-split tokens (the n-gram curve
-    must keep duplicates and order, unlike _tokens_expr's distinct set)."""
-    return "filter(split(coalesce(text, ''), ' '), x -> x != '')"
 
 
 CONTAIN_T = 0.8  # containment threshold |A∩B| / |A|
@@ -1646,7 +1641,7 @@ def _cdc_chunk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
         F.coalesce("source", F.lit("unknown")).alias("source"),
-        F.expr(_tokens_non_distinct()).alias("toks"),
+        F.expr(TOKS_SAFE).alias("toks"),
     )
     toks = docs.filter(F.size("toks") > 0).select(
         "doc_id", "source", F.posexplode("toks").alias("pos", "tok")

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from .. import ledger
 from ..ledger import checkpoint, scoped_conf
 from ..tables import load_table
+from .core import TOKS_SAFE
 from .dedup import _verified_pairs_for
 
 
@@ -254,6 +255,43 @@ def dedup_groups(
     return connected_components(docs.select("doc_id"), edges)
 
 
+def _host_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One ``hosts`` array per document: every token, lower-cased, mapped
+    to its URL host (the text module's host regex) or kept whole when it
+    has none — the node domain of every host-graph query. The regex goes
+    in as a Column argument, not inside a SQL string literal, where the
+    parser would drop its backslashes (``www\\.`` would become ``www.``)."""
+    from .text import URL_HOST_RE
+
+    return load_table(spark, sf_dir, "documents").select(
+        F.transform(
+            F.expr(TOKS_SAFE),
+            lambda t: F.coalesce(
+                F.nullif(F.regexp_extract(F.lower(t), URL_HOST_RE, 1), F.lit("")), F.lower(t)
+            ),
+        ).alias("hosts")
+    )
+
+
+def _host_pairs(hosts: DataFrame) -> DataFrame:
+    """(src, dst) for every consecutive pair of different hosts within a
+    document — the directed host adjacency edges, with multiplicity; each
+    caller picks its own distinct, weight and checkpoint."""
+    return (
+        hosts.filter(F.expr("size(hosts) >= 2"))
+        .select(
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, size(hosts) - 2),"
+                    " i -> named_struct('src', hosts[i], 'dst', hosts[i + 1]))"
+                )
+            ).alias("p")
+        )
+        .select("p.src", "p.dst")
+        .filter(F.col("src") != F.col("dst"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # Host-graph PageRank — the URL-authority pass of web-corpus curation
 # (crawl frontiers and corpus quality weights both rank domains by link
@@ -284,35 +322,11 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the node id, shuffle ∝ edges (hosts, not corpus). The DuckDB oracle
     replays all PR_ITERS rounds as generated unrolled CTE stages."""
     from ..functions.vector import stable_round
-    from .text import URL_HOST_RE
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.expr("filter(split(coalesce(text, ''), ' '), x -> x != '')").alias("toks")
+    hosts = _host_sequences(spark, sf_dir).transform(checkpoint, eager=False)
+    edges = (
+        _host_pairs(hosts).groupBy("src", "dst").agg(F.count(F.lit(1)).cast("long").alias("w"))
     )
-    hosts = toks.select(
-        F.transform(
-            "toks",
-            lambda t: F.coalesce(
-                F.nullif(F.regexp_extract(F.lower(t), URL_HOST_RE, 1), F.lit("")),
-                F.lower(t),
-            ),
-        ).alias("hosts")
-    ).transform(checkpoint, eager=False)
-    pairs = (
-        hosts.filter(F.expr("size(hosts) >= 2"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(hosts) - 2),"
-                    " i -> named_struct('src', hosts[i], 'dst', hosts[i + 1]))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .filter(F.col("src") != F.col("dst"))
-    )
-    edges = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).cast("long").alias("w"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     e = edges.join(outw, "src").transform(checkpoint)  # built once, reused PR_ITERS times
     nodes = (
@@ -396,29 +410,9 @@ def _host_undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers fan the edge set into multiple plan branches (degree
     union, wedge self-join), and without truncation each branch would
     re-run the corpus explode+distinct."""
-    from .text import URL_HOST_RE
-
-    docs = load_table(spark, sf_dir, "documents")
-    hosts = docs.select(
-        F.expr(
-            "transform(filter(split(coalesce(text, ''), ' '), x -> x != ''),"
-            f" t -> coalesce(nullif(regexp_extract(lower(t), '{URL_HOST_RE}', 1), ''),"
-            " lower(t)))"
-        ).alias("hosts")
-    )
     return (
-        hosts.filter(F.expr("size(hosts) >= 2"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(hosts) - 2),"
-                    " i -> named_struct('a', least(hosts[i], hosts[i + 1]),"
-                    "                   'b', greatest(hosts[i], hosts[i + 1])))"
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .filter(F.col("a") != F.col("b"))
+        _host_pairs(_host_sequences(spark, sf_dir))
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
         .transform(checkpoint, eager=False)
     )
@@ -504,37 +498,8 @@ def khop_bfs_visited(spark: SparkSession, sf_dir: str, max_hops: int) -> DataFra
     the 'a%' seed hosts over the directed within-document host graph.
     Scale-safe by construction — each node is expanded exactly once, so
     cost is edges-adjacent-to-frontier per hop, never path enumeration."""
-    from .text import URL_HOST_RE
-
-    docs = load_table(spark, sf_dir, "documents")
-    hosts = (
-        docs.select(F.expr("filter(split(coalesce(text, ''), ' '), x -> x != '')").alias("toks"))
-        .select(
-            F.transform(
-                "toks",
-                lambda t: F.coalesce(
-                    F.nullif(F.regexp_extract(F.lower(t), URL_HOST_RE, 1), F.lit("")),
-                    F.lower(t),
-                ),
-            ).alias("hosts")
-        )
-        .transform(checkpoint, eager=False)
-    )
-    edges = (
-        hosts.filter(F.expr("size(hosts) >= 2"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(hosts) - 2),"
-                    " i -> named_struct('src', hosts[i], 'dst', hosts[i + 1]))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .transform(checkpoint)  # built once, probed KHOP_K times
-    )
+    hosts = _host_sequences(spark, sf_dir).transform(checkpoint, eager=False)
+    edges = _host_pairs(hosts).distinct().transform(checkpoint)  # built once, probed KHOP_K times
     nodes = hosts.select(F.explode("hosts").alias("host")).distinct()
     frontier = nodes.filter(F.col("host").startswith("a")).select(
         "host", F.lit(0).alias("hops")
@@ -676,28 +641,9 @@ def host_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational of two exact counts."""
     from ..functions.vector import stable_round
     from ..tables import scalar_join
-    from .text import URL_HOST_RE
 
-    docs = load_table(spark, sf_dir, "documents")
-    hosts = docs.select(
-        F.expr(
-            "transform(filter(split(coalesce(text, ''), ' '), x -> x != ''),"
-            f" t -> coalesce(nullif(regexp_extract(lower(t), '{URL_HOST_RE}', 1), ''),"
-            " lower(t)))"
-        ).alias("hosts")
-    )
     e = (
-        hosts.filter(F.expr("size(hosts) >= 2"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(hosts) - 2),"
-                    " i -> named_struct('src', hosts[i], 'dst', hosts[i + 1]))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .filter(F.col("src") != F.col("dst"))
+        _host_pairs(_host_sequences(spark, sf_dir))
         .distinct()
         .transform(checkpoint, eager=False)  # total count + reverse join share it
     )
@@ -928,31 +874,11 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from ..functions.vector import stable_round
-    from .text import URL_HOST_RE
 
-    docs = load_table(spark, sf_dir, "documents")
-    hosts = docs.select(
-        F.expr(
-            "transform(filter(split(coalesce(text, ''), ' '), x -> x != ''),"
-            f" t -> coalesce(nullif(regexp_extract(lower(t), '{URL_HOST_RE}', 1), ''),"
-            " lower(t)))"
-        ).alias("hosts")
-    ).transform(checkpoint, eager=False)
-    pairs = (
-        hosts.filter(F.expr("size(hosts) >= 2"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(hosts) - 2),"
-                    " i -> named_struct('src', hosts[i], 'dst', hosts[i + 1]))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .filter(F.col("src") != F.col("dst"))
-    )
+    hosts = _host_sequences(spark, sf_dir).transform(checkpoint, eager=False)
     edges = (
-        pairs.groupBy("src", "dst")
+        _host_pairs(hosts)
+        .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
         .transform(checkpoint)  # built once, probed 2·HITS_ITERS times
     )
@@ -1384,32 +1310,9 @@ def _scc_distributed(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 def _host_directed_graph(spark: SparkSession, sf_dir: str):
     """(nodes, edges) of the directed host adjacency graph — shared by
     host_scc and host_condensation."""
-    from .text import URL_HOST_RE
-
-    docs = load_table(spark, sf_dir, "documents")
-    hosts = docs.select(
-        F.expr(
-            "transform(filter(split(coalesce(text, ''), ' '), x -> x != ''),"
-            f" t -> coalesce(nullif(regexp_extract(lower(t), '{URL_HOST_RE}', 1), ''),"
-            " lower(t)))"
-        ).alias("hosts")
-    ).transform(checkpoint, eager=False)
+    hosts = _host_sequences(spark, sf_dir).transform(checkpoint, eager=False)
     nodes = hosts.select(F.explode("hosts").alias("id")).distinct()
-    edges = (
-        hosts.filter(F.expr("size(hosts) >= 2"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(hosts) - 2),"
-                    " i -> named_struct('src', hosts[i], 'dst', hosts[i + 1]))"
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return nodes, edges
+    return nodes, _host_pairs(hosts).distinct()
 
 
 # "scc-labels" ledger family: host_scc and host_condensation share the

@@ -1,12 +1,17 @@
 """Multimodal column plumbing (driver north star): image/audio/video are
-opaque ``binary`` columns with typed metadata; decode / feature-extraction
-run as Arrow-batched Python over ``mapInPandas``.
+opaque ``binary`` columns with typed metadata; synthesis, decode and
+feature extraction are per-row Python functions run by ONE Arrow-batched
+kernel, ``map_blobs`` / ``flatmap_blobs`` (the reference's single mapF
+extension point, as mapInPandas): a stage names its per-row function and
+its output columns, nothing else.
 
 The container has no image/audio libraries, so decode works from the
 PUBLIC container formats directly: PNG IHDR, RIFF/WAVE chunk walk, and
 GIF87a/89a block structure are parsed with stdlib struct-unpack (full
 pixel decode falls back to PIL behind an import-try, else a clearly
-labeled deterministic fake). The Spark-side plumbing is real and tested:
+labeled deterministic fake). Each container has one writer (``_png``,
+``_wav``, ``_gif``) shared by every generator, and mono 16-bit PCM one
+reader (``_mono_pcm``). The Spark-side plumbing is real and tested:
 binary column handling, mapInPandas schema contract, Arrow batch shape,
 partition-preserving metadata extraction.
 
@@ -19,8 +24,12 @@ Python's len/hashlib over the same bytes).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import io
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,11 +37,62 @@ from pyspark.sql import functions as F
 from .. import ledger
 from ..tables import load_table
 
-META_SCHEMA = "doc_id long, n_bytes long, digest string, decode_status string"
+try:  # optional: full image decode in decode_blobs
+    from PIL import Image  # type: ignore
+except ImportError:
+    Image = None
+
+# output columns of the stages below, without the doc_id the kernel adds
+META_SCHEMA = "n_bytes long, digest string, decode_status string"
 DECODE_SCHEMA = (
-    "doc_id long, width int, height int, n_frames int, "
-    "sample_rate int, n_channels int, decode_status string"
+    "width int, height int, n_frames int, sample_rate int, n_channels int, decode_status string"
 )
+
+
+def _blob_batches(col: str, fn: Callable, names: list[str]):
+    """The mapInPandas body: per Arrow batch, every row's ``fn(value)``
+    rows (a list of tuples over ``names``; None is no rows), each emitted
+    with that row's doc_id. Columns are plain Python lists; Arrow casts
+    them to the schema's types."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, rows = [], []
+            for doc_id, value in zip(pdf["doc_id"].tolist(), pdf[col].tolist()):
+                got = fn(value) or []
+                ids += [doc_id] * len(got)
+                rows += got
+            cols = list(zip(*rows)) if rows else [()] * len(names)
+            yield pd.DataFrame({"doc_id": ids, **{n: list(c) for n, c in zip(names, cols)}})
+
+    return run
+
+
+def flatmap_blobs(frame: DataFrame, col: str, fn: Callable, schema: str) -> DataFrame:
+    """The one per-row kernel of the multimodal leg, 1→N shape: one
+    mapInPandas over ``frame`` (which must carry ``doc_id``) that applies
+    ``fn`` to every value of ``col`` — an int for doc_id, bytes for a
+    binary column. ``fn`` returns a list of row tuples for ``schema`` (a
+    flat DDL list of the output columns, doc_id excluded) or None for no
+    rows; the result is doc_id plus those typed columns. No shuffle: rows
+    stay in their input partition."""
+    names = [c.split()[0] for c in schema.split(",")]
+    return frame.mapInPandas(_blob_batches(col, fn, names), schema=f"doc_id long, {schema}")
+
+
+def map_blobs(frame: DataFrame, col: str, fn: Callable, schema: str) -> DataFrame:
+    """1→1 shape of ``flatmap_blobs``: ``fn`` returns one row tuple, or
+    None for a row whose typed columns are all NULL."""
+    nulls = (None,) * len(schema.split(","))
+    return flatmap_blobs(frame, col, lambda v: [fn(v) or nulls], schema)
+
+
+def _synth(spark: SparkSession, sf_dir: str, gen: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, payload binary): ``gen(doc_id)`` for every document — the
+    in-engine blob corpus. On a real corpus, a scan of the binary column
+    takes this frame's place."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return map_blobs(docs, "doc_id", lambda i: (gen(i),), "payload binary")
 
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,53 +114,54 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte length + content digest per blob. Arrow moves the binary batches;
     Python touches each blob once. This is the shape of EXIF/container-header
     extraction at 100 TB: embarrassingly parallel, no shuffle."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "digest": pdf["payload"].map(lambda b: hashlib.sha256(b).hexdigest()),
-                    "decode_status": "stub",
-                }
-            )
-
-    return _payloads(spark, sf_dir).mapInPandas(extract, schema=META_SCHEMA)
+    return map_blobs(
+        _payloads(spark, sf_dir),
+        "payload",
+        lambda b: (len(b), hashlib.sha256(b).hexdigest(), "stub"),
+        META_SCHEMA,
+    )
 
 
-def png_bytes(width: int, height: int) -> bytes:
-    """Minimal VALID 8-bit grayscale PNG (public spec: signature + IHDR +
-    zlib IDAT + IEND, CRC-correct chunks) — built with stdlib only; the
-    container ships no codec libraries."""
-    import struct
-    import zlib
+def _png(width: int, height: int, scanlines: bytes) -> bytes:
+    """8-bit grayscale PNG around filter-prefixed scanlines (public spec:
+    signature + IHDR + zlib IDAT + IEND, CRC-correct chunks) — the one PNG
+    writer, stdlib only; the container ships no codec libraries."""
 
     def chunk(typ: bytes, data: bytes) -> bytes:
         body = typ + data
         return struct.pack(">I", len(data)) + body + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
 
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes(width) for _ in range(height))
-    return b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(scanlines))
+        + chunk(b"IEND", b"")
+    )
 
 
-def wav_bytes(sample_rate: int, n_channels: int, n_frames: int) -> bytes:
-    """Minimal VALID 16-bit PCM WAV (RIFF/WAVE + fmt + silent data)."""
-    import struct
-
+def _wav(sample_rate: int, n_channels: int, data: bytes) -> bytes:
+    """16-bit PCM RIFF/WAVE container (fmt + data chunks) around raw
+    little-endian samples — the one RIFF writer."""
     block_align = n_channels * 2
-    data = bytes(n_frames * block_align)
     fmt = struct.pack("<HHIIHH", 1, n_channels, sample_rate, sample_rate * block_align, block_align, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt + b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def png_bytes(width: int, height: int) -> bytes:
+    """Minimal VALID all-black 8-bit grayscale PNG."""
+    return _png(width, height, b"".join(b"\x00" + bytes(width) for _ in range(height)))
+
+
+def wav_bytes(sample_rate: int, n_channels: int, n_frames: int) -> bytes:
+    """Minimal VALID 16-bit PCM WAV (RIFF/WAVE + fmt + silent data)."""
+    return _wav(sample_rate, n_channels, bytes(n_frames * n_channels * 2))
+
+
 def parse_png(blob: bytes):
     """(width, height, n_frames) from a PNG's IHDR, or None if the bytes
     are not a PNG — struct-unpack of the container header, no codecs."""
-    import struct
-
     if len(blob) < 24 or blob[:8] != b"\x89PNG\r\n\x1a\n" or blob[12:16] != b"IHDR":
         return None
     w, h = struct.unpack(">II", blob[16:24])
@@ -110,8 +171,6 @@ def parse_png(blob: bytes):
 def parse_wav(blob: bytes):
     """(sample_rate, n_channels, n_audio_frames) from a WAV's fmt/data
     chunks (RIFF walk), or None if the bytes are not a WAV."""
-    import struct
-
     if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
         return None
     pos, rate, chans, block, nframes = 12, None, None, None, None
@@ -132,6 +191,27 @@ def parse_wav(blob: bytes):
     return int(rate), int(chans), int(nframes)
 
 
+def _decode_blob(blob: bytes) -> tuple:
+    """One decode_blobs row: PNG header, else WAV header, else PIL, else
+    the sha256-derived fake (see decode_blobs)."""
+    png = parse_png(blob)
+    if png is not None:
+        w, h, nf = png
+        return w, h, nf, None, None, "png"
+    wav = parse_wav(blob)
+    if wav is not None:
+        rate, chans, nf = wav
+        return None, None, nf, rate, chans, "wav"
+    if Image is not None:
+        try:
+            with Image.open(io.BytesIO(blob)) as im:
+                return im.width, im.height, getattr(im, "n_frames", 1), None, None, "pil"
+        except Exception:
+            pass  # not an image (or truncated) → deterministic fake
+    d = hashlib.sha256(blob).digest()
+    return 64 + d[0] % 192, 64 + d[1] % 192, 1 + d[2] % 30, None, None, "fake"
+
+
 def decode_blobs(payloads: DataFrame) -> DataFrame:
     """Decode an opaque (doc_id, payload binary) frame to typed media
     metadata via mapInPandas — the real schema/batching/per-blob-Python
@@ -145,49 +225,14 @@ def decode_blobs(payloads: DataFrame) -> DataFrame:
     n_channels) and use n_frames for AUDIO frames (data bytes /
     block_align); image rows leave the audio fields NULL.
     """
+    return map_blobs(payloads, "payload", _decode_blob, DECODE_SCHEMA)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
 
-        try:
-            from PIL import Image  # type: ignore
-        except ImportError:
-            Image = None
-
-        def decode_one(blob: bytes) -> tuple:
-            blob = bytes(blob)
-            png = parse_png(blob)
-            if png is not None:
-                w, h, nf = png
-                return w, h, nf, None, None, "png"
-            wav = parse_wav(blob)
-            if wav is not None:
-                rate, chans, nf = wav
-                return None, None, nf, rate, chans, "wav"
-            if Image is not None:
-                try:
-                    with Image.open(io.BytesIO(blob)) as im:
-                        return im.width, im.height, getattr(im, "n_frames", 1), None, None, "pil"
-                except Exception:
-                    pass  # not an image (or truncated) → deterministic fake
-            d = hashlib.sha256(blob).digest()
-            return 64 + d[0] % 192, 64 + d[1] % 192, 1 + d[2] % 30, None, None, "fake"
-
-        for pdf in batches:
-            dims = pdf["payload"].map(decode_one)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.array([t[0] for t in dims], dtype="Int32"),
-                    "height": pd.array([t[1] for t in dims], dtype="Int32"),
-                    "n_frames": pd.array([t[2] for t in dims], dtype="Int32"),
-                    "sample_rate": pd.array([t[3] for t in dims], dtype="Int32"),
-                    "n_channels": pd.array([t[4] for t in dims], dtype="Int32"),
-                    "decode_status": [t[5] for t in dims],
-                }
-            )
-
-    return payloads.mapInPandas(decode, schema=DECODE_SCHEMA)
+def media_bytes(doc_id: int) -> bytes:
+    """synth_media_payloads' generator: a PNG for even ids, a WAV for odd."""
+    if doc_id % 2 == 0:
+        return png_bytes(16 + doc_id % 240, 16 + (doc_id * 3) % 240)
+    return wav_bytes(8000 + 1000 * (doc_id % 8), 1 + (doc_id // 2) % 2, 100 + doc_id % 900)
 
 
 def synth_media_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,47 +243,7 @@ def synth_media_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays — the parse stage must recover exactly these values
     from the container HEADERS, so a generator/parser endianness or
     layout bug breaks the oracle, not just a unit test."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _st
-        import zlib as _zl
-
-        def chunk(typ, data):
-            body = typ + data
-            return _st.pack(">I", len(data)) + body + _st.pack(">I", _zl.crc32(body) & 0xFFFFFFFF)
-
-        def png(w, h):
-            ihdr = _st.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            raw = b"".join(b"\x00" + bytes(w) for _ in range(h))
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", _zl.compress(raw))
-                + chunk(b"IEND", b"")
-            )
-
-        def wav(rate, chans, nframes):
-            block = chans * 2
-            data = bytes(nframes * block)
-            fmt = _st.pack("<HHIIHH", 1, chans, rate, rate * block, block, 16)
-            body = (
-                b"WAVE" + b"fmt " + _st.pack("<I", len(fmt)) + fmt
-                + b"data" + _st.pack("<I", len(data)) + data
-            )
-            return b"RIFF" + _st.pack("<I", len(body)) + body
-
-        def make(doc_id: int) -> bytes:
-            if doc_id % 2 == 0:
-                return png(16 + doc_id % 240, 16 + (doc_id * 3) % 240)
-            return wav(8000 + 1000 * (doc_id % 8), 1 + (doc_id // 2) % 2, 100 + doc_id % 900)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": pdf["doc_id"].map(lambda i: make(int(i)))}
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return _synth(spark, sf_dir, media_bytes)
 
 
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,8 +287,7 @@ def multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FRAMES_SCHEMA = (
-    "doc_id long, frame_idx int, byte_offset long, "
-    "frame_left int, frame_top int, width int, height int"
+    "frame_idx int, byte_offset long, frame_left int, frame_top int, width int, height int"
 )
 
 # GIF generator formulas (the contract the DuckDB oracle replays):
@@ -293,37 +297,24 @@ GIF_H = "8 + (doc_id * 3) % 9"  # 8..16
 GIF_NFRAMES = "1 + doc_id % 5"  # 1..5
 
 
-def gif_bytes(width: int, height: int, n_frames: int) -> bytes:
-    """Minimal VALID multi-frame GIF89a (public spec: header + logical
-    screen descriptor + 2-entry global color table, then per frame a
-    graphic-control extension, an image descriptor, and a REAL LZW pixel
-    stream — fixed 8-bit codes with min-code-size 7, a clear code before
-    every 125-pixel run so the code table never grows — ending in the
-    0x3B trailer). Stdlib-only; every byte position is a closed-form
-    function of (width, height, frame index), which is what gives the
-    frame sampler an exact SQL oracle on offsets."""
-    import struct
-
+def _gif(width: int, height: int, gct: bytes, frames: list[bytes]) -> bytes:
+    """GIF89a container around per-frame pixel indices (each < 128) — the
+    one GIF writer: header, a logical screen 4px larger than the frames
+    (so the tiled left/top offsets 0..3 keep every frame inside it, a
+    spec requirement), the global color table ``gct`` (a power-of-two
+    count of RGB triples, 2 to 256), then per frame a graphic-control
+    extension, an image descriptor at (i % 4, 2i % 4) with no local
+    color table, and the literal LZW stream (min code size 7) in
+    255-byte sub-blocks; 0x3B trailer."""
     out = bytearray(b"GIF89a")
-    # logical screen 4px larger than the frames so the tiled left/top
-    # offsets (0..3) keep every frame inside the screen (spec requirement)
     out += struct.pack("<HH", width + 4, height + 4)
-    out += bytes((0x80, 0, 0))  # GCT present, size field 0 → 2 entries
-    out += bytes((0, 0, 0, 255, 255, 255))  # 2-entry global color table
-    npix = width * height
-    # LZW stream: min code size 7 → 8-bit codes, clear=0x80, EOI=0x81;
-    # emit a clear before each 125-pixel group so code values stay < 256
-    codes = bytearray()
-    for start in range(0, npix, 125):
-        codes.append(0x80)
-        codes += bytes(min(125, npix - start))  # pixel index 0 literals
-    codes.append(0x81)
-    for i in range(n_frames):
+    out += bytes((0x80 | ((len(gct) // 3).bit_length() - 2), 0, 0))  # GCT flag + size field
+    out += gct
+    for i, pixels in enumerate(frames):
         out += bytes((0x21, 0xF9, 0x04, 0x00, 0x00, 0x00, 0x00, 0x00))  # GCE
-        out += b"\x2c" + struct.pack(
-            "<HHHH", i % 4, (2 * i) % 4, width, height
-        ) + b"\x00"  # image descriptor, no local color table
+        out += b"\x2c" + struct.pack("<HHHH", i % 4, (2 * i) % 4, width, height) + b"\x00"
         out += bytes((7,))  # LZW minimum code size
+        codes = _lzw_literal_stream(pixels)
         for start in range(0, len(codes), 255):
             block = codes[start : start + 255]
             out += bytes((len(block),)) + block
@@ -332,14 +323,20 @@ def gif_bytes(width: int, height: int, n_frames: int) -> bytes:
     return bytes(out)
 
 
+def gif_bytes(width: int, height: int, n_frames: int) -> bytes:
+    """Minimal VALID multi-frame GIF89a: 2-entry black/white global color
+    table, every frame all index-0 pixels. Every byte position is a
+    closed-form function of (width, height, frame index), which is what
+    gives the frame sampler an exact SQL oracle on offsets."""
+    return _gif(width, height, bytes((0, 0, 0, 255, 255, 255)), [bytes(width * height)] * n_frames)
+
+
 def parse_gif(blob: bytes):
     """[(byte_offset, left, top, width, height)] for every image
     descriptor in a GIF87a/89a stream, or None if the bytes are not a
     GIF — a pure block-structure walk (skip color tables by their size
     fields, skip extension and pixel sub-blocks by their length bytes),
     no LZW decode. byte_offset is the position of the 0x2C descriptor."""
-    import struct
-
     if len(blob) < 13 or blob[:6] not in (b"GIF87a", b"GIF89a"):
         return None
     packed = blob[10]
@@ -379,22 +376,9 @@ def synth_gif_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     the GIF_* formulas) — the video-like blob corpus for the frame
     sampler, built in-engine because the testdata ships no binary table
     and the container no codec libs."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: gif_bytes(
-                            8 + int(i) % 9, 8 + (int(i) * 3) % 9, 1 + int(i) % 5
-                        )
-                    ),
-                }
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return _synth(
+        spark, sf_dir, lambda i: gif_bytes(8 + i % 9, 8 + (i * 3) % 9, 1 + i % 5)
+    )
 
 
 def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,25 +390,43 @@ def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact DuckDB oracle: the generator's closed-form offset/geometry
     formulas replayed in SQL. A seek-based video keyframe sampler slots
     in behind the identical schema and batch contract."""
+    return flatmap_blobs(
+        synth_gif_payloads(spark, sf_dir),
+        "payload",
+        lambda b: [(i, *f) for i, f in enumerate(parse_gif(b) or ())],
+        FRAMES_SCHEMA,
+    )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "frame_idx", "byte_offset", "frame_left",
-                "frame_top", "width", "height",
-            )}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                for idx, (off, left, top, w, h) in enumerate(parse_gif(bytes(blob)) or []):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(idx)
-                    rows["byte_offset"].append(off)
-                    rows["frame_left"].append(left)
-                    rows["frame_top"].append(top)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-            yield pd.DataFrame(rows)
 
-    return synth_gif_payloads(spark, sf_dir).mapInPandas(sample, schema=FRAMES_SCHEMA)
+def jpeg_bytes(doc_id: int) -> bytes:
+    """synth_jpeg_payloads' generator: SOI, APP0/JFIF, DQT, SOF0 or SOF2,
+    DHT, SOS with a minimal entropy byte, EOI (formulas below)."""
+
+    def seg(marker: int, data: bytes) -> bytes:
+        return struct.pack(">BBH", 0xFF, marker, len(data) + 2) + data
+
+    w = 16 + doc_id % 1000
+    h = 16 + (doc_id * 3) % 1000
+    ncomp = 1 + 2 * (doc_id % 2)
+    sof_marker = 0xC2 if doc_id % 3 == 0 else 0xC0
+    app0 = b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 2, 0, 72, 72, 0, 0)
+    dqt = b"\x00" + bytes(64)
+    comps = b"".join(struct.pack(">BBB", i + 1, 0x11, 0) for i in range(ncomp))
+    sof = struct.pack(">BHHB", 8, h, w, ncomp) + comps
+    dht = b"\x00" + bytes(16)
+    sos = struct.pack(">B", ncomp) + b"".join(
+        struct.pack(">BB", i + 1, 0) for i in range(ncomp)
+    ) + struct.pack(">BBB", 0, 63, 0)
+    return (
+        b"\xff\xd8"  # SOI
+        + seg(0xE0, app0)
+        + seg(0xDB, dqt)
+        + seg(sof_marker, sof)
+        + seg(0xC4, dht)
+        + seg(0xDA, sos)
+        + b"\x00"  # minimal entropy byte
+        + b"\xff\xd9"  # EOI
+    )
 
 
 def synth_jpeg_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,54 +437,13 @@ def synth_jpeg_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     Formula contract (what the parser must recover from the MARKERS):
     width 16 + id % 1000, height 16 + 3·id % 1000, components
     1 + 2·(id % 2) (grayscale or YCbCr), progressive iff id % 3 = 0."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _st
-
-        def seg(marker: int, data: bytes) -> bytes:
-            return _st.pack(">BBH", 0xFF, marker, len(data) + 2) + data
-
-        def jpeg(doc_id: int) -> bytes:
-            w = 16 + doc_id % 1000
-            h = 16 + (doc_id * 3) % 1000
-            ncomp = 1 + 2 * (doc_id % 2)
-            sof_marker = 0xC2 if doc_id % 3 == 0 else 0xC0
-            app0 = b"JFIF\x00" + _st.pack(">BBBHHBB", 1, 2, 0, 72, 72, 0, 0)
-            dqt = b"\x00" + bytes(64)
-            comps = b"".join(
-                _st.pack(">BBB", i + 1, 0x11, 0) for i in range(ncomp)
-            )
-            sof = _st.pack(">BHHB", 8, h, w, ncomp) + comps
-            dht = b"\x00" + bytes(16) + b""
-            sos = _st.pack(">B", ncomp) + b"".join(
-                _st.pack(">BB", i + 1, 0) for i in range(ncomp)
-            ) + _st.pack(">BBB", 0, 63, 0)
-            return (
-                b"\xff\xd8"  # SOI
-                + seg(0xE0, app0)
-                + seg(0xDB, dqt)
-                + seg(sof_marker, sof)
-                + seg(0xC4, dht)
-                + seg(0xDA, sos)
-                + b"\x00"  # minimal entropy byte
-                + b"\xff\xd9"  # EOI
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": pdf["doc_id"].map(lambda i: jpeg(int(i)))}
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return _synth(spark, sf_dir, jpeg_bytes)
 
 
 def parse_jpeg(blob: bytes):
     """(width, height, n_components, progressive, n_segments) from a JPEG
     marker walk — reads segment lengths and the SOF0/SOF2 frame header,
     no entropy decoding. None if the bytes are not a JPEG."""
-    import struct as _st
-
     if len(blob) < 4 or blob[:2] != b"\xff\xd8":
         return None
     i, n_seg = 2, 0
@@ -494,10 +455,10 @@ def parse_jpeg(blob: bytes):
         marker = blob[i + 1]
         if marker == 0xD9:  # EOI
             break
-        (length,) = _st.unpack(">H", blob[i + 2 : i + 4])
+        (length,) = struct.unpack(">H", blob[i + 2 : i + 4])
         n_seg += 1
         if marker in (0xC0, 0xC2) and i + 4 + 6 <= len(blob):
-            _prec, height, width, ncomp = _st.unpack(">BHHB", blob[i + 4 : i + 10])
+            _prec, height, width, ncomp = struct.unpack(">BHHB", blob[i + 4 : i + 10])
             progressive = marker == 0xC2
         if marker == 0xDA:
             break  # entropy data follows; fixture streams end at EOI
@@ -514,27 +475,11 @@ def multimodal_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOF0/SOF2, dimensions + component count + progressive flag from the
     frame header. Arrow-batched mapInPandas (the per-blob Python shape);
     exact DuckDB oracle = the generator formulas on doc_id."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_jpeg(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [p[0] if p else None for p in parsed],
-                    "height": [p[1] if p else None for p in parsed],
-                    "n_components": [p[2] if p else None for p in parsed],
-                    "progressive": [p[3] if p else None for p in parsed],
-                    "n_segments": [p[4] if p else None for p in parsed],
-                }
-            )
-
-    return synth_jpeg_payloads(spark, sf_dir).mapInPandas(
-        extract,
-        schema=(
-            "doc_id long, width int, height int, n_components int,"
-            " progressive boolean, n_segments int"
-        ),
+    return map_blobs(
+        synth_jpeg_payloads(spark, sf_dir),
+        "payload",
+        parse_jpeg,
+        "width int, height int, n_components int, progressive boolean, n_segments int",
     )
 
 
@@ -551,24 +496,23 @@ def mp4_bytes(timescale: int, duration: int, next_track: int, brand: str) -> byt
     """Minimal structurally-valid ISO-BMFF stream: ftyp (major brand +
     two compatible brands), a free box, and moov containing a version-0
     mvhd with the movie timescale/duration/next-track-id fields."""
-    import struct as _st
 
     def box(btype: bytes, payload: bytes) -> bytes:
-        return _st.pack(">I", 8 + len(payload)) + btype + payload
+        return struct.pack(">I", 8 + len(payload)) + btype + payload
 
-    ftyp = box(b"ftyp", brand.encode() + _st.pack(">I", 0) + b"isomiso2")
+    ftyp = box(b"ftyp", brand.encode() + struct.pack(">I", 0) + b"isomiso2")
     free = box(b"free", b"\x00" * 6)
     mvhd = box(
         b"mvhd",
-        _st.pack(">B3x", 0)  # version 0, flags 0
-        + _st.pack(">II", 0, 0)  # creation/modification time
-        + _st.pack(">II", timescale, duration)
-        + _st.pack(">i", 0x00010000)  # rate 1.0
-        + _st.pack(">h", 0x0100)  # volume 1.0
+        struct.pack(">B3x", 0)  # version 0, flags 0
+        + struct.pack(">II", 0, 0)  # creation/modification time
+        + struct.pack(">II", timescale, duration)
+        + struct.pack(">i", 0x00010000)  # rate 1.0
+        + struct.pack(">h", 0x0100)  # volume 1.0
         + b"\x00" * 10  # reserved
-        + _st.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
+        + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
         + b"\x00" * 24  # pre_defined
-        + _st.pack(">I", next_track),
+        + struct.pack(">I", next_track),
     )
     return ftyp + free + box(b"moov", mvhd)
 
@@ -577,15 +521,13 @@ def parse_mp4(blob: bytes):
     """(major_brand, timescale, duration, next_track_id, n_boxes) from a
     top-level box walk + moov/mvhd descent — size/type hopping only, no
     sample decoding. None if the stream is not ISO-BMFF."""
-    import struct as _st
-
     if len(blob) < 16 or blob[4:8] != b"ftyp":
         return None
     i, n_boxes = 0, 0
     brand = None
     timescale = duration = next_track = None
     while i + 8 <= len(blob):
-        (size,) = _st.unpack(">I", blob[i : i + 4])
+        (size,) = struct.unpack(">I", blob[i : i + 4])
         btype = blob[i + 4 : i + 8]
         if size < 8 or i + size > len(blob):
             return None
@@ -595,7 +537,7 @@ def parse_mp4(blob: bytes):
         elif btype == b"moov":
             j = i + 8
             while j + 8 <= i + size:
-                (csize,) = _st.unpack(">I", blob[j : j + 4])
+                (csize,) = struct.unpack(">I", blob[j : j + 4])
                 # csize must keep the child inside moov: a crafted size
                 # that runs past the parent is truncation, not a box
                 if csize < 8 or j + csize > i + size:
@@ -609,8 +551,8 @@ def parse_mp4(blob: bytes):
                     if csize < 108 or j + 108 > i + size:
                         return None
                     if blob[j + 8] == 0:
-                        timescale, duration = _st.unpack(">II", blob[j + 20 : j + 28])
-                        (next_track,) = _st.unpack(">I", blob[j + 104 : j + 108])
+                        timescale, duration = struct.unpack(">II", blob[j + 20 : j + 28])
+                        (next_track,) = struct.unpack(">I", blob[j + 104 : j + 108])
                 j += csize
         i += size
     if brand is None or timescale is None:
@@ -622,22 +564,13 @@ def synth_mp4_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ISO-BMFF payloads keyed on doc_id per the
     MP4_* formula contract — Arrow-batched synthesis (mapInPandas), the
     same shape a real pipeline uses to fetch blob columns."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def gen(doc_id: int) -> bytes:
-            ts = 600 + (doc_id % 5) * 150
-            dur = 1 + (doc_id * 37) % 90000
-            nt = 1 + doc_id % 3
-            brand = "mp42" if doc_id % 4 == 0 else "isom"
-            return mp4_bytes(ts, dur, nt, brand)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": pdf["doc_id"].map(lambda i: gen(int(i)))}
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return _synth(
+        spark,
+        sf_dir,
+        lambda i: mp4_bytes(
+            600 + (i % 5) * 150, 1 + (i * 37) % 90000, 1 + i % 3, "mp42" if i % 4 == 0 else "isom"
+        ),
+    )
 
 
 def multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -649,27 +582,11 @@ def multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     both operands non-negative, so Spark div and DuckDB // agree).
     Arrow-batched mapInPandas; exact DuckDB oracle = the MP4_* generator
     formulas on doc_id."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_mp4(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "major_brand": [p[0] if p else None for p in parsed],
-                    "timescale": [p[1] if p else None for p in parsed],
-                    "duration_ticks": [p[2] if p else None for p in parsed],
-                    "next_track_id": [p[3] if p else None for p in parsed],
-                    "n_boxes": [p[4] if p else None for p in parsed],
-                }
-            )
-
-    meta = synth_mp4_payloads(spark, sf_dir).mapInPandas(
-        extract,
-        schema=(
-            "doc_id long, major_brand string, timescale int,"
-            " duration_ticks int, next_track_id int, n_boxes int"
-        ),
+    meta = map_blobs(
+        synth_mp4_payloads(spark, sf_dir),
+        "payload",
+        parse_mp4,
+        "major_brand string, timescale int, duration_ticks int, next_track_id int, n_boxes int",
     )
     return meta.withColumn(
         "duration_ms",
@@ -697,75 +614,65 @@ PCM_OFF = "(doc_id % 5) * 100"  # DC offset, 0..400
 def wav_pcm_bytes(rate: int, n: int, amp: int, half: int, off: int) -> bytes:
     """Valid mono 16-bit PCM WAV carrying an offset square wave:
     s[k] = off + amp if (k div half) even else off - amp."""
-    import struct
-
     samples = bytearray()
     for k in range(n):
         s = off + (amp if (k // half) % 2 == 0 else -amp)
         samples += struct.pack("<h", s)
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(samples)) + bytes(samples)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(rate, 1, bytes(samples))
 
 
 def synth_pcm_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic square-wave WAV payloads keyed on doc_id per the
     PCM_* formula contract (Arrow-batched mapInPandas synthesis)."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def gen(doc_id: int) -> bytes:
-            return wav_pcm_bytes(
-                8000 + (doc_id % 8) * 1000,
-                64 + (doc_id * 13) % 400,
-                1000 + (doc_id % 7) * 2000,
-                2 + doc_id % 6,
-                (doc_id % 5) * 100,
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": pdf["doc_id"].map(lambda i: gen(int(i)))}
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return _synth(
+        spark,
+        sf_dir,
+        lambda i: wav_pcm_bytes(
+            8000 + (i % 8) * 1000, 64 + (i * 13) % 400, 1000 + (i % 7) * 2000, 2 + i % 6, (i % 5) * 100
+        ),
+    )
 
 
-def pcm_features(blob: bytes):
-    """(rate, n_samples, peak, sum_sq, zero_crossings) from a mono 16-bit
-    WAV's decoded samples (RIFF walk to fmt/data, then numpy over the raw
-    PCM), or None if the bytes are not such a WAV."""
-    import struct
-
-    import numpy as np
-
+def _mono_pcm(blob: bytes):
+    """(sample_rate, int64 samples) of a mono 16-bit PCM WAV — the one
+    mono-PCM RIFF reader: walk to the fmt and data chunks. None if the
+    bytes are not RIFF/WAVE, a chunk is cut short, the fmt is not PCM or
+    not mono, a chunk is missing, or the data length is odd."""
     if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
         return None
     pos, rate, data = 12, None, None
     while pos + 8 <= len(blob):
-        typ, size = blob[pos:pos + 4], struct.unpack("<I", blob[pos + 4:pos + 8])[0]
-        payload = blob[pos + 8:pos + 8 + size]
+        typ = blob[pos : pos + 4]
+        (size,) = struct.unpack("<I", blob[pos + 4 : pos + 8])
+        payload = blob[pos + 8 : pos + 8 + size]
         if len(payload) < size:
             # chunk header promises more bytes than the buffer holds:
             # truncated input is malformed, not a struct.error crash
             return None
         if typ == b"fmt " and size >= 16:
-            _fmt, chans, rate = struct.unpack("<HHI", payload[:8])
-            if _fmt != 1 or chans != 1:
+            fmt, chans, rate = struct.unpack("<HHI", payload[:8])
+            if fmt != 1 or chans != 1:
                 return None
         elif typ == b"data":
             data = payload
         pos += 8 + size + (size & 1)
     if rate is None or data is None or len(data) % 2 != 0:
         return None
-    s = np.frombuffer(data, dtype="<i2").astype(np.int64)
+    return int(rate), np.frombuffer(data, dtype="<i2").astype(np.int64)
+
+
+def pcm_features(blob: bytes):
+    """(rate, n_samples, peak, sum_sq, zero_crossings) from a mono 16-bit
+    WAV's decoded samples (RIFF walk to fmt/data, then numpy over the raw
+    PCM), or None if the bytes are not such a WAV."""
+    pcm = _mono_pcm(blob)
+    if pcm is None:
+        return None
+    rate, s = pcm
     if s.size == 0:
-        return (int(rate), 0, 0, 0, 0)
+        return (rate, 0, 0, 0, 0)
     zc = int(np.count_nonzero(s[:-1] * s[1:] < 0))
-    return (int(rate), int(s.size), int(np.abs(s).max()), int((s * s).sum()), zc)
+    return (rate, int(s.size), int(np.abs(s).max()), int((s * s).sum()), zc)
 
 
 def multimodal_wav_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -788,26 +695,11 @@ def multimodal_wav_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     half."""
     from ..functions.vector import stable_round
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [pcm_features(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": [f[0] if f else None for f in feats],
-                    "n_samples": [f[1] if f else None for f in feats],
-                    "peak": [f[2] if f else None for f in feats],
-                    "sum_sq": [f[3] if f else None for f in feats],
-                    "zero_crossings": [f[4] if f else None for f in feats],
-                }
-            )
-
-    meta = synth_pcm_payloads(spark, sf_dir).mapInPandas(
-        extract,
-        schema=(
-            "doc_id long, sample_rate int, n_samples long, peak long,"
-            " sum_sq long, zero_crossings long"
-        ),
+    meta = map_blobs(
+        synth_pcm_payloads(spark, sf_dir),
+        "payload",
+        pcm_features,
+        "sample_rate int, n_samples long, peak long, sum_sq long, zero_crossings long",
     )
     return meta.withColumn(
         "rms",
@@ -873,9 +765,6 @@ def _phash_p(g: int, c: int) -> int:
 
 def pattern_png_bytes(doc_id: int) -> bytes:
     """Deterministic patterned grayscale PNG for doc_id (formulas above)."""
-    import struct
-    import zlib
-
     g = doc_id // PHASH_GROUP
     w, h = 18 + g % 5, 16 + g % 3
     flip = g % 72 if doc_id % PHASH_GROUP == 3 else -1
@@ -893,18 +782,7 @@ def pattern_png_bytes(doc_id: int) -> bytes:
                 p = 1 - p
             row[xb[bx] : xb[bx + 1]] = bytes([64 + 128 * p + off]) * (xb[bx + 1] - xb[bx])
         rows.append(b"\x00" + bytes(row))
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        body = typ + data
-        return struct.pack(">I", len(data)) + body + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(b"".join(rows)))
-        + chunk(b"IEND", b"")
-    )
+    return _png(w, h, b"".join(rows))
 
 
 def synth_pattern_png_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,18 +791,30 @@ def synth_pattern_png_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     brightness offset (perceptually identical) and one doc carries a
     single-cell local edit (perceptually NEAR-identical) — the three
     regimes a perceptual dedup must separate from cross-group images."""
+    return _synth(spark, sf_dir, pattern_png_bytes)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: pattern_png_bytes(int(i))),
-                }
-            )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+def _dhash(img: np.ndarray) -> tuple[int, int]:
+    """(fp_hi, fp_lo) of a luma image: block-average to a 9x8 grid with
+    integer floor boundaries (the standard dHash downsample), then bit
+    by*8 + bx = [mean(cell right) > mean(cell)]."""
+    h, w = img.shape
+    xb = [bx * w // 9 for bx in range(10)]
+    yb = [by * h // 8 for by in range(9)]
+    means = [
+        [img[yb[by] : yb[by + 1], xb[bx] : xb[bx + 1]].mean() for bx in range(9)]
+        for by in range(8)
+    ]
+    lo = hi = 0
+    for by in range(8):
+        for bx in range(8):
+            if means[by][bx + 1] > means[by][bx]:
+                i = by * 8 + bx
+                if i < 32:
+                    lo |= 1 << i
+                else:
+                    hi |= 1 << (i - 32)
+    return hi, lo
 
 
 def dhash_from_png(blob: bytes):
@@ -933,11 +823,6 @@ def dhash_from_png(blob: bytes):
     average to a 9x8 grid with integer floor boundaries (the standard
     dHash downsample), then compare horizontally adjacent cell means.
     Returns None for non-PNG / unsupported (filtered) pixel streams."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if len(blob) < 24 or blob[:8] != b"\x89PNG\r\n\x1a\n" or blob[12:16] != b"IHDR":
         return None
     w, h = struct.unpack(">II", blob[16:24])
@@ -958,36 +843,19 @@ def dhash_from_png(blob: bytes):
     px = np.frombuffer(raw, dtype=np.uint8).reshape(h, w + 1)
     if px[:, 0].any():  # only filter type 0 is decoded here
         return None
-    img = px[:, 1:].astype(np.float64)
-    xb = [bx * w // 9 for bx in range(10)]
-    yb = [by * h // 8 for by in range(9)]
-    means = [
-        [img[yb[by] : yb[by + 1], xb[bx] : xb[bx + 1]].mean() for bx in range(9)]
-        for by in range(8)
-    ]
-    lo = hi = 0
-    for by in range(8):
-        for bx in range(8):
-            if means[by][bx + 1] > means[by][bx]:
-                i = by * 8 + bx
-                if i < 32:
-                    lo |= 1 << i
-                else:
-                    hi |= 1 << (i - 32)
-    return int(w), int(h), hi, lo
+    return (int(w), int(h), *_dhash(px[:, 1:].astype(np.float64)))
 
 
-def _banded_hamming_pairs(
-    fp: DataFrame, bucket_cap: "int | str | None", name: str
-) -> DataFrame:
-    """Shared banded-Hamming candidate join over a (doc_id, fp_hi, fp_lo)
-    fingerprint frame: 4x16-bit bands -> equi-join candidates -> exact
-    bit_count(xor) distance filtered at HAMMING_T. Pigeonhole guarantees
-    a shared band for any distance <= 3, so recall on the generators'
-    in-group edits (<= 2 flipped bits) is exactly 1. Band buckets are
-    skew-guarded: a corpus of near-identical assets makes one bucket
-    corpus-deep, the LSH mega-bucket pathology (docs/SCALE.md §11.10)."""
-    bands = fp.select(
+IMAGE_FP_SCHEMA = "width int, height int, fp_hi long, fp_lo long"
+AUDIO_FP_SCHEMA = "sample_rate int, n_samples long, fp_hi long, fp_lo long"
+VIDEO_FP_SCHEMA = "frame_idx int, fp_hi long, fp_lo long"
+
+
+def hamming_bands(fp: DataFrame) -> DataFrame:
+    """(doc_id, fp_hi, fp_lo, band, key): one row per 16-bit band of a
+    64-bit fingerprint held as two 32-bit halves — the banding of every
+    perceptual Hamming join, batch and stream."""
+    return fp.select(
         "doc_id",
         "fp_hi",
         "fp_lo",
@@ -1000,6 +868,19 @@ def _banded_hamming_pairs(
             )
         ).alias("bk"),
     ).select("doc_id", "fp_hi", "fp_lo", "bk.band", "bk.key")
+
+
+def _banded_hamming_pairs(
+    fp: DataFrame, bucket_cap: "int | str | None", name: str
+) -> DataFrame:
+    """Shared banded-Hamming candidate join over a (doc_id, fp_hi, fp_lo)
+    fingerprint frame: 4x16-bit bands -> equi-join candidates -> exact
+    bit_count(xor) distance filtered at HAMMING_T. Pigeonhole guarantees
+    a shared band for any distance <= 3, so recall on the generators'
+    in-group edits (<= 2 flipped bits) is exactly 1. Band buckets are
+    skew-guarded: a corpus of near-identical assets makes one bucket
+    corpus-deep, the LSH mega-bucket pathology (docs/SCALE.md §11.10)."""
+    bands = hamming_bands(fp)
     if bucket_cap == "auto":
         from .skew_guard import AUTO_BUCKET_CAP, resolve_cap
 
@@ -1050,25 +931,10 @@ def image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free mapInPandas over the blob column (numpy per Arrow
     batch); at 100 TB this is the embarrassingly parallel stage before
     the banded join."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [dhash_from_png(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [f[0] if f else None for f in feats],
-                    "height": [f[1] if f else None for f in feats],
-                    "fp_hi": [f[2] if f else None for f in feats],
-                    "fp_lo": [f[3] if f else None for f in feats],
-                }
-            )
-
     return _fp_cache(spark).get_or_build(
         (sf_dir, "image"),
-        lambda: synth_pattern_png_payloads(spark, sf_dir).mapInPandas(
-            extract,
-            schema="doc_id long, width int, height int, fp_hi long, fp_lo long",
+        lambda: map_blobs(
+            synth_pattern_png_payloads(spark, sf_dir), "payload", dhash_from_png, IMAGE_FP_SCHEMA
         ),
     )
 
@@ -1161,8 +1027,6 @@ def _audio_p(g: int, s: int) -> int:
 
 def envelope_wav_bytes(doc_id: int) -> bytes:
     """Deterministic segmented square-wave WAV for doc_id (formulas above)."""
-    import struct
-
     g, m = doc_id // AUDIO_GROUP, doc_id % AUDIO_GROUP
     seg = 20 + g % 9
     gain = 1 + m if m < 3 else 1
@@ -1175,13 +1039,7 @@ def envelope_wav_bytes(doc_id: int) -> bytes:
         amp = (AUDIO_HIGH if p else AUDIO_LOW) * gain
         for i in range(seg):
             out += struct.pack("<h", amp if i % 2 == 0 else -amp)
-    data = bytes(out)
-    fmt = struct.pack("<HHIIHH", 1, 1, AUDIO_RATE, AUDIO_RATE * 2, 2, 16)
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(AUDIO_RATE, 1, bytes(out))
 
 
 def synth_envelope_wav_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1189,18 +1047,7 @@ def synth_envelope_wav_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     share a loudness envelope; siblings differ by uniform gain
     (perceptually identical), one clip per group carries a one-segment
     local edit (perceptually near-identical)."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: envelope_wav_bytes(int(i))),
-                }
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return _synth(spark, sf_dir, envelope_wav_bytes)
 
 
 def envelope_fp_from_wav(blob: bytes):
@@ -1208,29 +1055,10 @@ def envelope_fp_from_wav(blob: bytes):
     walk to the mono 16-bit PCM, split into AUDIO_N_SEG equal segments,
     compare adjacent segments' exact integer Σ|sample| (gain-invariant by
     construction). None for non-WAV / non-divisible streams."""
-    import struct
-
-    import numpy as np
-
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
+    pcm = _mono_pcm(blob)
+    if pcm is None:
         return None
-    pos, rate, data = 12, None, None
-    while pos + 8 <= len(blob):
-        typ = blob[pos : pos + 4]
-        (size,) = struct.unpack("<I", blob[pos + 4 : pos + 8])
-        payload = blob[pos + 8 : pos + 8 + size]
-        if len(payload) < size:
-            return None
-        if typ == b"fmt " and size >= 16:
-            _f, chans, rate = struct.unpack("<HHI", payload[:8])
-            if _f != 1 or chans != 1:
-                return None
-        elif typ == b"data":
-            data = payload
-        pos += 8 + size + (size & 1)
-    if rate is None or data is None or len(data) % 2 != 0:
-        return None
-    s = np.frombuffer(data, dtype="<i2").astype(np.int64)
+    rate, s = pcm
     if s.size == 0 or s.size % AUDIO_N_SEG != 0:
         return None
     sums = np.abs(s).reshape(AUDIO_N_SEG, -1).sum(axis=1)
@@ -1241,7 +1069,7 @@ def envelope_fp_from_wav(blob: bytes):
                 lo |= 1 << i
             else:
                 hi |= 1 << (i - 32)
-    return int(rate), int(s.size), hi, lo
+    return rate, int(s.size), hi, lo
 
 
 def audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1252,25 +1080,10 @@ def audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form; the Spark side must land on identical bits from the
     decoded int16 stream). Shuffle-free mapInPandas + numpy, the same
     100 TB shape as image_dhash."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [envelope_fp_from_wav(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": [f[0] if f else None for f in feats],
-                    "n_samples": [f[1] if f else None for f in feats],
-                    "fp_hi": [f[2] if f else None for f in feats],
-                    "fp_lo": [f[3] if f else None for f in feats],
-                }
-            )
-
     return _fp_cache(spark).get_or_build(
         (sf_dir, "audio"),
-        lambda: synth_envelope_wav_payloads(spark, sf_dir).mapInPandas(
-            extract,
-            schema="doc_id long, sample_rate int, n_samples long, fp_hi long, fp_lo long",
+        lambda: map_blobs(
+            synth_envelope_wav_payloads(spark, sf_dir), "payload", envelope_fp_from_wav, AUDIO_FP_SCHEMA
         ),
     )
 
@@ -1337,9 +1150,8 @@ def _lzw_literal_stream(pixels: bytes) -> bytes:
 
 
 def pattern_gif_bytes(doc_id: int) -> bytes:
-    """Deterministic patterned multi-frame GIF89a for doc_id."""
-    import struct
-
+    """Deterministic patterned multi-frame GIF89a for doc_id, on a
+    128-entry grayscale global color table (palette[i] = (i, i, i))."""
     g, m = doc_id // PHASH_GROUP, doc_id % PHASH_GROUP
     w, h = 18 + g % 5, 16 + g % 3
     off = doc_id % 7
@@ -1347,11 +1159,7 @@ def pattern_gif_bytes(doc_id: int) -> bytes:
     flip_c = g % 72
     xb = [bx * w // 9 for bx in range(10)]
     yb = [by * h // 8 for by in range(9)]
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w + 4, h + 4)
-    out += bytes((0x80 | 0x06, 0, 0))  # GCT present, size 6 → 128 entries
-    out += bytes(v for i in range(128) for v in (i, i, i))  # grayscale GCT
+    frames = []
     for f in range(VIDEO_FRAMES):
         pix = bytearray(w * h)
         for by in range(8):
@@ -1365,32 +1173,13 @@ def pattern_gif_bytes(doc_id: int) -> bytes:
                     row = y * w
                     for x in range(xb[bx], xb[bx + 1]):
                         pix[row + x] = val
-        out += bytes((0x21, 0xF9, 0x04, 0x00, 0x00, 0x00, 0x00, 0x00))
-        out += b"\x2c" + struct.pack("<HHHH", f % 4, (2 * f) % 4, w, h) + b"\x00"
-        out += bytes((7,))
-        codes = _lzw_literal_stream(bytes(pix))
-        for start in range(0, len(codes), 255):
-            block = codes[start : start + 255]
-            out += bytes((len(block),)) + block
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
+        frames.append(bytes(pix))
+    return _gif(w, h, bytes(v for i in range(128) for v in (i, i, i)), frames)
 
 
 def synth_pattern_gif_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Patterned multi-frame GIF corpus keyed on doc_id (contract above)."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: pattern_gif_bytes(int(i))),
-                }
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return _synth(spark, sf_dir, pattern_gif_bytes)
 
 
 def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int):
@@ -1442,10 +1231,6 @@ def keyframe_dhashes_from_gif(blob: bytes):
     are truncated anywhere (every read is bounds-guarded — a cut blob
     returns the frames decoded so far or None, never raises: ADVICE
     r10)."""
-    import struct
-
-    import numpy as np
-
     if len(blob) < 13 or blob[:6] not in (b"GIF87a", b"GIF89a"):
         return None
     packed = blob[10]
@@ -1491,21 +1276,7 @@ def keyframe_dhashes_from_gif(blob: bytes):
         if pix is None:
             return None
         luma = np.array([palette[i] for i in pix], dtype=np.float64).reshape(h, w)
-        xb = [bx * w // 9 for bx in range(10)]
-        yb = [by * h // 8 for by in range(9)]
-        means = [
-            [luma[yb[by] : yb[by + 1], xb[bx] : xb[bx + 1]].mean() for bx in range(9)]
-            for by in range(8)
-        ]
-        lo = hi = 0
-        for by in range(8):
-            for bx in range(8):
-                if means[by][bx + 1] > means[by][bx]:
-                    i = by * 8 + bx
-                    if i < 32:
-                        lo |= 1 << i
-                    else:
-                        hi |= 1 << (i - 32)
+        hi, lo = _dhash(luma)
         frames.append((idx, hi, lo))
         idx += 1
     return frames or None
@@ -1520,24 +1291,10 @@ def video_keyframe_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole chain — block walk, LZW, palette mapping, block means — must be
     exact. Shuffle-free mapInPandas; frames explode rows 4x but stay in
     the same task."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fids, his, los = [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                for fidx, hi, lo in keyframe_dhashes_from_gif(bytes(blob)) or []:
-                    ids.append(doc_id)
-                    fids.append(fidx)
-                    his.append(hi)
-                    los.append(lo)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": fids, "fp_hi": his, "fp_lo": los}
-            )
-
     return _fp_cache(spark).get_or_build(
         (sf_dir, "video"),
-        lambda: synth_pattern_gif_payloads(spark, sf_dir).mapInPandas(
-            extract, schema="doc_id long, frame_idx int, fp_hi long, fp_lo long"
+        lambda: flatmap_blobs(
+            synth_pattern_gif_payloads(spark, sf_dir), "payload", keyframe_dhashes_from_gif, VIDEO_FP_SCHEMA
         ),
     )
 

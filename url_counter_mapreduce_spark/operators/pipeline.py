@@ -18,11 +18,7 @@ from .. import ledger
 from ..functions.vector import stable_round
 from ..ledger import checkpoint
 from ..tables import load_table
-
-_TOKS = "filter(split(text, ' '), x -> x != '')"
-# NULL-safe variant (NULL text → empty token array in BOTH engines; same
-# convention as operators/text._TOKS_SAFE)
-_TOKS_SAFE = "filter(split(coalesce(text, ''), ' '), x -> x != '')"
+from .core import TOKS, TOKS_SAFE
 
 # md5-derived 32-bit doc hash → decile: the cross-engine-reproducible
 # stand-in for a seeded RNG (same trick as the SimHash token hash)
@@ -435,7 +431,7 @@ def context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.pmod(F.col("doc_id"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        F.expr(f"CAST(size({TOKS}) AS BIGINT)").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("bucket")
@@ -630,7 +626,7 @@ def decontaminate_frame(docs: DataFrame, df_cap: int | None = None) -> DataFrame
     base = spread(docs.select("doc_id", "text")).select(
         "doc_id",
         F.expr(_DECILE).alias("decile"),
-        F.expr(_TOKS).alias("toks"),
+        F.expr(TOKS).alias("toks"),
     )
     sh = base.filter(F.size("toks") >= DECON_NGRAM).select(
         "doc_id",
@@ -900,7 +896,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         "source",
-        F.expr(f"CAST(size({_TOKS_SAFE}) AS BIGINT)").alias("n_tokens"),
+        F.expr(f"CAST(size({TOKS_SAFE}) AS BIGINT)").alias("n_tokens"),
         F.expr(_priority_hash("budget")).alias("h"),
     )
     cum = _with_prefix_cumsum(base, ["source"], "n_tokens", "cum_tokens")
@@ -981,7 +977,7 @@ def _export_base(docs: DataFrame) -> DataFrame:
         "doc_id",
         "source",
         "text",
-        F.expr(_TOKS_SAFE).alias("toks"),
+        F.expr(TOKS_SAFE).alias("toks"),
     ).select(
         "doc_id",
         "source",
@@ -1137,7 +1133,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.expr("filter(split(coalesce(text, ''), ' '), x -> x != '')")).alias("token"),
+        F.explode(F.expr(TOKS_SAFE)).alias("token"),
     ).distinct()
     w = Window.partitionBy("token").orderBy(F.col("doc_id").asc())
     ranked = toks.withColumn("rn", F.row_number().over(w))
@@ -1167,7 +1163,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated groupBy."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "lang", F.explode(F.expr(_TOKS_SAFE)).alias("token")
+        "lang", F.explode(F.expr(TOKS_SAFE)).alias("token")
     )
     vocab = _token_counts(docs.select("text")).filter(
         F.col("cnt") >= VOCAB_MIN_COUNT
@@ -1331,7 +1327,7 @@ def batch_padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain window."""
     docs = load_table(spark, sf_dir, "documents")
     base = (
-        docs.select("doc_id", F.expr(_TOKS_SAFE).alias("toks"))
+        docs.select("doc_id", F.expr(TOKS_SAFE).alias("toks"))
         .select("doc_id", F.expr("CAST(size(toks) AS BIGINT)").alias("n_tokens"))
         .withColumn("h", F.expr(_PAD_ORDER_H))
         .withColumn("cnt", F.lit(1).cast("long"))
@@ -1386,7 +1382,7 @@ def vocab_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(docs.select("doc_id", "text"))
         .select(
             F.expr(f"({_DECILE}) < {DRIFT_TRAIN_DECILES}").alias("is_train"),
-            F.explode(F.expr(_TOKS_SAFE)).alias("token"),
+            F.explode(F.expr(TOKS_SAFE)).alias("token"),
         )
         .groupBy("token")
         .agg(
@@ -1658,7 +1654,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 10"
         ).alias("decile"),
-        F.explode(F.expr("filter(split(coalesce(text, ''), ' '), x -> x != '')")).alias("w"),
+        F.explode(F.expr(TOKS_SAFE)).alias("w"),
     )
     vocab = (
         docs.filter(F.col("decile") < 8)
@@ -1720,12 +1716,11 @@ def mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB: one corpus aggregate to (source, n_tokens) —
     map-side partial, |sources| rows out — then window totals over that
     bounded table. Zero joins, zero scalar broadcasts."""
-    toks_safe = "filter(split(coalesce(text, ''), ' '), x -> x != '')"
     per = (
         load_table(spark, sf_dir, "documents")
         .select(
             F.coalesce("source", F.lit("unknown")).alias("source"),
-            F.expr(f"CAST(size({toks_safe}) AS BIGINT)").alias("nt"),
+            F.expr(f"CAST(size({TOKS_SAFE}) AS BIGINT)").alias("nt"),
         )
         .groupBy("source")
         .agg(F.sum("nt").alias("n_tokens"))

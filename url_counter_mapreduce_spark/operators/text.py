@@ -15,14 +15,7 @@ from pyspark.sql import functions as F
 
 from ..ledger import checkpoint
 from ..tables import load_table
-
-_TOKS = "filter(split(text, ' '), x -> x != '')"
-# NULL-safe variant: split(NULL) propagates NULL and size(NULL) = -1 in
-# Spark while DuckDB yields NULL — coalescing to '' gives an EMPTY token
-# array in both engines (the same convention dedup_substring_clean uses).
-# Used by the Gopher battery, whose n_words/ratio outputs must stay
-# meaningful (0, not -1) on NULL-text rows.
-_TOKS_SAFE = "filter(split(coalesce(text, ''), ' '), x -> x != '')"
+from .core import TOKS, TOKS_SAFE
 
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
 # Deliberately minimal: the heuristic's mechanics (score → argmax with a
@@ -43,12 +36,12 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.expr(f"CAST(size({_TOKS_SAFE}) AS BIGINT)").alias("n_tokens"),
-        F.expr(f"CAST(size(array_distinct({_TOKS_SAFE})) AS BIGINT)").alias("n_uniq_tokens"),
+        F.expr(f"CAST(size({TOKS_SAFE}) AS BIGINT)").alias("n_tokens"),
+        F.expr(f"CAST(size(array_distinct({TOKS_SAFE})) AS BIGINT)").alias("n_uniq_tokens"),
         F.expr(
-            f"CASE WHEN size({_TOKS_SAFE}) = 0 THEN CAST(NULL AS DOUBLE) ELSE "
-            f"floor(CAST(aggregate({_TOKS_SAFE}, 0L, (acc, t) -> acc + length(t)) AS DOUBLE)"
-            f" / size({_TOKS_SAFE}) * 1e6 + 0.5) / 1e6 END"
+            f"CASE WHEN size({TOKS_SAFE}) = 0 THEN CAST(NULL AS DOUBLE) ELSE "
+            f"floor(CAST(aggregate({TOKS_SAFE}, 0L, (acc, t) -> acc + length(t)) AS DOUBLE)"
+            f" / size({TOKS_SAFE}) * 1e6 + 0.5) / 1e6 END"
         ).alias("avg_token_len"),
         F.col("n_chars"),
     )
@@ -65,7 +58,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[
             F.expr(
                 "CAST(size(array_intersect(array_distinct(%s), array(%s))) AS BIGINT)"
-                % (_TOKS, ", ".join(f"'{w}'" for w in words))
+                % (TOKS, ", ".join(f"'{w}'" for w in words))
             ).alias(f"score_{lang}")
             for lang, words in STOPWORDS.items()
         ],
@@ -96,7 +89,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
     nw = "nullif(size(toks), 0)"
     return (
-        docs.select("doc_id", "n_chars", F.expr(_TOKS_SAFE).alias("toks"))
+        docs.select("doc_id", "n_chars", F.expr(TOKS_SAFE).alias("toks"))
         .select(
             "doc_id",
             "n_chars",
@@ -162,7 +155,7 @@ def quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE split, and the gram construction + per-gram counting is the
     # dominant cost — gated no-op once the scan has real split counts
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "n_chars", "text"))
-    base = docs.select("doc_id", "n_chars", "text", F.expr(_TOKS_SAFE).alias("toks"))
+    base = docs.select("doc_id", "n_chars", "text", F.expr(TOKS_SAFE).alias("toks"))
     nw = "nullif(size(toks), 0)"
     words = base.select(
         "doc_id",
@@ -267,7 +260,7 @@ def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(r"CAST(size(regexp_extract_all(text, '\\w+|[^\\w\\s]', 0)) AS BIGINT)").alias(
             "n_pieces"
         ),
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_words"),
+        F.expr(f"CAST(size({TOKS}) AS BIGINT)").alias("n_words"),
     )
 
 
@@ -325,7 +318,7 @@ def gopher_maponly_metrics(df: DataFrame) -> DataFrame:
         " acc -> acc.dup)"
     )
     out = (
-        df.withColumn("toks", F.expr(_TOKS_SAFE))
+        df.withColumn("toks", F.expr(TOKS_SAFE))
         .withColumn("bgs", F.expr(bgs))
         .withColumn("tgs", F.expr(tgs))
         # hoist the run-length pass into a column so the bestc and bestg
@@ -551,7 +544,7 @@ def lm_bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality_gopher); gated no-op on well-split inputs
     toks = (
         spread(docs.select("doc_id", "text"))
-        .select("doc_id", F.expr(_TOKS).alias("toks"))
+        .select("doc_id", F.expr(TOKS).alias("toks"))
         .transform(checkpoint, eager=False)
     )
     docbig = (
@@ -681,7 +674,7 @@ def text_hashing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle compares plain integer columns."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode(F.expr("filter(split(text, ' '), x -> x != '')")).alias("t")
+        "doc_id", F.explode(F.expr(TOKS)).alias("t")
     )
     dim = tok.withColumn(
         "dim", F.expr("pmod(CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT), %d)" % HASH_DIMS)
@@ -705,7 +698,7 @@ def bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flagship count over a derived 2-gram key (explode of a windowed
     zip, partial agg, TakeOrdered)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.withColumn("toks", F.expr(_TOKS))
+    toks = docs.withColumn("toks", F.expr(TOKS))
     bigrams = toks.select(
         F.explode(
             F.expr(
@@ -733,10 +726,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "doc_id",
         "text",
-        F.expr(f"CAST(size({_TOKS}) AS BIGINT)").alias("n_tokens"),
+        F.expr(f"CAST(size({TOKS}) AS BIGINT)").alias("n_tokens"),
         F.expr(
-            f"CAST(aggregate({_TOKS}, 0L, (acc, t) -> acc + length(t)) AS DOUBLE)"
-            f" / size({_TOKS})"
+            f"CAST(aggregate({TOKS}, 0L, (acc, t) -> acc + length(t)) AS DOUBLE)"
+            f" / size({TOKS})"
         ).alias("mwl"),
         F.md5(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")).alias("fp"),
     ).filter((F.col("n_tokens") >= 20) & (F.col("mwl") >= 2.0))
@@ -803,7 +796,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends at count/sort, src/main/main.go:22-49); this is north-star surface.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.expr(_TOKS_SAFE).alias("toks"))
+    toks = docs.select("doc_id", F.expr(TOKS_SAFE).alias("toks"))
     return toks.select(
         "doc_id",
         F.expr("CAST(size(toks) AS BIGINT)").alias("n_toks"),
@@ -848,7 +841,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import stable_round
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.expr(_TOKS_SAFE).alias("toks"))
+    toks = docs.select("doc_id", F.expr(TOKS_SAFE).alias("toks"))
     stats = toks.select(
         F.sum(F.expr("CAST(size(toks) AS BIGINT)")).alias("sum_dl"),
         F.count(F.lit(1)).alias("n_docs"),
@@ -921,7 +914,7 @@ def url_normalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     URLs."""
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(
-        "doc_id", F.posexplode(F.expr(_TOKS_SAFE)).alias("pos", "tok")
+        "doc_id", F.posexplode(F.expr(TOKS_SAFE)).alias("pos", "tok")
     )
     raw = occ.select(
         F.expr(
@@ -1121,7 +1114,7 @@ def lm_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _lt(spark, sf_dir, "documents").select("doc_id", "text")
     toks = (
         spread(docs)
-        .select("doc_id", F.expr(_DECILE).alias("decile"), F.expr(_TOKS_SAFE).alias("toks"))
+        .select("doc_id", F.expr(_DECILE).alias("decile"), F.expr(TOKS_SAFE).alias("toks"))
         .transform(checkpoint, eager=False)
     )
     train = toks.filter(F.col("decile") < LM_SB_TRAIN_DECILES)
@@ -1230,7 +1223,7 @@ def bigram_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once and feeds all four consumers (the recompute-fanout
     rule)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.expr(_TOKS_SAFE).alias("toks")).transform(checkpoint, eager=False)
+    toks = docs.select(F.expr(TOKS_SAFE).alias("toks")).transform(checkpoint, eager=False)
     unis = (
         toks.select(F.explode("toks").alias("w"))
         .groupBy("w")
@@ -1302,7 +1295,7 @@ def quality_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
-        F.expr(_TOKS_SAFE).alias("toks"),
+        F.expr(TOKS_SAFE).alias("toks"),
         F.expr(
             "CAST(size(regexp_extract_all(coalesce(text, ''), '[.!?]+', 0)) AS BIGINT)"
         ).alias("n_sentences"),
@@ -1347,7 +1340,7 @@ def text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops = ", ".join(f"'{w}'" for w in RAKE_STOPS)
     docs = load_table(spark, sf_dir, "documents")
     tk = docs.select(
-        "doc_id", F.posexplode(F.expr(_TOKS_SAFE)).alias("pos", "tok")
+        "doc_id", F.posexplode(F.expr(TOKS_SAFE)).alias("pos", "tok")
     ).select(
         "doc_id",
         "pos",
@@ -1426,7 +1419,7 @@ def token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     counts = (
-        docs.select(F.explode(F.expr(_TOKS_SAFE)).alias("w"))
+        docs.select(F.explode(F.expr(TOKS_SAFE)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1472,7 +1465,7 @@ def source_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         docs.select(
             F.coalesce("source", F.lit("unknown")).alias("source"),
-            F.explode(F.expr(_TOKS_SAFE)).alias("w"),
+            F.explode(F.expr(TOKS_SAFE)).alias("w"),
         )
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1662,7 +1655,7 @@ def token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     counts = (
-        docs.select(F.explode(F.expr(_TOKS_SAFE)).alias("w"))
+        docs.select(F.explode(F.expr(TOKS_SAFE)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1720,7 +1713,7 @@ def vocab_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" / {span}L) AS INT)"
     )
     toks = docs.select(
-        F.expr(bucket).alias("b"), F.explode(F.expr(_TOKS_SAFE)).alias("w")
+        F.expr(bucket).alias("b"), F.explode(F.expr(TOKS_SAFE)).alias("w")
     )
     per_bucket = toks.groupBy("b").agg(F.count(F.lit(1)).alias("n_toks"))
     first_seen = (
@@ -1788,7 +1781,7 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE array() END"
     )
     grams = docs.select(
-        "doc_id", F.expr(_TOKS_SAFE).alias("toks")
+        "doc_id", F.expr(TOKS_SAFE).alias("toks")
     ).select(
         "doc_id",
         F.explode(
@@ -1886,7 +1879,7 @@ def lm_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _lt(spark, sf_dir, "documents")
     toks = (
         spread(docs.select("doc_id", "text"))
-        .select("doc_id", F.expr(_TOKS).alias("toks"))
+        .select("doc_id", F.expr(TOKS).alias("toks"))
         .transform(checkpoint, eager=False)
     )
     docbig = (
@@ -1977,7 +1970,7 @@ def token_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(F.expr(_TOKS_SAFE).alias("toks")).transform(checkpoint, eager=False)
+    toks = docs.select(F.expr(TOKS_SAFE).alias("toks")).transform(checkpoint, eager=False)
     big = (
         toks.filter(F.expr("size(toks) >= 2"))
         .select(

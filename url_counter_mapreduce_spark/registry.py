@@ -674,7 +674,7 @@ _register(
 # ---- text analysis -------------------------------------------------------
 
 _TOKS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
-# NULL-safe twin of operators/text._TOKS_SAFE: both engines yield an EMPTY
+# NULL-safe twin of operators/core.TOKS_SAFE: both engines yield an EMPTY
 # token array for NULL text (Spark's size(split(NULL)) is -1, DuckDB's is
 # NULL — coalesce removes the divergence). Used by the Gopher oracles.
 _TOKS_SQL_SAFE = "list_filter(string_split(coalesce(text, ''), ' '), x -> x <> '')"
@@ -2327,7 +2327,7 @@ _register(
 # ORC round-trip.
 # --------------------------------------------------------------------------
 
-# NULL-safe DuckDB token list (twin of operators/text._TOKS_SAFE)
+# NULL-safe DuckDB token list (twin of operators/core.TOKS_SAFE)
 # alias of the NULL-safe tokenizer defined once above — a single
 # definition so a tokenizer-contract change cannot fork the oracles
 _TOKS_SAFE_SQL = _TOKS_SQL_SAFE
